@@ -48,6 +48,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from full_text_index_spark.functions.util import local_frame
 from full_text_index_spark.index import InvertedIndex
 from full_text_index_spark.query import term_locate
 from full_text_index_spark.substring import _gram_k
@@ -452,8 +453,8 @@ def approx_locate(
     out_schema = "pattern string, doc_id long, cpos long"
     parts: list[DataFrame] = []
     if pruned:
-        thr_df = spark.createDataFrame(
-            sorted(pruned.items()), "pattern string, thr int"
+        thr_df = local_frame(
+            spark, sorted(pruned.items()), "pattern string, thr int"
         )
         if index.meta.get("positions"):
             # position-restricted verify (r05): keep the gram POSITIONS the
@@ -467,8 +468,8 @@ def approx_locate(
                 (p, p[j:j + k], j)
                 for p in pruned for j in range(len(p) - k + 1)
             })
-            pg = spark.createDataFrame(
-                trips, "pattern string, gram string, slot int"
+            pg = local_frame(
+                spark, trips, "pattern string, gram string, slot int"
             )
             from full_text_index_spark.query import term_positions
 
@@ -499,7 +500,7 @@ def approx_locate(
             pairs = sorted({
                 (p, g) for p in pruned for g in set(_pattern_grams(p, k))
             })
-            pg = spark.createDataFrame(pairs, "pattern string, gram string")
+            pg = local_frame(spark, pairs, "pattern string, gram string")
             cand = (
                 term_locate(index, sorted({g for _, g in pairs}))
                 .select(F.col("term").alias("gram"), "doc_id")
@@ -544,7 +545,7 @@ def approx_locate(
                          schema=out_schema)
         )
     if not parts:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     out = parts[0]
     for part in parts[1:]:
         out = out.unionByName(part)
@@ -568,7 +569,7 @@ def approx_count(
         F.count_distinct("doc_id").alias("n_docs_matching"),
         F.count(F.lit(1)).alias("n_positions"),
     )
-    pdf = spark.createDataFrame([(p,) for p in patterns], "pattern string")
+    pdf = local_frame(spark, [(p,) for p in patterns], "pattern string")
     return pdf.join(F.broadcast(agg), "pattern", "left").select(
         "pattern",
         F.coalesce("n_docs_matching", F.lit(0)).alias("n_docs_matching"),

@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from full_text_index_spark.functions.util import local_frame
+
 CORPUS_SCHEMA = T.StructType(
     [
         T.StructField("url", T.StringType(), False),
@@ -104,7 +106,8 @@ def generate_corpus(spark: SparkSession, n_docs: int, seed: int = 42,
     from full_text_index_spark.query import _bucket_labels
 
     labels = _bucket_labels(spark, n_partitions)
-    slices = spark.createDataFrame(
+    slices = local_frame(
+        spark,
         [
             (int(bounds[i]), int(bounds[i + 1]), seed + i, labels[i])
             for i in range(n_partitions)

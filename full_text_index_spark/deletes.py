@@ -43,6 +43,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from full_text_index_spark.functions.util import local_frame
 from full_text_index_spark.index import InvertedIndex
 
 # Above this count the anti-join masks stop hinting broadcast and let the
@@ -78,8 +79,8 @@ def delete_docs(index: InvertedIndex, doc_ids) -> int:
             F.col(doc_ids.columns[0]).cast("long").alias("doc_id")
         )
     else:
-        new = spark.createDataFrame(
-            [(int(d),) for d in sorted(set(int(d) for d in doc_ids))],
+        new = local_frame(
+            spark, [(int(d),) for d in sorted(set(int(d) for d in doc_ids))],
             "doc_id long",
         )
     cur = tombstones_df(index)

@@ -10,6 +10,7 @@ reference serializes first, ssa/SSA.cpp:487-489).
 from __future__ import annotations
 
 import json
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -18,6 +19,23 @@ from full_text_index_spark.build import IndexPaths
 
 
 class InvertedIndex:
+    """A handle on one built index: a snapshot of it, not a live view.
+
+    ``open`` reads ``meta.json`` (n_docs, avgdl, k1, b, n_segments) once, and
+    each parquet table is read once per handle, on first use: ``postings()``,
+    ``term_stats()``, ``doc_stats()`` and ``table(name)`` return the same
+    DataFrame on every call, so a query call pays no schema job and no
+    reader set-up for them.  Spark lists a table's files when it is first
+    read, so a handle keeps reading what it listed then: a new generation
+    that ``streaming.append_generation`` adds reaches only a handle opened
+    after it.  That append also REPLACES ``term_stats`` and ``meta.json``,
+    so a handle that read term_stats before it fails its next term_stats
+    read (FILE_NOT_EXIST) instead of mixing two generations' statistics:
+    reopen the index after every append.  Tombstones are the exception to
+    the snapshot: ``deletes.delete_docs`` on a handle refreshes that
+    handle's tombstone caches, so its next query masks the deleted docs.
+    """
+
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.paths = IndexPaths(root)
@@ -28,26 +46,37 @@ class InvertedIndex:
         self.k1: float = self.meta["k1"]
         self.b: float = self.meta["b"]
         self.n_segments: int = self.meta["n_segments"]
+        self._tables: dict[str, DataFrame] = {}
+        self._term_stats: DataFrame | None = None
 
     @classmethod
     def open(cls, spark: SparkSession, root: str) -> "InvertedIndex":
         return cls(spark, root)
 
+    def table(self, name: str) -> DataFrame:
+        """The parquet table ``<root>/<name>``, read once per handle."""
+        df = self._tables.get(name)
+        if df is None:
+            df = self.spark.read.parquet(os.path.join(self.paths.root, name))
+            self._tables[name] = df
+        return df
+
     def postings(self) -> DataFrame:
-        return self.spark.read.parquet(self.paths.postings)
+        return self.table("postings")
 
     def term_stats(self) -> DataFrame:
         """(term, df, cf, max_tf, min_dl) + derived idf and an admissible
-        max_impact bound under the CURRENT avgdl — vocab-sized."""
-        ts = self.spark.read.parquet(self.paths.term_stats)
-        n = float(self.n_docs)
-        return ts.withColumn(
-            "idf",
-            F.log(
-                F.lit(1.0)
-                + (F.lit(n) - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-            ),
-        ).withColumn("max_impact", self.impact_bound(F.col("max_tf"), F.col("min_dl")))
+        max_impact bound under the handle's avgdl — vocab-sized."""
+        if self._term_stats is None:
+            n = float(self.n_docs)
+            self._term_stats = self.table("term_stats").withColumn(
+                "idf",
+                F.log(
+                    F.lit(1.0)
+                    + (F.lit(n) - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
+                ),
+            ).withColumn("max_impact", self.impact_bound(F.col("max_tf"), F.col("min_dl")))
+        return self._term_stats
 
     def impact_bound(self, tf_col, dl_col):
         """Admissible upper bound of tf/(tf+norm(dl)) given current avgdl
@@ -59,7 +88,7 @@ class InvertedIndex:
         )
 
     def doc_stats(self) -> DataFrame:
-        return self.spark.read.parquet(self.paths.doc_stats)
+        return self.table("doc_stats")
 
     def index_size_bytes(self) -> int:
         """`index_size` analog (reference: utils/interface.h:70) — ALL four

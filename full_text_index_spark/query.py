@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from full_text_index_spark.codec import decode_gaps, varbyte_decode
-from full_text_index_spark.functions.util import widen_partitions
+from full_text_index_spark.functions.util import local_frame, widen_partitions
 from full_text_index_spark.index import InvertedIndex
 
 # final ranking rounds scores to 6 decimals before ordering so rank identity
@@ -145,7 +145,7 @@ def _matched_postings(index: InvertedIndex, terms: list[str],
     tdf = (
         qterms.select("term").distinct()
         if qterms is not None
-        else index.spark.createDataFrame([(t,) for t in terms], "term string")
+        else local_frame(index.spark, [(t,) for t in terms], "term string")
     )
     return p.join(F.broadcast(tdf), "term")
 
@@ -215,24 +215,7 @@ def bm25_topk(
     # output and the ranking window all scale with distinct queries, not
     # batch size (real logs and the reference's genpatterns workloads
     # repeat patterns heavily).
-    set_of_qid: dict[int, tuple] = {}
-    for qid, grp in qterms_pd.groupby("qid"):
-        set_of_qid[int(qid)] = tuple(sorted(grp["term"].tolist()))
-    sid_of_set: dict[tuple, int] = {}
-    qid_sid_rows = []
-    for qid, ts in sorted(set_of_qid.items()):
-        sid = sid_of_set.setdefault(ts, len(sid_of_set))
-        qid_sid_rows.append((qid, sid))
-    idf_of_term = dict(
-        zip(qterms_pd["term"].tolist(), qterms_pd["idf"].tolist())
-    )
-    sets_pd = pd.DataFrame(
-        [
-            {"sid": sid, "term": t, "idf": idf_of_term[t]}
-            for ts, sid in sid_of_set.items()
-            for t in ts
-        ]
-    )
+    qid_sid_pd, sets_pd = _term_sets(qterms_pd)
     terms = sorted(qterms_pd["term"].unique().tolist())
     matched = _matched_postings(index, terms)
     mp = matched.withColumn("rid", F.monotonically_increasing_id()).select(
@@ -307,10 +290,39 @@ def bm25_topk(
         seg_topk.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
     )
-    qid_sid = index.spark.createDataFrame(qid_sid_rows, "qid long, sid long")
+    qid_sid = local_frame(index.spark, qid_sid_pd, "qid long, sid long")
     return ranked_sets.join(F.broadcast(qid_sid), "sid").select(
         "qid", "rank", "doc_id", "score"
     )
+
+
+def _term_sets(qterms_pd: pd.DataFrame) -> tuple[pd.DataFrame, pd.DataFrame]:
+    """Distinct term sets of a (qid, term, idf) batch with no repeated
+    (qid, term): ``(qid, sid)`` per qid, ascending, and ``(sid, term, idf)``
+    per set, terms sorted.  sids number the sets in order of first
+    appearance over ascending qid.  One sort by (qid, term) makes each qid's
+    sorted set a contiguous run, so no per-qid grouping is needed."""
+    qterms_pd = qterms_pd.sort_values(["qid", "term"], ignore_index=True)
+    qids = qterms_pd["qid"].to_numpy(dtype=np.int64)
+    first = np.ones(len(qids), dtype=bool)
+    first[1:] = qids[1:] != qids[:-1]
+    starts = np.flatnonzero(first)
+    ends = np.append(starts[1:], len(qids))
+    term_list = qterms_pd["term"].tolist()
+    set_of_qid = pd.Series(
+        [tuple(term_list[a:e]) for a, e in zip(starts, ends)], dtype=object
+    )
+    sids, distinct_sets = pd.factorize(set_of_qid)
+    qid_sid = pd.DataFrame({"qid": qids[starts], "sid": sids})
+    idf_of_term = dict(zip(term_list, qterms_pd["idf"].tolist()))
+    sets = pd.DataFrame(
+        [
+            {"sid": sid, "term": t, "idf": idf_of_term[t]}
+            for sid, ts in enumerate(distinct_sets)
+            for t in ts
+        ]
+    )
+    return qid_sid, sets
 
 
 def _decode_postings(postings: DataFrame) -> DataFrame:
@@ -899,8 +911,8 @@ def phrase_positions(index: InvertedIndex, phrases: list[str]) -> DataFrame:
         terms = tokenize_py(p)
         for i, t in enumerate(terms):
             slot_rows.append((p, i, t, len(terms)))
-    slots = spark.createDataFrame(
-        slot_rows, "phrase string, slot int, term string, n_slots int"
+    slots = local_frame(
+        spark, slot_rows, "phrase string, slot int, term string, n_slots int"
     )
     all_terms = sorted({r[2] for r in slot_rows})
     return _phrase_occurrence_counts(term_positions(index, all_terms), slots)
@@ -957,8 +969,8 @@ def phrase_prefix_search(
         for i, t in enumerate(terms[:-1]):
             fixed_rows.append((p, i, t, len(terms)))
         prefix_rows.append((p, len(terms) - 1, terms[-1], len(terms)))
-    prefixes = spark.createDataFrame(
-        prefix_rows, "phrase string, slot int, prefix string, n_slots int"
+    prefixes = local_frame(
+        spark, prefix_rows, "phrase string, slot int, prefix string, n_slots int"
     )
     exp_w = Window.partitionBy("phrase").orderBy(
         F.col("cf").desc(), F.col("term").asc()
@@ -973,8 +985,8 @@ def phrase_prefix_search(
     )
     slots = expansions
     if fixed_rows:
-        slots = spark.createDataFrame(
-            fixed_rows, "phrase string, slot int, term string, n_slots int"
+        slots = local_frame(
+            spark, fixed_rows, "phrase string, slot int, term string, n_slots int"
         ).unionByName(expansions)
     slots_pd = slots.toPandas()  # ≤ |phrases|·(m + max_expansions) rows
     all_terms = sorted(set(slots_pd["term"]))
@@ -982,8 +994,8 @@ def phrase_prefix_search(
     # prefix with no dictionary completion) and an empty pandas frame has no
     # inferable types — "no completion matches nothing" must return 0 rows,
     # not CANNOT_INFER_EMPTY_SCHEMA (ADVICE r04).
-    slots_df = spark.createDataFrame(
-        slots_pd, "phrase string, slot int, term string, n_slots int"
+    slots_df = local_frame(
+        spark, slots_pd, "phrase string, slot int, term string, n_slots int"
     )
     return _phrase_occurrence_counts(
         term_positions(index, all_terms), slots_df
@@ -1038,8 +1050,8 @@ def near_count(index: InvertedIndex,
     for a, b, _ in pairs:
         if a == b:
             raise ValueError(f"NEAR terms must be distinct (got {a!r})")
-    qdf = spark.createDataFrame(
-        sorted(set(pairs)), "term_a string, term_b string, window int"
+    qdf = local_frame(
+        spark, sorted(set(pairs)), "term_a string, term_b string, window int"
     )
     terms = sorted({t for a, b, _ in pairs for t in (a, b)})
     tp = term_positions(index, terms)
@@ -1388,8 +1400,8 @@ def ranked_snippets(
     # BLOCKS containing a hit (highlighting 10 docs of a head term costs
     # blocks-touched, not cf)
     hits_pd = bm25_topk(index, queries, k=k).toPandas()
-    hits = index.spark.createDataFrame(
-        hits_pd, "qid long, rank int, doc_id long, score double"
+    hits = local_frame(
+        index.spark, hits_pd, "qid long, rank int, doc_id long, score double"
     )
     terms = sorted({r["term"] for r in qterms.select("term").distinct().collect()})
     occ = (
@@ -1528,8 +1540,8 @@ def suggest_terms(
     rows (the reference's char-not-in-file posture).
 
     Output: (prefix, rank, term, df, cf)."""
-    pdf = index.spark.createDataFrame(
-        [(p,) for p in sorted(set(prefixes))], "prefix string"
+    pdf = local_frame(
+        index.spark, [(p,) for p in sorted(set(prefixes))], "prefix string"
     )
     cand = index.term_stats().select("term", "df", "cf").join(
         F.broadcast(pdf), F.col("term").startswith(F.col("prefix"))
@@ -1561,8 +1573,8 @@ def spellcheck_terms(
     the dictionary.  Corpus and postings are never touched.
 
     Output: (query, rank, suggestion, dist, df, cf)."""
-    qdf = index.spark.createDataFrame(
-        [(t,) for t in sorted(set(terms))], "query string"
+    qdf = local_frame(
+        index.spark, [(t,) for t in sorted(set(terms))], "query string"
     )
     ts = index.term_stats().select("term", "df", "cf")
     cand = (
@@ -1721,8 +1733,8 @@ def wildcard_term_search(index: InvertedIndex,
     exposes between docFreq() and live-doc counts between merges."""
     spark = index.spark
     patterns = list(dict.fromkeys(patterns))
-    pdf = spark.createDataFrame(
-        [(p, glob_to_regex(p)) for p in patterns], "pattern string, rx string"
+    pdf = local_frame(
+        spark, [(p, glob_to_regex(p)) for p in patterns], "pattern string, rx string"
     )
     matched = (
         index.term_stats()
@@ -1751,7 +1763,7 @@ def wildcard_term_search(index: InvertedIndex,
         .groupBy("pattern")
         .agg(F.count_distinct("doc_id").alias("n_docs_matching"))
     )
-    base = spark.createDataFrame([(p,) for p in patterns], "pattern string")
+    base = local_frame(spark, [(p,) for p in patterns], "pattern string")
     return (
         base.join(F.broadcast(dict_agg), "pattern", "left")
         .join(F.broadcast(docs_agg), "pattern", "left")
@@ -1803,7 +1815,7 @@ def phrase_search(index: InvertedIndex, corpus: DataFrame,
 
     spark = index.spark
     qrows = [(i, p, tokenize_py(p)) for i, p in enumerate(phrases)]
-    qdf = spark.createDataFrame(qrows, "qid long, phrase string, terms array<string>")
+    qdf = local_frame(spark, qrows, "qid long, phrase string, terms array<string>")
     cand = boolean_and(index, qdf.select("qid", "terms"))
 
     # overlapping-count verify in an Arrow kernel: the old column-HOF
@@ -1845,7 +1857,7 @@ def term_count(index: InvertedIndex, terms: list[str]) -> DataFrame:
     """`count` analog (reference: utils/interface.h:59): occurrences (cf) and
     matching docs (df) per term; absent terms → df=0, cf=0."""
     spark = index.spark
-    tdf = spark.createDataFrame([(t,) for t in terms], "term string")
+    tdf = local_frame(spark, [(t,) for t in terms], "term string")
     # restrict the vocab-sized stats to the probe set first (broadcast
     # semi), then broadcast the ≤|terms|-row result back for the left
     # join — without this the left-outer plans as a vocab-wide

@@ -43,6 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from full_text_index_spark.functions.util import local_frame
 from full_text_index_spark.index import InvertedIndex
 from full_text_index_spark.substring import (
     _gram_k,
@@ -368,8 +369,8 @@ def _pick_branch_literals(index: InvertedIndex,
         if len(grams) <= 256:
             ts = ts.where(F.col("term").isin(grams))
         else:
-            gdf = index.spark.createDataFrame([(g,) for g in grams],
-                                              "term string")
+            gdf = local_frame(index.spark, [(g,) for g in grams],
+                              "term string")
             ts = ts.join(F.broadcast(gdf), "term")
         cf = {r["term"]: int(r["cf"])
               for r in ts.select("term", "cf").collect()}
@@ -456,8 +457,8 @@ def regex_docs(
                 .select(F.col("pattern").alias("lit"), "doc_id")
             )
         if cand_parts:
-            pl_df = spark.createDataFrame(
-                sorted(long_pairs | short_pairs), "pattern string, lit string"
+            pl_df = local_frame(
+                spark, sorted(long_pairs | short_pairs), "pattern string, lit string"
             )
             cand = cand_parts[0]
             for extra in cand_parts[1:]:
@@ -475,8 +476,8 @@ def regex_docs(
                 .select("pattern", "doc_id")
             )
     if scanned:
-        sdf = spark.createDataFrame([(p,) for p in scanned],
-                                    "pattern string")
+        sdf = local_frame(spark, [(p,) for p in scanned],
+                          "pattern string")
         scan_docs = docs.select("doc_id", "text")
         if index is not None:
             # same delete semantics as the pruned branch (which masks via
@@ -492,7 +493,7 @@ def regex_docs(
             .select("pattern", "doc_id")
         )
     if not parts:
-        return spark.createDataFrame([], "pattern string, doc_id long")
+        return local_frame(spark, [], "pattern string, doc_id long")
     out = parts[0]
     for part in parts[1:]:
         out = out.unionByName(part)
@@ -514,7 +515,7 @@ def regex_count(
     agg = matched.groupBy("pattern").agg(
         F.count_distinct("doc_id").alias("n_docs_matching")
     )
-    pdf = spark.createDataFrame([(p,) for p in patterns], "pattern string")
+    pdf = local_frame(spark, [(p,) for p in patterns], "pattern string")
     return pdf.join(F.broadcast(agg), "pattern", "left").select(
         "pattern",
         F.coalesce("n_docs_matching", F.lit(0)).alias("n_docs_matching"),

@@ -34,6 +34,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from full_text_index_spark.functions.util import local_frame
 from full_text_index_spark.index import InvertedIndex
 
 # session-unique temp-view names: two rewriters in one session must not
@@ -126,8 +127,8 @@ class MatchRewriter:
             return phrase_search(
                 self.index, corpus, [" ".join(terms)]
             ).select(F.col("doc_id"))
-        qdf = self.spark.createDataFrame(
-            [(0, terms)], "qid long, terms array<string>"
+        qdf = local_frame(
+            self.spark, [(0, terms)], "qid long, terms array<string>"
         )
         return boolean_and(self.index, qdf).select(F.col("doc_id"))
 

@@ -57,6 +57,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from full_text_index_spark.build import IndexPaths, build_index
+from full_text_index_spark.functions.util import local_frame
 from full_text_index_spark.index import InvertedIndex
 from full_text_index_spark.query import term_positions
 
@@ -511,11 +512,11 @@ def _locate_via_all_windows(index: InvertedIndex,
                 (pid_of[p], i, p[i:i + _gram_k(index)],
                  len(p) - _gram_k(index) + 1)
             )
-    slots = spark.createDataFrame(
-        slot_rows, "pid int, slot int, term string, n_slots int"
+    slots = local_frame(
+        spark, slot_rows, "pid int, slot int, term string, n_slots int"
     )
-    pid_map = spark.createDataFrame(
-        [(i, p) for p, i in pid_of.items()], "pid int, pattern string"
+    pid_map = local_frame(
+        spark, [(i, p) for p, i in pid_of.items()], "pid int, pattern string"
     )
     grams = sorted({r[2] for r in slot_rows})
     gp = term_positions(index, grams)
@@ -779,13 +780,13 @@ def substring_locate(index: InvertedIndex, patterns: list[str],
     if len(all_grams) <= 256:
         ts = ts.where(F.col("term").isin(all_grams))
     else:  # constant-time planning for big workloads (IN-list grows linearly)
-        gdf = spark.createDataFrame([(g,) for g in all_grams], "term string")
+        gdf = local_frame(spark, [(g,) for g in all_grams], "term string")
         ts = ts.join(F.broadcast(gdf), "term")
     cf_rows = ts.select("term", "cf").collect()
     cf = {g: 0 for g in all_grams}
     cf.update({r["term"]: int(r["cf"]) for r in cf_rows})
 
-    empty = spark.createDataFrame([], "pattern string, doc_id long, cpos long")
+    empty = local_frame(spark, [], "pattern string, doc_id long, cpos long")
     # any absent window gram ⇒ the pattern cannot occur
     live = [p for p in patterns if all(cf[g] > 0 for g in windows[p])]
     if not live:
@@ -832,8 +833,8 @@ def substring_locate(index: InvertedIndex, patterns: list[str],
     if stats is not None:
         stats["plan"] = "rarest"
 
-    cand_slots_df = spark.createDataFrame(
-        [(p, cand_slot[p], windows[p][cand_slot[p]]) for p in live],
+    cand_slots_df = local_frame(
+        spark, [(p, cand_slot[p], windows[p][cand_slot[p]]) for p in live],
         "pattern string, slot int, term string",
     )
     cand_grams = sorted({windows[p][cand_slot[p]] for p in live})
@@ -858,8 +859,8 @@ def substring_locate(index: InvertedIndex, patterns: list[str],
             (p, s, windows[p][s])
             for p in with_verify for s in covers[p] if s != cand_slot[p]
         ]
-        checks_df = spark.createDataFrame(
-            check_rows, "pattern string, slot int, term string"
+        checks_df = local_frame(
+            spark, check_rows, "pattern string, slot int, term string"
         )
         nseg = int(index.meta["n_segments"])
         probes = (
@@ -887,7 +888,8 @@ def substring_locate(index: InvertedIndex, patterns: list[str],
                 cands.where(F.col("pattern").isin(with_verify)).count()
             )
         confirmed = _verify_probes(index, matched, probes, stats=stats)
-        nck = spark.createDataFrame(
+        nck = local_frame(
+            spark,
             [(p, sum(1 for s in covers[p] if s != cand_slot[p]))
              for p in with_verify],
             "pattern string, n_checks int",
@@ -945,8 +947,8 @@ def substring_count_short(index: InvertedIndex,
             f"substring_count_short handles lengths 1..{k - 1}; got {bad[0]!r}"
         )
     spark = index.spark
-    pdf = spark.createDataFrame([(p,) for p in patterns], "pattern string")
-    st = spark.read.parquet(os.path.join(index.paths.root, "short_stats"))
+    pdf = local_frame(spark, [(p,) for p in patterns], "pattern string")
+    st = index.table("short_stats")
     # a doc lives in exactly one generation, so summing per-generation df is
     # exact; cf sums trivially
     agg = (
@@ -1008,15 +1010,15 @@ def substring_locate_short(index: InvertedIndex,
     g2p = [(g, p) for g in grams for p in patterns if g.startswith(p)]
     parts = []
     if g2p:
-        gp_df = spark.createDataFrame(g2p, "term string, pattern string")
+        gp_df = local_frame(spark, g2p, "term string, pattern string")
         parts.append(
             term_positions(index, sorted({g for g, _ in g2p}))
             .join(F.broadcast(gp_df), "term")
             .select("pattern", "doc_id", F.col("tpos").alias("cpos"))
         )
     # tail occurrences: cpos = (doclen − len(tail)) + local position
-    pdf = spark.createDataFrame([(p,) for p in patterns], "pattern string")
-    tails = spark.read.parquet(os.path.join(index.paths.root, "tails"))
+    pdf = local_frame(spark, [(p,) for p in patterns], "pattern string")
+    tails = index.table("tails")
     t, pat = F.col("tail"), F.col("pattern")
     hits = F.when(
         F.length(t) >= F.length(pat),
@@ -1067,12 +1069,12 @@ def substring_candidate_docs(index: InvertedIndex,
         raise ValueError(f"substring_candidate_docs needs patterns of length >= {k}")
     pairs = sorted({(p, p[i:i + k]) for p in pats
                     for i in range(len(p) - k + 1)})
-    pg = spark.createDataFrame(pairs, "pattern string, term string")
+    pg = local_frame(spark, pairs, "pattern string, term string")
     ng_rows = {}
     for p, _ in pairs:
         ng_rows[p] = ng_rows.get(p, 0) + 1
-    ng = spark.createDataFrame(sorted(ng_rows.items()),
-                               "pattern string, n_grams long")
+    ng = local_frame(spark, sorted(ng_rows.items()),
+                     "pattern string, n_grams long")
     grams = sorted({g for _, g in pairs})
 
     def decode(iterator):
@@ -1147,8 +1149,8 @@ def substring_count(index: InvertedIndex, patterns: list[str],
     # cheap lookup paths return once the index is compacted.
     if tombstone_count(index) > 0:
         if short:
-            pdf_s = spark.createDataFrame([(p,) for p in short],
-                                          "pattern string")
+            pdf_s = local_frame(spark, [(p,) for p in short],
+                                "pattern string")
             longp = list(longp)
             parts0 = [_count_from_locate(
                 substring_locate_short(index, short), pdf_s)]
@@ -1157,8 +1159,8 @@ def substring_count(index: InvertedIndex, patterns: list[str],
         if exact_k:
             longp = exact_k + longp
         if longp:
-            pdf_l = spark.createDataFrame([(p,) for p in longp],
-                                          "pattern string")
+            pdf_l = local_frame(spark, [(p,) for p in longp],
+                                "pattern string")
             parts0.append(_count_from_locate(
                 substring_locate(index, longp, stats=stats), pdf_l))
         out = parts0[0]
@@ -1172,7 +1174,7 @@ def substring_count(index: InvertedIndex, patterns: list[str],
         # a length-k pattern IS one gram: term_stats already holds its exact
         # (df, cf) — no posting decode at all (the backward-search-count
         # analog, ssa/SSA.cpp:242-261: count is cheaper than locate)
-        pdf = spark.createDataFrame([(p,) for p in exact_k], "pattern string")
+        pdf = local_frame(spark, [(p,) for p in exact_k], "pattern string")
         ts = (
             index.term_stats().select("term", "df", "cf")
             .join(F.broadcast(pdf), F.col("term") == F.col("pattern"))
@@ -1185,7 +1187,7 @@ def substring_count(index: InvertedIndex, patterns: list[str],
             )
         )
     if longp:
-        pdf = spark.createDataFrame([(p,) for p in longp], "pattern string")
+        pdf = local_frame(spark, [(p,) for p in longp], "pattern string")
         parts.append(_count_from_locate(
             substring_locate(index, longp, stats=stats), pdf
         ))
@@ -1239,7 +1241,7 @@ def scan_substring_locate(docs: DataFrame, patterns: list[str]) -> DataFrame:
     branch of the adaptive strategy (fm/fm_search.c:417-498 analog).  One
     codegen'd pass over the text; no index required, any pattern length."""
     spark = docs.sparkSession
-    pdf = spark.createDataFrame([(p,) for p in patterns], "pattern string")
+    pdf = local_frame(spark, [(p,) for p in patterns], "pattern string")
     t, pat = F.col("text"), F.col("pattern")
     hits = F.when(
         (F.length(pat) >= 1) & (F.length(t) >= F.length(pat)),
@@ -1257,8 +1259,8 @@ def scan_substring_locate(docs: DataFrame, patterns: list[str]) -> DataFrame:
 
 def scan_substring_count(docs: DataFrame, patterns: list[str]) -> DataFrame:
     """Scan-path count with the same output contract as substring_count."""
-    pdf = docs.sparkSession.createDataFrame(
-        [(p,) for p in patterns], "pattern string"
+    pdf = local_frame(
+        docs.sparkSession, [(p,) for p in patterns], "pattern string"
     )
     return _count_from_locate(scan_substring_locate(docs, patterns), pdf)
 
@@ -1353,11 +1355,11 @@ def substring_locate_ci(
             for o in offs:
                 for v in _case_variants(p[o:o + k]):
                     slot_rows.append((p, o, v))
-        slots = spark.createDataFrame(
-            slot_rows, "pat string, off int, gram string"
+        slots = local_frame(
+            spark, slot_rows, "pat string, off int, gram string"
         )
-        meta = spark.createDataFrame(
-            meta_rows, "pat string, n_slots int, plen int, lpat string"
+        meta = local_frame(
+            spark, meta_rows, "pat string, n_slots int, plen int, lpat string"
         )
         grams = sorted({g for _, _, g in slot_rows})
         hits = substring_locate(index, grams).select(
@@ -1384,8 +1386,8 @@ def substring_locate_ci(
     if short_pats:
         var_rows = sorted({(p, v) for p in short_pats
                            for v in _case_variants(p)})
-        vmap = spark.createDataFrame(
-            var_rows, "pattern string, variant string"
+        vmap = local_frame(
+            spark, var_rows, "pattern string, variant string"
         )
         variants = sorted({v for _, v in var_rows})
         # Semi-join against `docs` so a caller passing a filtered subset
@@ -1415,8 +1417,8 @@ def substring_locate_ci(
                                                   for p in scan_pats}))
             .select(F.col("pattern").alias("lpat"), "doc_id", "cpos")
             .join(
-                F.broadcast(spark.createDataFrame(
-                    [(p, p.lower()) for p in scan_pats],
+                F.broadcast(local_frame(
+                    spark, [(p, p.lower()) for p in scan_pats],
                     "pattern string, lpat string",
                 )),
                 "lpat",
@@ -1425,7 +1427,7 @@ def substring_locate_ci(
         )
         parts.append(scan_part)
     if not parts:
-        return spark.createDataFrame([], "pattern string, doc_id long, cpos long")
+        return local_frame(spark, [], "pattern string, doc_id long, cpos long")
     out = parts[0]
     for part in parts[1:]:
         out = out.unionByName(part)
@@ -1438,8 +1440,8 @@ def substring_count_ci(
     patterns: list[str],
 ) -> DataFrame:
     """Case-insensitive count with the substring_count output contract."""
-    pdf = docs.sparkSession.createDataFrame(
-        [(p,) for p in dict.fromkeys(patterns)], "pattern string"
+    pdf = local_frame(
+        docs.sparkSession, [(p,) for p in dict.fromkeys(patterns)], "pattern string"
     )
     return _count_from_locate(
         substring_locate_ci(index, docs, patterns), pdf

@@ -59,6 +59,8 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from full_text_index_spark.functions.util import local_frame
+
 # ---------------------------------------------------------------------------
 # file formats (byte-exact)
 # ---------------------------------------------------------------------------
@@ -304,8 +306,8 @@ def doc_offsets(docs: DataFrame, unit: str = "chars") -> DataFrame:
     for r in sorted(totals, key=lambda r: r["bucket"]):
         prefix[r["bucket"]] = acc
         acc += r["tot"]
-    pre = spark.createDataFrame(
-        [(int(b), int(p)) for b, p in prefix.items()], "bucket long, pre long"
+    pre = local_frame(
+        spark, [(int(b), int(p)) for b, p in prefix.items()], "bucket long, pre long"
     )
     w = (
         Window.partitionBy("bucket")
@@ -341,8 +343,8 @@ def intervals_to_docs(
     comparisons worst case but pruned by AQE; for huge workloads use a
     bucketed join on from/width instead."""
     spark = docs.sparkSession
-    ivl = spark.createDataFrame(
-        [(i, a, b) for i, (a, b) in enumerate(intervals)],
+    ivl = local_frame(
+        spark, [(i, a, b) for i, (a, b) in enumerate(intervals)],
         "ivl_id long, from_char long, to_char long",
     )
     offs = doc_offsets(docs, unit=unit)

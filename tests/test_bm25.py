@@ -212,3 +212,39 @@ def test_bm25_never_broadcasts_the_dictionary(spark, tiny_index):
             # (i.e. it is already semi-joined down to query-term rows)
             if "term_stats" in sub:
                 assert "ExistingRDD" in sub, sub
+
+
+def _term_sets_loop(qterms_pd):
+    """The per-qid loop bm25_topk's term-set dedup replaced — the reference
+    for query._term_sets."""
+    set_of_qid = {}
+    for qid, grp in qterms_pd.groupby("qid"):
+        set_of_qid[int(qid)] = tuple(sorted(grp["term"].tolist()))
+    sid_of_set, qid_sid_rows = {}, []
+    for qid, ts in sorted(set_of_qid.items()):
+        qid_sid_rows.append((qid, sid_of_set.setdefault(ts, len(sid_of_set))))
+    idf_of_term = dict(zip(qterms_pd["term"].tolist(), qterms_pd["idf"].tolist()))
+    sets = pd.DataFrame([{"sid": sid, "term": t, "idf": idf_of_term[t]}
+                         for ts, sid in sid_of_set.items() for t in ts])
+    return qid_sid_rows, sets
+
+
+@pytest.mark.parametrize("n_queries", [0, 1, 500])
+def test_term_sets_match_the_per_qid_loop(n_queries):
+    from full_text_index_spark.query import _term_sets
+
+    rng = np.random.default_rng(n_queries)
+    vocab = [f"t{i:03d}" for i in range(60)]
+    rows = []
+    for qid in rng.permutation(n_queries):
+        # a small head vocabulary makes term sets repeat across qids
+        pool = vocab[:6] if qid % 2 else vocab
+        for t in set(rng.choice(pool, int(rng.integers(1, 5)))):
+            rows.append((int(qid) * 3, t, 1.0 + int(t[1:]) / 7))
+    qterms_pd = pd.DataFrame(rows, columns=["qid", "term", "idf"])
+    want_qid_sid, want_sets = _term_sets_loop(qterms_pd)
+    qid_sid, sets = _term_sets(qterms_pd)
+    assert list(qid_sid.itertuples(index=False, name=None)) == want_qid_sid
+    assert sets.equals(want_sets)
+    if n_queries > 1:
+        assert qid_sid["sid"].nunique() < len(qid_sid)
