@@ -33,7 +33,7 @@ from full_text_index_spark.functions import textstats as TS  # noqa: E402
 from full_text_index_spark import streaming as ST  # noqa: E402
 from full_text_index_spark.index import InvertedIndex  # noqa: E402
 from full_text_index_spark.query import bm25_topk  # noqa: E402
-from full_text_index_spark.session import get_spark  # noqa: E402
+from full_text_index_spark.session import DEFAULT_CPUS, get_spark  # noqa: E402
 
 N_BM25_QUERIES = int(os.environ.get("SPARK_GRAFT_NQ", "220"))  # distinct 1-3 term queries
 
@@ -67,7 +67,7 @@ def _query_batch(spark, docs, n=None):
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = DEFAULT_CPUS
     # SPARK_GRAFT_CORPUS_DIR: an (url, text, …) parquet corpus to bench the
     # engine on instead of the sf documents table — used by scaling_bench,
     # which needs a compute-dominated corpus (FIXTURES.md bench tier) for a

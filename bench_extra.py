@@ -39,7 +39,7 @@ from full_text_index_spark.functions import textstats as TS  # noqa: E402
 from full_text_index_spark import streaming as ST  # noqa: E402
 from full_text_index_spark.index import InvertedIndex  # noqa: E402
 from full_text_index_spark.query import bm25_topk  # noqa: E402
-from full_text_index_spark.session import get_spark  # noqa: E402
+from full_text_index_spark.session import DEFAULT_CPUS, get_spark  # noqa: E402
 
 
 def main() -> None:
@@ -48,7 +48,7 @@ def main() -> None:
         print("usage: python bench_extra.py <op> [...]", file=sys.stderr)
         raise SystemExit(2)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = DEFAULT_CPUS
     op_reps = int(os.environ.get("SPARK_GRAFT_OP_REPS", "2"))
     spark = get_spark("fti-bench-extra", cpus=cpus, shuffle_partitions=cpus)
 

@@ -56,6 +56,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from full_text_index_spark.codec import varbyte_encode
 from full_text_index_spark.corpus import doc_id_from_url
+from full_text_index_spark.functions.util import kernel_tasks, route
 from full_text_index_spark.tokenizer import TOKEN_SPLIT_REGEX, tokens_col
 
 K1_DEFAULT = 1.2
@@ -609,6 +610,7 @@ def build_index(
     pack_cols = ["segment", "term", "doc_id", "doclen"] + (
         ["tpos"] if positions else []
     )
+    n_buckets = kernel_tasks(spark, n_segments)
     groups: list[list[int]] = [
         [s for s in todo_all if s % segment_groups == g]
         for g in range(segment_groups)
@@ -620,38 +622,21 @@ def build_index(
         scope = docs_dl if len(todo) == n_segments else docs_dl.where(
             F.col("segment").isin([int(s) for s in todo])
         )
-        # probed SEGMENT labels (query._bucket_labels — plain hash on
-        # n_segments keys leaves ~1/e slots idle)
-        from full_text_index_spark.query import _bucket_labels
-
-        dp = max(spark.sparkContext.defaultParallelism, 1)
-        n_buckets = int(min(n_segments, max(2 * dp, 8)))
-        labels = _bucket_labels(spark, n_buckets)
-        label_arr = F.array(*[F.lit(v).cast("long") for v in labels])
-        route = F.element_at(
-            label_arr,
-            (F.pmod(F.col("segment"), F.lit(n_buckets)) + 1).cast("int"),
-        )
         if positions:
-            # positional builds route the ONE wide shuffle by segment
-            # label: each pack task holds whole segments (the sorted
-            # occurrence rows are themselves the position stream — there
-            # is no aggregation to lose), and the write below emits
-            # n_segments well-sized files.
-            pack_in = (
-                stream(scope)
-                .select(*pack_cols)
-                .withColumn("pkey", route)
-                .repartition(n_buckets, "pkey")
-                .drop("pkey")
-                .sortWithinPartitions(*sort_keys)
-            )
+            # positional builds route the ONE wide shuffle by segment:
+            # each pack task holds whole segments (the sorted occurrence
+            # rows are themselves the position stream — there is no
+            # aggregation to lose), and the write below emits n_segments
+            # well-sized files.
+            pack_in = route(
+                stream(scope).select(*pack_cols), "segment", n_buckets
+            ).sortWithinPartitions(*sort_keys)
         else:
             # token builds keep the r05 agg-first shape: raw occurrences
             # cross the ONE (segment, term) exchange, tf aggregates
             # JVM-side behind it (subset-partitioning reuse — no second
             # exchange), and the Arrow hop ships one row per POSTING.
-            # This was briefly replaced by label-routing the raw rows with
+            # This was briefly replaced by routing the raw rows with
             # in-packer aggregation, which was ~8% faster at local[1] but
             # ~10% SLOWER at local[4] (1-vs-4 A/B on the 240k bench
             # corpus): the agg reduces bytes BEFORE the sort and the
@@ -676,18 +661,14 @@ def build_index(
             .withColumn("generation", F.lit(0))
         )
         if not positions:
-            # file-count discipline WITHOUT giving up the agg: repartition
-            # the PACKED rows (tiny — the compressed index itself) by
-            # segment label so the partitionBy(generation, segment) write
-            # emits n_segments files instead of sp × n_segments small
-            # ones (guide §6; the write was ~3.9 s of the 5.1 s token
-            # pack phase at sp=32).  The positional branch is already
+            # file-count discipline WITHOUT giving up the agg: route the
+            # PACKED rows (tiny — the compressed index itself) by segment
+            # so the partitionBy(generation, segment) write emits
+            # n_segments files instead of sp × n_segments small ones
+            # (guide §6; the write was ~3.9 s of the 5.1 s token pack
+            # phase at sp=32).  The positional branch is already
             # segment-aligned from its own routing.
-            packed = (
-                packed.withColumn("pkey", route)
-                .repartition(n_buckets, "pkey")
-                .drop("pkey")
-            )
+            packed = route(packed, "segment", n_buckets)
         packed.write.mode("overwrite").partitionBy("generation", "segment").parquet(
             paths.postings
         )

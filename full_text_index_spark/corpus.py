@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from full_text_index_spark.functions.util import local_frame
+from full_text_index_spark.functions.util import local_frame, route
 
 CORPUS_SCHEMA = T.StructType(
     [
@@ -98,22 +98,14 @@ def generate_corpus(spark: SparkSession, n_docs: int, seed: int = 42,
     """Distributed deterministic corpus: each partition generates its slice
     with a derived seed — no driver-side materialization, scales linearly."""
     bounds = np.linspace(0, n_docs, n_partitions + 1).astype(np.int64)
-    # probed partition labels (query._bucket_labels): a plain
-    # repartition(n, 'lo') hash-collides slice keys (~1/e of partitions
-    # empty, some tasks generating 2-3 slices serially — the documented
-    # small-pandas-stage trap); each slice gets a label that provably maps
-    # to its own partition, so generation runs at full width
-    from full_text_index_spark.query import _bucket_labels
-
-    labels = _bucket_labels(spark, n_partitions)
-    slices = local_frame(
-        spark,
-        [
-            (int(bounds[i]), int(bounds[i + 1]), seed + i, labels[i])
-            for i in range(n_partitions)
-        ],
-        "lo long, hi long, part_seed long, pkey long",
-    ).repartition(n_partitions, "pkey")
+    # one slice per partition (route on the slice index): each task
+    # generates exactly one slice, so generation runs at full width
+    rows = [(i, int(bounds[i]), int(bounds[i + 1]), seed + i)
+            for i in range(n_partitions)]
+    slices = route(
+        local_frame(spark, rows, "i long, lo long, hi long, part_seed long"),
+        "i", n_partitions,
+    )
 
     def gen(iterator):
         for pdf in iterator:

@@ -6,7 +6,8 @@ from functools import lru_cache
 
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import _parse_datatype_string
 
@@ -59,3 +60,27 @@ def widen_partitions(df: DataFrame, mult: int = 2) -> DataFrame:
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
+
+
+def route(df: DataFrame, key: str | Column, n: int) -> DataFrame:
+    """Repartition ``df`` into ``n`` partitions, row to partition
+    ``pmod(key, n)``: bucket b lands in partition b, every bucket in its own.
+
+    Kernels that need whole segments (or whole (term, segment) groups) in
+    one task route on a segment-derived ``key`` (a column name or
+    expression of any integral type).  The exchange plans as
+    ``REPARTITION_BY_NUM``, which AQE never coalesces — a hash
+    ``groupBy``/``repartition`` would merge small kernel partitions into 1-2
+    serial tasks, or collide buckets and leave ~1/e of the slots idle.  The
+    ``pmod`` runs before the cast because ``repartitionById`` accepts only
+    INT ids: a long segment id or a negative ``F.hash`` stays exact."""
+    return df.repartitionById(n, F.pmod(key, F.lit(n)).cast("int"))
+
+
+def kernel_tasks(spark: SparkSession, n_segments: int) -> int:
+    """Task count for a segment-routed kernel stage: ~2 tasks per core (at
+    least 8), never more than the segments.  Each task pays the ~100 ms
+    Python-worker constant, so one task per segment wastes it, and ~2 per
+    core still keeps stragglers bounded."""
+    dp = max(spark.sparkContext.defaultParallelism, 1)
+    return int(min(n_segments, max(2 * dp, 8)))

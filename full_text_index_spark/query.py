@@ -34,7 +34,12 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from full_text_index_spark.codec import decode_gaps, varbyte_decode
-from full_text_index_spark.functions.util import local_frame, widen_partitions
+from full_text_index_spark.functions.util import (
+    kernel_tasks,
+    local_frame,
+    route,
+    widen_partitions,
+)
 from full_text_index_spark.index import InvertedIndex
 
 # final ranking rounds scores to 6 decimals before ordering so rank identity
@@ -46,35 +51,6 @@ _EPS = 10.0 ** (-RANK_ROUND)
 # workload, small by construction); this cap turns an accidental 10^7-row
 # "query" table into a fast, explicit error instead of a driver OOM
 MAX_QUERY_BATCH_ROWS = 1_000_000
-
-
-# kernel-task routing labels: for partition count n, integer label l_b with
-# pmod(hash(l_b), n) == b for every b in 0..n-1, so each kernel bucket lands
-# in its OWN shuffle partition.  F.hash IS HashPartitioning's Murmur3 (seed
-# 42), so the probe is exact.  Two failure modes this kills (measured r02,
-# both asymmetric — they only bite at high parallelism, so they destroyed
-# N→4N scaling): AQE coalescing merges small kernel partitions into 1-2
-# tasks (serializing all kernel CPU; explicit repartition-by-num is
-# AQE-exempt), and plain hash(bucket) % n collides (~1/e of slots idle).
-# Labels depend only on n — cached per process.
-_PARTITION_LABELS: dict[int, list[int]] = {}
-
-
-def _bucket_labels(spark, n: int) -> list[int]:
-    if n not in _PARTITION_LABELS:
-        found: dict[int, int] = {}
-        lo = 0
-        while len(found) < n:
-            rows = (
-                spark.range(lo, lo + 64 * n)
-                .select("id", F.pmod(F.hash(F.col("id")), F.lit(n)).alias("p"))
-                .collect()
-            )
-            for r in rows:
-                found.setdefault(int(r["p"]), int(r["id"]))
-            lo += 64 * n
-        _PARTITION_LABELS[n] = [found[b] for b in range(n)]
-    return _PARTITION_LABELS[n]
 
 
 def _whole_partition(kernel):
@@ -252,30 +228,12 @@ def bm25_topk(
         k1=k1, b=b, avgdl=avgdl, k=k, sets_pd=sets_pd,
         prune_threshold=prune_threshold,
     )
-    # task granularity tracks CLUSTER PARALLELISM, not segment count: each
-    # kernel task takes several whole segments (docs live in exactly one
-    # segment, so any segment-derived bucket keeps a doc's contributions
-    # together and the kernel's math is unchanged).  32 tiny tasks pay the
-    # per-task worker/Arrow constant 32×; ~2 tasks per core amortizes it
-    # while keeping stragglers bounded — the same rule of thumb a real
-    # cluster uses for shuffle partition sizing.
-    dp = max(index.spark.sparkContext.defaultParallelism, 1)
-    n_buckets = int(min(index.meta["n_segments"], max(2 * dp, 8)))
-    labels = _bucket_labels(index.spark, n_buckets)
-    # labels MUST be LongType: the probe hashes spark.range ids (int64), and
-    # Murmur3 hashes int32 and int64 differently — an IntegerType literal
-    # here silently reintroduces the ~1/e routing collisions the probe was
-    # built to eliminate (ADVICE r02, verified: int literals → 5/8 partitions
-    # used at n=8; long literals → 8/8)
-    label_arr = F.array(*[F.lit(v).cast("long") for v in labels])
-    route = F.element_at(
-        label_arr, (F.pmod(F.col("segment"), F.lit(n_buckets)) + 1).cast("int")
-    )
-
+    # each kernel task takes several whole segments (docs live in exactly
+    # one segment, so a segment-routed bucket keeps a doc's contributions
+    # together and the kernel's math is unchanged)
+    n_buckets = kernel_tasks(index.spark, index.meta["n_segments"])
     seg_topk = (
-        mp.withColumn("pkey", route)
-        .repartition(n_buckets, "pkey")
-        .drop("pkey")
+        route(mp, "segment", n_buckets)
         .mapInPandas(
             _whole_partition(kernel),
             schema="sid long, doc_id long, score double",

@@ -12,7 +12,26 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+DEFAULT_CPUS = int(
+    os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+)
+
+# the directory that holds the ``full_text_index_spark`` package
+PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _export_worker_path() -> None:
+    """Put ``PACKAGE_PARENT`` first on ``PYTHONPATH`` unless it is there.
+
+    The Python workers that run the engine's pandas kernels inherit the
+    JVM's environment, and the JVM inherits this process's; without the
+    export a script run outside the repository (with the package on
+    ``sys.path`` only) fails in every kernel task with ``ModuleNotFoundError:
+    No module named 'full_text_index_spark'``.  Takes effect for a JVM
+    started after the call."""
+    paths = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if PACKAGE_PARENT not in paths:
+        os.environ["PYTHONPATH"] = os.pathsep.join([PACKAGE_PARENT, *paths])
 
 
 def default_driver_memory() -> str:
@@ -40,6 +59,7 @@ def get_spark(
     """
     cpus = cpus or DEFAULT_CPUS
     shuffle_partitions = shuffle_partitions or max(cpus, 8)
+    _export_worker_path()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

@@ -41,6 +41,7 @@ from full_text_index_spark.build import (
     prepare_corpus,
     token_stream,
 )
+from full_text_index_spark.functions.util import kernel_tasks, route
 from full_text_index_spark.tokenizer import TOKEN_SPLIT_REGEX
 
 GEN_SHIFT = 44  # doc_id = (generation << 44) | dense-id-within-generation
@@ -131,31 +132,17 @@ def append_generation(
     pack_cols = ["segment", "term", "doc_id", "doclen"] + (
         ["tpos"] if positions else []
     )
-    # mirrors build_index: positional appends label-route the one wide
-    # shuffle (whole segments per pack task); token appends keep the
-    # agg-first shape behind the (segment, term) exchange and
-    # label-repartition only the PACKED rows — n_segments output files
-    # either way (guide §6) without giving up the byte-reducing agg
-    from full_text_index_spark.query import _bucket_labels
-
+    # mirrors build_index: positional appends route the one wide shuffle
+    # by segment (whole segments per pack task); token appends keep the
+    # agg-first shape behind the (segment, term) exchange and route only
+    # the PACKED rows — n_segments output files either way (guide §6)
+    # without giving up the byte-reducing agg
     sp = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    dp = max(spark.sparkContext.defaultParallelism, 1)
-    n_buckets = int(min(n_segments, max(2 * dp, 8)))
-    labels = _bucket_labels(spark, n_buckets)
-    label_arr = F.array(*[F.lit(v).cast("long") for v in labels])
-    route = F.element_at(
-        label_arr,
-        (F.pmod(F.col("segment"), F.lit(n_buckets)) + 1).cast("int"),
-    )
+    n_buckets = kernel_tasks(spark, n_segments)
     if positions:
-        pack_in = (
-            stream(docs_dl)
-            .select(*pack_cols)
-            .withColumn("pkey", route)
-            .repartition(n_buckets, "pkey")
-            .drop("pkey")
-            .sortWithinPartitions(*sort_keys)
-        )
+        pack_in = route(
+            stream(docs_dl).select(*pack_cols), "segment", n_buckets
+        ).sortWithinPartitions(*sort_keys)
     else:
         shuffled = (
             stream(docs_dl)
@@ -176,11 +163,7 @@ def append_generation(
         .withColumn("generation", F.lit(generation))
     )
     if not positions:
-        packed = (
-            packed.withColumn("pkey", route)
-            .repartition(n_buckets, "pkey")
-            .drop("pkey")
-        )
+        packed = route(packed, "segment", n_buckets)
     packed.write.mode("overwrite").partitionBy("generation", "segment").parquet(
         paths.postings
     )

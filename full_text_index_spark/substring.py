@@ -57,7 +57,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from full_text_index_spark.build import IndexPaths, build_index
-from full_text_index_spark.functions.util import local_frame
+from full_text_index_spark.functions.util import kernel_tasks, local_frame, route
 from full_text_index_spark.index import InvertedIndex
 from full_text_index_spark.query import term_positions
 
@@ -205,7 +205,7 @@ def _make_short_stats_kernel(k: int):
       posting rows: qlen=0, term=the k-gram, cf=cf_seg, doc_blob set
       tail rows:    qlen=q,  term=the q-gram, cf=occurrences, doc_id set
     The caller MUST route all rows of one segment into one partition
-    (repartition on a probed segment label)."""
+    (functions.util.route on the segment)."""
     import pandas as pd
 
     from full_text_index_spark.codec import decode_gaps
@@ -295,13 +295,11 @@ def build_short_stats(
     pass (segments partition the doc space, so per-segment distinct-doc
     counts SUM to the global df; cf reads straight off cf_seg — the tf
     stream is never decoded), and the only shuffles left are the
-    segment-label routing of the posting rows (~index bytes) and a final
+    segment routing of the posting rows (~index bytes) and a final
     gram-sized aggregate.  The r05 path shipped ~10^7 doc-granular
     (qlen, gram, doc_id) rows through a global count_distinct — 19.4 s of
     the 36 s gram build at 50k docs; this one measures ~2 s."""
     import json as _json
-
-    from full_text_index_spark.query import _bucket_labels
 
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     with open(os.path.join(out_dir, "meta.json")) as fh:
@@ -342,25 +340,10 @@ def build_short_stats(
             )
         )
         allp = allp.unionByName(tail_q)
-    # route ALL rows of a segment to one partition (probed labels — a plain
-    # hash-repartition on 32 distinct keys leaves ~1/e of the slots empty,
-    # see query._bucket_labels); the kernel's df dedup needs segment-complete
-    # partitions, and multiple segments sharing a partition is fine
-    dp = max(spark.sparkContext.defaultParallelism, 1)
-    n_buckets = int(min(n_segments, max(2 * dp, 8)))
-    labels = _bucket_labels(spark, n_buckets)
-    label_arr = F.array(*[F.lit(v).cast("long") for v in labels])
-    routed = (
-        allp.withColumn(
-            "pkey",
-            F.element_at(
-                label_arr,
-                (F.pmod(F.col("segment"), F.lit(n_buckets)) + 1).cast("int"),
-            ),
-        )
-        .repartition(n_buckets, "pkey")
-        .drop("pkey")
-    )
+    # route ALL rows of a segment to one partition: the kernel's df dedup
+    # needs segment-complete partitions, and multiple segments sharing a
+    # partition is fine
+    routed = route(allp, "segment", kernel_tasks(spark, n_segments))
     (
         routed.mapInPandas(
             _make_short_stats_kernel(k),
@@ -564,8 +547,8 @@ def _greedy_cover(windows: list[str], cf: dict[str, int],
 
 def _make_dist_verify_kernel():
     """mapInPandas kernel over the UNION of verify-gram posting rows and
-    probe rows (both routed to the same shuffle partition by a probed
-    (term, segment) label): for each (term, segment) group, decode ONLY the
+    probe rows (both routed to the same shuffle partition by their
+    (term, segment) hash): for each (term, segment) group, decode ONLY the
     posting blocks containing a probed doc (block directory → searchsorted,
     the same skip machinery the BM25 MaxScore path uses) and confirm
     (doc, pos) membership.  Emits one row per confirmed check, plus one
@@ -675,21 +658,14 @@ def _verify_probes(index: InvertedIndex, matched: DataFrame,
                    probes: DataFrame, stats: dict | None = None) -> DataFrame:
     """Distributed candidate verification: probe rows (term, segment,
     doc_id, pos, pattern, cpos, slot) and the verify grams' posting rows are
-    UNIONed and routed to the same shuffle partition by a probe-verified
-    (term, segment) label (F.hash IS HashPartitioning's Murmur3, and the
-    explicit repartition-by-num is AQE-exempt — the two properties that keep
-    kernel partitions collision-free and un-coalesced, see
-    query._bucket_labels).  Each posting blob ships at most once — probes
-    shuffle TO the postings, never the reverse — so verify traffic scales
-    with candidate count + touched index slice, never their product.
+    UNIONed and routed to the same shuffle partition by their
+    (term, segment) hash (functions.util.route).  Each posting blob ships
+    at most once — probes shuffle TO the postings, never the reverse — so
+    verify traffic scales with candidate count + touched index slice,
+    never their product.
     Returns the confirmed probe rows (pattern, doc_id, cpos, slot)."""
-    from full_text_index_spark.query import _bucket_labels
-
     spark = index.spark
-    dp = max(spark.sparkContext.defaultParallelism, 1)
-    n_buckets = max(2 * dp, 8)
-    labels = _bucket_labels(spark, n_buckets)
-    label_arr = F.array(*[F.lit(v).cast("long") for v in labels])
+    n_buckets = max(2 * spark.sparkContext.defaultParallelism, 8)
     null_bin = F.lit(None).cast("binary")
     post = matched.select(
         F.lit(0).alias("kind"), "term", "segment",
@@ -711,13 +687,7 @@ def _verify_probes(index: InvertedIndex, matched: DataFrame,
         F.lit(None).cast("array<int>").alias("block_pos_off"),
         "doc_id", "pos", "pattern", "cpos", "slot",
     )
-    bucket = F.pmod(F.hash(F.col("term"), F.col("segment")), F.lit(n_buckets))
-    mixed = (
-        post.unionByName(prob)
-        .withColumn("pkey", F.element_at(label_arr, (bucket + 1).cast("int")))
-        .repartition(n_buckets, "pkey")
-        .drop("pkey")
-    )
+    mixed = route(post.unionByName(prob), F.hash("term", "segment"), n_buckets)
     raw = mixed.mapInPandas(
         _make_dist_verify_kernel(),
         schema="pattern string, doc_id long, cpos long, slot long",

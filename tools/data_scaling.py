@@ -25,6 +25,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.join(REPO, "tools"))
 
+from full_text_index_spark.session import DEFAULT_CPUS  # noqa: E402
 from scaling_bench import ensure_corpus, run_bench  # noqa: E402
 
 SIDECAR = os.path.join(REPO, "BENCH", "data_scaling_runs.jsonl")
@@ -35,7 +36,7 @@ def main() -> None:
     factor = int(sys.argv[2]) if len(sys.argv) > 2 else 4
     reps = int(sys.argv[3]) if len(sys.argv) > 3 else 2
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = DEFAULT_CPUS
     sizes = [n_lo, n_lo * factor]
     corpora = {n: ensure_corpus(n) for n in sizes}
     runs: list[dict] = []

@@ -194,10 +194,10 @@ shared host, not of the engine's plan.
 **Engine-side serialization eliminated (r02)**: the asymmetric overheads
 that only bite at high parallelism were measured and removed — AQE was
 coalescing the small BM25 kernel partitions into 1-2 tasks (pure-CPU probe
-kernel: 0.98 effective concurrency at local[4]; now routed through an
-AQE-exempt explicit repartition with probe-verified bucket→partition
-labels), the build's aggregate+persist+second-shuffle pipeline was replaced
-by ONE wide token shuffle with JVM-side tf aggregation behind the same
+kernel: 0.98 effective concurrency at local[4]; now routed through
+`functions.util.route`, an AQE-exempt `repartitionById` that sends bucket
+b to partition b), the build's aggregate+persist+second-shuffle pipeline
+was replaced by ONE wide token shuffle with JVM-side tf aggregation behind the same
 exchange, and multi-thousand-term IN-list planning (seconds of serial
 driver time per batch) now cuts over to a broadcast semi-join.  Control
 experiments isolating engine vs host limits: `tools/scaling_controls.py`

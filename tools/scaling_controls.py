@@ -59,25 +59,15 @@ _BURN_SECONDS = 2.0
 
 def _spark_burn(cpus: int) -> float:
     """Effective concurrency of 2*cpus register-bound kernel tasks routed
-    the same way the BM25 kernel routes (explicit repartition + labels)."""
+    the same way the BM25 kernel routes (functions.util.route)."""
     import pandas as pd
-    from pyspark.sql import functions as F
 
-    from full_text_index_spark.query import _bucket_labels
+    from full_text_index_spark.functions.util import route
     from full_text_index_spark.session import get_spark
 
     spark = get_spark(f"ctl-burn-{cpus}", cpus=cpus, shuffle_partitions=cpus)
     n_tasks = 2 * cpus
-    labels = _bucket_labels(spark, n_tasks)
-    # cast to long: the probe hashed int64 range ids; an int32 literal would
-    # hash differently and silently collide (ADVICE r02)
-    df = spark.range(0, n_tasks).select(
-        F.col("id"),
-        F.element_at(
-            F.array(*[F.lit(v).cast("long") for v in labels]),
-            (F.pmod(F.col("id"), F.lit(n_tasks)) + 1).cast("int"),
-        ).alias("pkey"),
-    ).repartition(n_tasks, "pkey")
+    df = route(spark.range(0, n_tasks), "id", n_tasks)
 
     def burn(batches):
         c0 = time.process_time()

@@ -22,10 +22,10 @@ def main() -> int:
     only = set(sys.argv[3:])
 
     import __spark_entry__ as entrymod
-    from full_text_index_spark.session import get_spark
+    from full_text_index_spark.session import DEFAULT_CPUS, get_spark
 
-    spark = get_spark("time-queries", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
-                      shuffle_partitions=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark("time-queries", cpus=DEFAULT_CPUS,
+                      shuffle_partitions=DEFAULT_CPUS)
     out: dict[str, float] = {}
     for name, fn in entrymod.queries().items():
         if only and name not in only:
