@@ -54,7 +54,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from full_text_index_spark.codec import varbyte_encode
+from full_text_index_spark.codec import varbyte_encode, varbyte_sizes
 from full_text_index_spark.corpus import doc_id_from_url
 from full_text_index_spark.functions.util import kernel_tasks, route
 from full_text_index_spark.tokenizer import TOKEN_SPLIT_REGEX, tokens_col
@@ -109,14 +109,6 @@ class IndexPaths:
 
     def manifest(self, segment: int) -> str:
         return os.path.join(self.manifest_dir, f"segment_{segment:05d}.json")
-
-
-def _varbyte_sizes(values: np.ndarray) -> np.ndarray:
-    v = np.asarray(values).astype(np.uint64, copy=False)
-    nb = np.ones(len(v), np.int64)
-    for k in range(1, 10):
-        nb += (v >= (np.uint64(1) << np.uint64(7 * k))).astype(np.int64)
-    return nb
 
 
 def _pack_runs(pdf: pd.DataFrame, block_size: int,
@@ -193,7 +185,7 @@ def _pack_runs(pdf: pd.DataFrame, block_size: int,
         if pg.min() <= 0:
             raise ValueError("positions must be strictly increasing, >= 1")
         pos_buf = np.frombuffer(varbyte_encode(pg), dtype=np.uint8)
-        p_sizes = _varbyte_sizes(pg)
+        p_sizes = varbyte_sizes(pg)
         flat_end = np.cumsum(p_sizes)
         # per-POSTING byte extents of its position group (tf >= 1 always)
         post_end = flat_end[p_ends - 1]
@@ -204,9 +196,9 @@ def _pack_runs(pdf: pd.DataFrame, block_size: int,
     dl_buf = np.frombuffer(varbyte_encode(dl), dtype=np.uint8)
     # size each stream once (like p_sizes above): these vector scans run in
     # the packer on the build's single wide shuffle — the hot path
-    doc_sizes = _varbyte_sizes(gaps)
-    tf_sizes = _varbyte_sizes(tf)
-    dl_sizes = _varbyte_sizes(dl)
+    doc_sizes = varbyte_sizes(gaps)
+    tf_sizes = varbyte_sizes(tf)
+    dl_sizes = varbyte_sizes(dl)
     doc_end = np.cumsum(doc_sizes)
     tf_end = np.cumsum(tf_sizes)
     dl_end = np.cumsum(dl_sizes)

@@ -43,7 +43,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from full_text_index_spark.functions.util import local_frame
+from full_text_index_spark.functions.util import local_frame, route
 from full_text_index_spark.index import InvertedIndex
 
 # Above this count the anti-join masks stop hinting broadcast and let the
@@ -166,15 +166,24 @@ def tombstone_segment_blobs(index: InvertedIndex) -> DataFrame | None:
     if tdf is None:
         index._tombstone_blobs_cache = None
         return None
+    nseg = int(index.meta["n_segments"])
+    nparts = max(1, min(nseg, index.spark.sparkContext.defaultParallelism))
+    blobs = _segment_blobs(tdf, nseg, nparts).persist()
+    blobs.count()  # materialize once; n_segments small rows
+    index._tombstone_blobs_cache = blobs
+    return blobs
+
+
+def _segment_blobs(tdf: DataFrame, nseg: int, nparts: int) -> DataFrame:
+    """``(doc_id long)`` rows → one ``(segment int, doc_blob binary)`` row
+    per segment holding any of them, its ids gap-encoded.
+
+    House pandas-stage shape: never one task per segment
+    (~120 ms/task constant) — ``route`` places segment s in partition
+    s mod ``nparts`` (AQE-exempt), capping the stage at ``nparts`` tasks,
+    and the kernel groups the co-located segments in memory."""
     from full_text_index_spark.codec import encode_gaps
 
-    nseg = int(index.meta["n_segments"])
-
-    # house pandas-stage shape (CLAUDE.md): never one applyInPandas task
-    # per segment (~120 ms/task constant, and AQE coalesces the tiny
-    # partitions into 1-2 serial tasks) — an explicit AQE-exempt
-    # repartition on the segment key caps the stage at ~defaultParallelism
-    # tasks and the kernel groups the co-located segments in-memory
     def enc(batches):
         pdfs = [b for b in batches]
         if not pdfs:
@@ -189,19 +198,12 @@ def tombstone_segment_blobs(index: InvertedIndex) -> DataFrame | None:
             blobs.append(encode_gaps(ids))
         yield pd.DataFrame({"segment": segs, "doc_blob": blobs})
 
-    spark = index.spark
-    nparts = max(1, min(nseg, spark.sparkContext.defaultParallelism))
-    blobs = (
-        tdf.withColumn(
-            "segment", F.pmod(F.col("doc_id"), F.lit(nseg)).cast("int")
-        )
-        .repartition(nparts, "segment")
-        .mapInPandas(enc, "segment int, doc_blob binary")
-        .persist()
+    keyed = tdf.withColumn(
+        "segment", F.pmod(F.col("doc_id"), F.lit(nseg)).cast("int")
     )
-    blobs.count()  # materialize once; n_segments small rows
-    index._tombstone_blobs_cache = blobs
-    return blobs
+    return route(keyed, "segment", nparts).mapInPandas(
+        enc, "segment int, doc_blob binary"
+    )
 
 
 def mask_deleted(index: InvertedIndex, df: DataFrame,

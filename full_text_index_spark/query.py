@@ -6,10 +6,10 @@ utils/interface.h:59-92) and its query drivers (utils/run_queries.c:124-383):
 
 * ``count``/``locate`` — backward search + LF-walk (ssa/SSA.cpp:242-339)
   become a term-stats lookup / posting-block decode;
-* BM25 top-k is our ranked extension (the north_rule), with **block-max
-  MaxScore** pruning: per-block max-impact metadata (the analog of the
-  superbucket occ headers, fm/fm_occurences.c:178-255) lets non-essential
-  terms decode only the blocks that can still change the top-k;
+* BM25 top-k is our ranked extension (the north_rule), with **MaxScore**
+  pruning: per-row max-impact bounds (from ``max_tf``/``min_dl``, the
+  analog of the superbucket occ headers, fm/fm_occurences.c:178-255) order
+  terms and stop non-essential ones from adding new candidates;
 * ``extract``/``display`` — the reference's decompression walks
   (fm/fm_extract.c:21-98) collapse to ``substring`` projections because the
   text is a stored column.
@@ -33,7 +33,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from full_text_index_spark.codec import decode_gaps, varbyte_decode
+from full_text_index_spark.codec import (
+    candidate_blocks,
+    decode_blocks,
+    decode_rows,
+)
 from full_text_index_spark.functions.util import (
     kernel_tasks,
     local_frame,
@@ -197,11 +201,6 @@ def bm25_topk(
     mp = matched.withColumn("rid", F.monotonically_increasing_id()).select(
         "segment", "term", "rid", "df_seg",
         "doc_blob", "tf_blob", "dl_blob",
-        "block_last", "block_doc_off", "block_tf_off", "block_dl_off",
-        F.zip_with(
-            "block_max_tf", "block_min_dl",
-            lambda t, d: index.impact_bound(t, d),
-        ).alias("block_max_impact"),
         index.impact_bound(F.col("max_tf"), F.col("min_dl")).alias("max_impact"),
     )
     # tombstones ride the kernel's OWN input as per-segment blob rows
@@ -289,26 +288,17 @@ def _decode_postings(postings: DataFrame) -> DataFrame:
 
     def decode(iterator):
         for pdf in iterator:
-            outs = []
-            for row in pdf.itertuples(index=False):
-                docs = decode_gaps(row.doc_blob)
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "segment": np.full(len(docs), row.segment, dtype=np.int32),
-                            "term": row.term,
-                            "doc_id": docs,
-                            "tf": varbyte_decode(row.tf_blob),
-                            "doclen": varbyte_decode(row.dl_blob),
-                        }
-                    )
-                )
-            yield (
-                pd.concat(outs, ignore_index=True)
-                if outs
-                else pd.DataFrame(
-                    columns=["segment", "term", "doc_id", "tf", "doclen"]
-                )
+            p = decode_rows(pdf["doc_blob"], pdf["tf_blob"], pdf["dl_blob"])
+            yield pd.DataFrame(
+                {
+                    "segment": np.repeat(
+                        pdf["segment"].to_numpy(dtype=np.int32), p.counts
+                    ),
+                    "term": np.repeat(pdf["term"].to_numpy(), p.counts),
+                    "doc_id": p.doc,
+                    "tf": p.tf,
+                    "doclen": p.dl,
+                }
             )
 
     # widen: the decode kernel inherits SCAN parallelism, and a
@@ -349,8 +339,7 @@ def _make_maxscore_kernel(k1: float, b: float, avgdl: float, k: int,
     descending max-score; once the summed max-scores of the remaining terms
     cannot lift any unseen document past the current k-th score (θ),
     remaining terms are *non-essential* — only surviving candidates are
-    looked up, decoding only blocks that contain one AND whose block-max can
-    still matter.
+    looked up in their already-decoded rows.
     """
     idf_by_term: dict[str, float] = {}
     terms_by_sid: dict[int, tuple] = {}
@@ -375,9 +364,7 @@ def _make_maxscore_kernel(k1: float, b: float, avgdl: float, k: int,
         tomb_sel = rid_np < 0
         deleted: np.ndarray | None = None
         if tomb_sel.any():
-            parts = [decode_gaps(blob)
-                     for blob in left.loc[tomb_sel, "doc_blob"]]
-            deleted = np.unique(np.concatenate(parts))
+            deleted = np.unique(decode_rows(left.loc[tomb_sel, "doc_blob"]).doc)
             left = left.loc[~tomb_sel].reset_index(drop=True)
             if len(left) == 0:
                 return pd.DataFrame(columns=["sid", "doc_id", "score"])
@@ -408,28 +395,21 @@ def _make_maxscore_kernel(k1: float, b: float, avgdl: float, k: int,
         # 3·n_rows small ones).  Any heavy set forces a full decode of all
         # rows anyway (the dense-path universe), so nothing is decoded that
         # the per-row path would have skipped.  NARROW batches (interactive
-        # counts, small tests) keep the lazy per-row path so MaxScore's
-        # block-targeted decode still skips untouched blocks.
+        # counts, small tests) keep the lazy per-row path, so a batch of
+        # bulk sets decodes only the rows its sets touch.
         if len(rows) > 64:
-            df_arr = left["df_seg"].to_numpy(dtype=np.int64)
-            v_ends = np.cumsum(df_arr)
-            v_starts = v_ends - df_arr
-            gaps_all = varbyte_decode(b"".join(left["doc_blob"].tolist()))
-            tfs_all = varbyte_decode(
-                b"".join(left["tf_blob"].tolist())
-            ).astype(np.float64)
-            dls_all = varbyte_decode(
-                b"".join(left["dl_blob"].tolist())
-            ).astype(np.float64)
-            csum = np.cumsum(gaps_all)
-            base = csum[v_starts] - gaps_all[v_starts]
-            docs_all = csum - np.repeat(base, df_arr) - 1
+            p = decode_rows(left["doc_blob"], left["tf_blob"], left["dl_blob"])
+            v_ends = np.cumsum(p.counts)
+            v_starts = v_ends - p.counts
+            docs_all = p.doc
+            tfs_all = p.tf.astype(np.float64)
+            dls_all = p.dl.astype(np.float64)
             idf_arr = np.fromiter(
                 (idf_by_term[t] for t in left["term"]),
                 dtype=np.float64, count=len(rows),
             )
             contrib_all = (
-                np.repeat(idf_arr, df_arr) * (k1 + 1.0) * tfs_all
+                np.repeat(idf_arr, p.counts) * (k1 + 1.0) * tfs_all
                 / (tfs_all + norm_of(dls_all))
             )
             rid_arr = left["rid"].to_numpy()
@@ -451,9 +431,10 @@ def _make_maxscore_kernel(k1: float, b: float, avgdl: float, k: int,
         def full_decode(row) -> tuple[np.ndarray, np.ndarray]:
             hit = row_cache.get(row.rid)
             if hit is None:
-                docs = decode_gaps(row.doc_blob)
-                tfs = varbyte_decode(row.tf_blob).astype(np.float64)
-                dls = varbyte_decode(row.dl_blob).astype(np.float64)
+                p = decode_rows([row.doc_blob], [row.tf_blob], [row.dl_blob])
+                docs = p.doc
+                tfs = p.tf.astype(np.float64)
+                dls = p.dl.astype(np.float64)
                 contrib = (
                     idf_by_term[row.term] * (k1 + 1.0) * tfs
                     / (tfs + norm_of(dls))
@@ -607,38 +588,21 @@ def _make_maxscore_kernel(k1: float, b: float, avgdl: float, k: int,
             acc_scores = np.empty(0, dtype=np.float64)
             theta = -np.inf
             for i, row in enumerate(rows_q):
-                essential = suffix[i] >= theta - _EPS
-                if essential or row.rid in row_cache:
-                    docs, contrib = full_decode(row)
-                    if not essential:
-                        # already decoded for another query: plain lookup of
-                        # surviving candidates beats block-targeted decode
-                        keep = acc_scores + suffix[i] >= theta - _EPS
-                        cand = acc_docs[keep]
-                        if len(cand) == 0:
-                            break
-                        pos = np.searchsorted(docs, cand)
-                        pos = pos[pos < len(docs)]
-                        hit = np.unique(pos[np.isin(docs[pos], cand)])
-                        docs, contrib = docs[hit], contrib[hit]
-                        if len(docs) == 0:
-                            continue
-                else:
-                    # candidates that can still reach θ
+                # the universe decode above cached every heavy row, so a
+                # non-essential term is a lookup of the surviving
+                # candidates in its decoded row
+                docs, contrib = full_decode(row)
+                if suffix[i] < theta - _EPS:
                     keep = acc_scores + suffix[i] >= theta - _EPS
                     cand = acc_docs[keep]
                     if len(cand) == 0:
                         break
-                    docs, tfs, dls = _lookup_blocks(
-                        row, cand, acc_scores[keep], idf_by_term[row.term],
-                        (k1 + 1.0), theta, suffix[i + 1],
-                    )
+                    pos = np.searchsorted(docs, cand)
+                    pos = pos[pos < len(docs)]
+                    hit = np.unique(pos[np.isin(docs[pos], cand)])
+                    docs, contrib = docs[hit], contrib[hit]
                     if len(docs) == 0:
                         continue
-                    contrib = (
-                        idf_by_term[row.term] * (k1 + 1.0) * tfs
-                        / (tfs + norm_of(dls))
-                    )
                 acc_docs, acc_scores = _merge_acc(acc_docs, acc_scores, docs, contrib)
                 if len(acc_scores) >= k:
                     theta = np.partition(acc_scores, len(acc_scores) - k)[
@@ -678,56 +642,6 @@ def _merge_acc(acc_docs, acc_scores, docs, contrib):
     return uniq, sums
 
 
-def _lookup_blocks(row, cand: np.ndarray, cand_scores: np.ndarray,
-                   idf: float, k1p1: float, theta: float, rest: float):
-    """Decode only the posting blocks of ``row`` that contain a candidate
-    docID and whose block-max contribution could still matter for it.
-    Returns (docs, tfs, doclens) of the candidate hits."""
-    block_last = np.asarray(row.block_last, dtype=np.int64)
-    block_off = np.asarray(row.block_doc_off, dtype=np.int64)
-    block_max = np.asarray(row.block_max_impact, dtype=np.float64)
-    blob = np.frombuffer(row.doc_blob, dtype=np.uint8)
-    tf_blob = np.frombuffer(row.tf_blob, dtype=np.uint8)
-    dl_blob = np.frombuffer(row.dl_blob, dtype=np.uint8)
-    tf_off = np.asarray(row.block_tf_off, dtype=np.int64)
-    dl_off = np.asarray(row.block_dl_off, dtype=np.int64)
-
-    cand_blk = np.searchsorted(block_last, cand, side="left")
-    in_range = cand_blk < len(block_last)
-    # block-max skip, per candidate: acc + this block's max contribution +
-    # the remaining terms' max-scores must still reach θ
-    cb = cand_blk[in_range]
-    viable = (
-        cand_scores[in_range] + idf * k1p1 * block_max[cb] + rest
-        >= theta - _EPS
-    )
-    blk = np.unique(cb[viable])
-    docs_out, tfs_out, dls_out = [], [], []
-    for bi in blk:
-        lo = block_off[bi]
-        hi = block_off[bi + 1] if bi + 1 < len(block_off) else len(blob)
-        prev = block_last[bi - 1] if bi > 0 else -1
-        docs = decode_gaps(blob[lo:hi], prev_last_doc=int(prev))
-        tlo = tf_off[bi]
-        thi = tf_off[bi + 1] if bi + 1 < len(tf_off) else len(tf_blob)
-        tfs = varbyte_decode(tf_blob[tlo:thi]).astype(np.float64)
-        llo = dl_off[bi]
-        lhi = dl_off[bi + 1] if bi + 1 < len(dl_off) else len(dl_blob)
-        dls = varbyte_decode(dl_blob[llo:lhi]).astype(np.float64)
-        pos = np.searchsorted(docs, cand)
-        pos = pos[pos < len(docs)]
-        hit = np.unique(pos[np.isin(docs[pos], cand)])
-        if len(hit):
-            docs_out.append(docs[hit])
-            tfs_out.append(tfs[hit])
-            dls_out.append(dls[hit])
-    if not docs_out:
-        return (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64),
-                np.empty(0, dtype=np.float64))
-    return (np.concatenate(docs_out), np.concatenate(tfs_out),
-            np.concatenate(dls_out))
-
-
 # ---------------------------------------------------------------------------
 # count / locate / extract / display — the reference's four query classes
 # ---------------------------------------------------------------------------
@@ -761,73 +675,29 @@ def term_positions(index: InvertedIndex, terms: list[str],
     )
 
     def decode(iterator):
-        empty = pd.DataFrame(columns=["term", "doc_id", "tpos"])
         for pdf in iterator:
-            outs = []
-            for row in pdf.itertuples(index=False):
-                if docs_np is None:
-                    docs = decode_gaps(row.doc_blob)
-                    tfs = varbyte_decode(row.tf_blob)
-                    pg = varbyte_decode(row.pos_blob)
-                    ends = np.cumsum(tfs)
-                    cs = np.cumsum(pg)
-                    base = np.concatenate(([0], cs[ends[:-1] - 1]))
-                    outs.append(
-                        pd.DataFrame(
-                            {
-                                "term": row.term,
-                                "doc_id": np.repeat(docs, tfs),
-                                "tpos": cs - np.repeat(base, tfs),
-                            }
-                        )
-                    )
-                    continue
-                # block-targeted path: decode ONLY the blocks whose doc
-                # range can contain a probed doc (block directory
-                # searchsorted — the substring verify's access pattern);
-                # positions reconstruct block-locally because gaps reset
-                # at each posting start and blocks align with postings
-                block_last = np.asarray(row.block_last, dtype=np.int64)
-                doc_off = np.asarray(row.block_doc_off, dtype=np.int64)
-                tf_off = np.asarray(row.block_tf_off, dtype=np.int64)
-                pos_off = np.asarray(row.block_pos_off, dtype=np.int64)
-                doc_blob = np.frombuffer(row.doc_blob, np.uint8)
-                tf_blob = np.frombuffer(row.tf_blob, np.uint8)
-                pos_blob = np.frombuffer(row.pos_blob, np.uint8)
-                blk = np.searchsorted(block_last, docs_np, side="left")
-                blk = np.unique(blk[blk < len(block_last)])
-                for bi in blk:
-                    lo = doc_off[bi]
-                    hi = (doc_off[bi + 1] if bi + 1 < len(doc_off)
-                          else len(doc_blob))
-                    prev = block_last[bi - 1] if bi > 0 else -1
-                    docs = decode_gaps(doc_blob[lo:hi],
-                                       prev_last_doc=int(prev))
-                    tlo = tf_off[bi]
-                    thi = (tf_off[bi + 1] if bi + 1 < len(tf_off)
-                           else len(tf_blob))
-                    tfs = varbyte_decode(tf_blob[tlo:thi])
-                    plo = pos_off[bi]
-                    phi = (pos_off[bi + 1] if bi + 1 < len(pos_off)
-                           else len(pos_blob))
-                    pg = varbyte_decode(pos_blob[plo:phi])
-                    ends = np.cumsum(tfs)
-                    cs = np.cumsum(pg)
-                    base = np.concatenate(([0], cs[ends[:-1] - 1]))
-                    tpos = cs - np.repeat(base, tfs)
-                    docs_rep = np.repeat(docs, tfs)
-                    keep = np.isin(docs_rep, docs_np)
-                    if keep.any():
-                        outs.append(
-                            pd.DataFrame(
-                                {
-                                    "term": row.term,
-                                    "doc_id": docs_rep[keep],
-                                    "tpos": tpos[keep],
-                                }
-                            )
-                        )
-            yield pd.concat(outs, ignore_index=True) if outs else empty
+            terms = pdf["term"].to_numpy()
+            if docs_np is None:
+                p = decode_rows(pdf["doc_blob"], pdf["tf_blob"],
+                                pos_blobs=pdf["pos_blob"])
+                row_of = np.repeat(np.arange(len(pdf)), p.counts)
+                yield pd.DataFrame({"term": terms[np.repeat(row_of, p.tf)],
+                                    "doc_id": np.repeat(p.doc, p.tf),
+                                    "tpos": p.pos})
+                continue
+            # block-targeted path: decode ONLY the blocks whose doc range
+            # can contain a probed doc (the substring verify's access
+            # pattern)
+            parts = [decode_blocks(row, candidate_blocks(row, docs_np), pos=True)
+                     for row in pdf.itertuples(index=False)]
+            term = np.repeat(terms, [len(q.pos) for q in parts])
+            doc = np.concatenate([np.repeat(q.doc, q.tf) for q in parts]
+                                 or [np.empty(0, np.int64)])
+            tpos = np.concatenate([q.pos for q in parts]
+                                  or [np.empty(0, np.int64)])
+            keep = np.isin(doc, docs_np)
+            yield pd.DataFrame({"term": term[keep], "doc_id": doc[keep],
+                                "tpos": tpos[keep]})
 
     cols = ["term", "doc_blob", "tf_blob", "pos_blob"]
     if docs_np is not None:
@@ -1737,21 +1607,14 @@ def wildcard_term_search(index: InvertedIndex,
 
 
 def _decode_doc_ids_kernel(iterator):
-    """(pattern, doc_blob) -> (pattern, doc_id): gap-decode only the doc
-    stream (no tf/pos work) for union-df counting."""
+    """(key, doc_blob) -> (key, doc_id): gap-decode only the doc stream (no
+    tf/pos work); ``key`` is whatever the first column labels the rows
+    with."""
     for pdf in iterator:
-        outs = []
-        for row in pdf.itertuples(index=False):
-            docs = decode_gaps(row.doc_blob)
-            outs.append(pd.DataFrame({
-                "pattern": row.pattern,
-                "doc_id": docs,
-            }))
-        yield (
-            pd.concat(outs, ignore_index=True)
-            if outs
-            else pd.DataFrame(columns=["pattern", "doc_id"])
-        )
+        p = decode_rows(pdf["doc_blob"])
+        key = pdf.columns[0]
+        yield pd.DataFrame({key: np.repeat(pdf[key].to_numpy(), p.counts),
+                            "doc_id": p.doc})
 
 
 def phrase_search(index: InvertedIndex, corpus: DataFrame,

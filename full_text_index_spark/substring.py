@@ -208,7 +208,7 @@ def _make_short_stats_kernel(k: int):
     (functions.util.route on the segment)."""
     import pandas as pd
 
-    from full_text_index_spark.codec import decode_gaps
+    from full_text_index_spark.codec import decode_rows
 
     def partials(iterator):
         empty = pd.DataFrame(
@@ -225,7 +225,8 @@ def _make_short_stats_kernel(k: int):
         is_post = pdf["qlen"].to_numpy() == 0
         post = pdf[is_post]
         # decode every posting row's doc stream ONCE, reused across q
-        post_docs = [decode_gaps(b) for b in post["doc_blob"]]
+        p = decode_rows(post["doc_blob"])
+        post_docs = np.split(p.doc, np.cumsum(p.counts)[:-1])
         post_seg = post["segment"].to_numpy()
         post_term = post["term"].tolist()
         post_cf = post["cf"].to_numpy(dtype=np.int64)
@@ -558,7 +559,7 @@ def _make_dist_verify_kernel():
     (VERDICT r03 #1)."""
     import pandas as pd
 
-    from full_text_index_spark.codec import decode_gaps, varbyte_decode
+    from full_text_index_spark.codec import candidate_blocks, decode_blocks
 
     def verify(iterator):
         pdfs = [p for p in iterator]
@@ -587,51 +588,14 @@ def _make_dist_verify_kernel():
                     )
                     hit_all = np.zeros(len(dN), dtype=bool)
                     for row in prows:
-                        block_last = np.asarray(row.block_last, dtype=np.int64)
-                        doc_off = np.asarray(row.block_doc_off, dtype=np.int64)
-                        tf_off = np.asarray(row.block_tf_off, dtype=np.int64)
-                        pos_off = np.asarray(row.block_pos_off, dtype=np.int64)
-                        doc_blob = np.frombuffer(row.doc_blob, np.uint8)
-                        tf_blob = np.frombuffer(row.tf_blob, np.uint8)
-                        pos_blob = np.frombuffer(row.pos_blob, np.uint8)
-                        blk = np.searchsorted(block_last, u, side="left")
-                        blk = np.unique(blk[blk < len(block_last)])
-                        for bi in blk:
-                            lo = doc_off[bi]
-                            hi = (doc_off[bi + 1] if bi + 1 < len(doc_off)
-                                  else len(doc_blob))
-                            prev = block_last[bi - 1] if bi > 0 else -1
-                            docs = decode_gaps(
-                                doc_blob[lo:hi], prev_last_doc=int(prev)
-                            )
-                            tlo = tf_off[bi]
-                            thi = (tf_off[bi + 1] if bi + 1 < len(tf_off)
-                                   else len(tf_blob))
-                            tfs = varbyte_decode(tf_blob[tlo:thi])
-                            plo = pos_off[bi]
-                            phi = (pos_off[bi + 1] if bi + 1 < len(pos_off)
-                                   else len(pos_blob))
-                            pg = varbyte_decode(pos_blob[plo:phi])
-                            stats_bytes += (
-                                int(hi - lo) + int(thi - tlo) + int(phi - plo)
-                            )
-                            # per-posting position reconstruction: gaps reset
-                            # to an absolute value at each posting start, and
-                            # blocks align with posting boundaries, so
-                            # block-local decode is safe
-                            ends = np.cumsum(tfs)
-                            cs = np.cumsum(pg)
-                            base = np.concatenate(([0], cs[ends[:-1] - 1]))
-                            tpos = cs - np.repeat(base, tfs)
-                            docs_rep = np.repeat(docs, tfs)
-                            idx = np.searchsorted(u, docs_rep)
-                            ok = idx < len(u)
-                            ok[ok] = u[idx[ok]] == docs_rep[ok]
-                            have = (
-                                idx[ok].astype(np.int64) * _KEY_SHIFT
-                                + tpos[ok]
-                            )
-                            hit_all |= np.isin(need_key, have)
+                        p = decode_blocks(row, candidate_blocks(row, u), pos=True)
+                        stats_bytes += p.nbytes
+                        docs_rep = np.repeat(p.doc, p.tf)
+                        idx = np.searchsorted(u, docs_rep)
+                        ok = idx < len(u)
+                        ok[ok] = u[idx[ok]] == docs_rep[ok]
+                        have = idx[ok].astype(np.int64) * _KEY_SHIFT + p.pos[ok]
+                        hit_all |= np.isin(need_key, have)
                     if hit_all.any():
                         out.append(
                             pd.DataFrame(
@@ -1026,11 +990,12 @@ def substring_candidate_docs(index: InvertedIndex,
     no position blobs, no alignment shuffle — so the pruning cost tracks
     Σ df of the window grams instead of Σ cf of their positions.  All
     patterns must be ≥ the index's gram length."""
-    import pandas as pd
-
     from full_text_index_spark.deletes import mask_deleted
     from full_text_index_spark.functions.util import widen_partitions
-    from full_text_index_spark.query import _matched_postings
+    from full_text_index_spark.query import (
+        _decode_doc_ids_kernel,
+        _matched_postings,
+    )
 
     spark = index.spark
     k = _gram_k(index)
@@ -1047,21 +1012,9 @@ def substring_candidate_docs(index: InvertedIndex,
                      "pattern string, n_grams long")
     grams = sorted({g for _, g in pairs})
 
-    def decode(iterator):
-        from full_text_index_spark.codec import decode_gaps
-
-        for pdf in iterator:
-            outs = []
-            for row in pdf.itertuples(index=False):
-                outs.append(pd.DataFrame({
-                    "term": row.term, "doc_id": decode_gaps(row.doc_blob),
-                }))
-            yield (pd.concat(outs, ignore_index=True) if outs
-                   else pd.DataFrame(columns=["term", "doc_id"]))
-
     decoded = widen_partitions(
         _matched_postings(index, grams).select("term", "doc_blob")
-    ).mapInPandas(decode, schema="term string, doc_id long")
+    ).mapInPandas(_decode_doc_ids_kernel, schema="term string, doc_id long")
     # one decoded row per (generation, segment, term) and a doc lives in
     # exactly one of those per term, so count(*) per (pattern, doc) IS the
     # distinct-gram count

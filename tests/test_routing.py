@@ -46,10 +46,17 @@ def test_long_key_is_accepted(spark):
 
 
 def test_plan_is_repartition_by_num(spark):
+    from full_text_index_spark.deletes import _segment_blobs
+
     routed = route(spark.range(0, 16), "id", 8)
-    plan = routed._jdf.queryExecution().executedPlan().toString()
-    assert "REPARTITION_BY_NUM" in plan
     assert routed.columns == ["id"]
+    # the tombstone encoder places its segments with route too
+    tombs = _segment_blobs(spark.range(0, 40).withColumnRenamed("id", "doc_id"),
+                           nseg=5, nparts=3)
+    for df in (routed, tombs):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "REPARTITION_BY_NUM" in plan
+        assert "hashpartitioning" not in plan
 
 
 def test_kernel_tasks_rule(spark):
