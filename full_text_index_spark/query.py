@@ -386,66 +386,35 @@ def _make_maxscore_kernel(k1: float, b: float, avgdl: float, k: int,
 
         # decode + per-posting contribution once per posting ROW, shared
         # across every query in the batch that touches it.  Postings are
-        # self-contained: the doclen stream is packed alongside tf.
+        # self-contained: the doclen stream is packed alongside tf.  Every
+        # row is decoded, in ONE varbyte pass per stream over the whole
+        # task (profiled: per-blob decode overhead was ~45% of kernel CPU
+        # at 10^4 rows/task): each row's term belongs to a set with v > 0
+        # here, which the bulk or the dense/MaxScore path decodes in full.
+        p = decode_rows(left["doc_blob"], left["tf_blob"], left["dl_blob"])
+        v_ends = np.cumsum(p.counts)
+        v_starts = v_ends - p.counts
+        tfs_all = p.tf.astype(np.float64)
+        idf_arr = np.fromiter(
+            (idf_by_term[t] for t in left["term"]),
+            dtype=np.float64, count=len(rows),
+        )
+        contrib_all = (
+            np.repeat(idf_arr, p.counts) * (k1 + 1.0) * tfs_all
+            / (tfs_all + norm_of(p.dl.astype(np.float64)))
+        )
+        # tombstone mask at the decode choke point: deleted docs never
+        # enter the cache, so none of bulk/dense/MaxScore can emit them
+        live_all = ~np.isin(p.doc, deleted) if deleted is not None else None
         row_cache: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-
-        # WIDE batches: decode every stream in ONE varbyte pass over the
-        # concatenated blobs (profiled: per-blob numpy decode overhead was
-        # ~45% of kernel CPU at 10^4 rows/task — 3 big decodes replace
-        # 3·n_rows small ones).  Any heavy set forces a full decode of all
-        # rows anyway (the dense-path universe), so nothing is decoded that
-        # the per-row path would have skipped.  NARROW batches (interactive
-        # counts, small tests) keep the lazy per-row path, so a batch of
-        # bulk sets decodes only the rows its sets touch.
-        if len(rows) > 64:
-            p = decode_rows(left["doc_blob"], left["tf_blob"], left["dl_blob"])
-            v_ends = np.cumsum(p.counts)
-            v_starts = v_ends - p.counts
-            docs_all = p.doc
-            tfs_all = p.tf.astype(np.float64)
-            dls_all = p.dl.astype(np.float64)
-            idf_arr = np.fromiter(
-                (idf_by_term[t] for t in left["term"]),
-                dtype=np.float64, count=len(rows),
-            )
-            contrib_all = (
-                np.repeat(idf_arr, p.counts) * (k1 + 1.0) * tfs_all
-                / (tfs_all + norm_of(dls_all))
-            )
-            rid_arr = left["rid"].to_numpy()
-            # tombstone mask at the decode choke point: deleted docs never
-            # enter the cache, so none of bulk/dense/MaxScore (whose block
-            # lookups only probe already-cached candidates) can emit them
-            live_all = (
-                ~np.isin(docs_all, deleted) if deleted is not None else None
-            )
-            for i in range(len(rows)):
-                s, e = int(v_starts[i]), int(v_ends[i])
-                d_, c_ = docs_all[s:e], contrib_all[s:e]
-                if live_all is not None:
-                    m = live_all[s:e]
-                    if not m.all():
-                        d_, c_ = d_[m], c_[m]
-                row_cache[int(rid_arr[i])] = (d_, c_)
-
-        def full_decode(row) -> tuple[np.ndarray, np.ndarray]:
-            hit = row_cache.get(row.rid)
-            if hit is None:
-                p = decode_rows([row.doc_blob], [row.tf_blob], [row.dl_blob])
-                docs = p.doc
-                tfs = p.tf.astype(np.float64)
-                dls = p.dl.astype(np.float64)
-                contrib = (
-                    idf_by_term[row.term] * (k1 + 1.0) * tfs
-                    / (tfs + norm_of(dls))
-                )
-                if deleted is not None and len(docs):
-                    m = ~np.isin(docs, deleted)
-                    if not m.all():
-                        docs, contrib = docs[m], contrib[m]
-                hit = (docs, contrib)
-                row_cache[row.rid] = hit
-            return hit
+        for i, rid in enumerate(left["rid"].tolist()):
+            s, e = int(v_starts[i]), int(v_ends[i])
+            d_, c_ = p.doc[s:e], contrib_all[s:e]
+            if live_all is not None:
+                m = live_all[s:e]
+                if not m.all():
+                    d_, c_ = d_[m], c_[m]
+            row_cache[rid] = (d_, c_)
 
         frames = []
         if bulk_sets:
@@ -459,7 +428,7 @@ def _make_maxscore_kernel(k1: float, b: float, avgdl: float, k: int,
             qs, ds, cs = [], [], []
             for t, sids_t in bulk_by_term.items():
                 for row in term_rows[t]:
-                    docs, contrib = full_decode(row)
+                    docs, contrib = row_cache[row.rid]
                     for sid in sids_t:
                         qs.append(np.full(len(docs), sid, dtype=np.int64))
                         ds.append(docs)
@@ -516,7 +485,7 @@ def _make_maxscore_kernel(k1: float, b: float, avgdl: float, k: int,
                 t for sid in heavy_sets for t in terms_by_sid[sid]
                 if t in term_rows
             })
-            u_arrs = [full_decode(r)[0]
+            u_arrs = [row_cache[r.rid][0]
                       for t in heavy_terms for r in term_rows[t]]
             universe = (np.unique(np.concatenate(u_arrs)) if u_arrs
                         else np.empty(0, dtype=np.int64))
@@ -532,7 +501,7 @@ def _make_maxscore_kernel(k1: float, b: float, avgdl: float, k: int,
             if vec is None:
                 vec = np.zeros(len(universe), dtype=np.float64)
                 for row in term_rows[t]:
-                    docs, contrib = full_decode(row)
+                    docs, contrib = row_cache[row.rid]
                     vec[np.searchsorted(universe, docs)] += contrib
                 dense_by_term[t] = vec
             return vec
@@ -543,7 +512,7 @@ def _make_maxscore_kernel(k1: float, b: float, avgdl: float, k: int,
                 # single-term, single-generation: the decoded posting row IS
                 # the per-doc score list — top-k directly on it, no dense
                 # vector (saves ~3×universe memory traffic per head set)
-                docs_1, s_1 = full_decode(term_rows[present[0]][0])
+                docs_1, s_1 = row_cache[term_rows[present[0]][0].rid]
                 if len(s_1) > k:
                     part = np.argpartition(-s_1, k - 1)[:k]
                     thr = np.round(s_1[part], RANK_ROUND).min()
@@ -588,10 +557,9 @@ def _make_maxscore_kernel(k1: float, b: float, avgdl: float, k: int,
             acc_scores = np.empty(0, dtype=np.float64)
             theta = -np.inf
             for i, row in enumerate(rows_q):
-                # the universe decode above cached every heavy row, so a
-                # non-essential term is a lookup of the surviving
-                # candidates in its decoded row
-                docs, contrib = full_decode(row)
+                # every row was decoded above, so a non-essential term is
+                # a lookup of the surviving candidates in its decoded row
+                docs, contrib = row_cache[row.rid]
                 if suffix[i] < theta - _EPS:
                     keep = acc_scores + suffix[i] >= theta - _EPS
                     cand = acc_docs[keep]

@@ -55,8 +55,7 @@ def main() -> None:
     )
 
     sizes = [int(a) for a in sys.argv[1:]] or [2_000, 20_000, 100_000]
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
-    spark = get_spark("ivf-scaling", cpus=cpus, shuffle_partitions=cpus)
+    spark = get_spark("ivf-scaling")
     qids = [0, 1, 2, 3, 4]
     out_path = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),

@@ -78,7 +78,7 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from full_text_index_spark.session import get_spark
 
-    spark = get_spark("parity", cpus=8, shuffle_partitions=8)
+    spark = get_spark("parity")
     con = duckdb.connect()
     for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")

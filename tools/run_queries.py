@@ -39,8 +39,7 @@ def main() -> None:
     from full_text_index_spark.index import InvertedIndex
     from full_text_index_spark.session import get_spark
 
-    spark = get_spark("run-queries", cpus=int(os.environ.get(
-        "SPARK_GRAFT_CPUS", "8")))
+    spark = get_spark("run-queries")
     t0 = time.monotonic()
     index = InvertedIndex.open(spark, index_dir)
     load_time = time.monotonic() - t0

@@ -127,7 +127,7 @@ spark.stop()
 def control_multijvm(n_docs: int) -> dict:
     """1 JVM on the full corpus vs 4 concurrent single-thread JVMs on
     disjoint quarter shards (doc_id mod 4) — each builds its shard's index."""
-    from tools.scaling_bench import ensure_corpus, wait_quiet
+    from tools.measure import ensure_corpus, wait_quiet
 
     corpus = ensure_corpus(n_docs)
     child = _CHILD.format(repo=REPO)

@@ -74,7 +74,7 @@ def abovecap() -> None:
         substring_locate,
     )
 
-    spark = get_spark("substr-abovecap", cpus=32, shuffle_partitions=32)
+    spark = get_spark("substr-abovecap")
     n_needle, reps_per_doc = 50, 21_000        # cf(zqv) = 1.05M > old 1M cap
     n_filler, filler_len = 50_000, 400         # cf(aaa) ≈ 21M (the head gram)
     needles = spark.range(n_needle).select(
@@ -139,7 +139,7 @@ def main() -> None:
         return
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     reps = int(sys.argv[2]) if len(sys.argv) > 2 else 3
-    spark = get_spark("substr-plan-bench", cpus=8, shuffle_partitions=8)
+    spark = get_spark("substr-plan-bench")
 
     docs = (
         spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
