@@ -34,6 +34,17 @@ def _export_worker_path() -> None:
         os.environ["PYTHONPATH"] = os.pathsep.join([PACKAGE_PARENT, *paths])
 
 
+def _daemon_conf() -> dict[str, str]:
+    """Run the Python workers under ``_daemon``, which stops each task
+    re-reading the worker path's zip archives.  The daemon imports the
+    package from the ``PYTHONPATH`` the JVM inherits, so a JVM that
+    ``spark-submit`` started (``PYSPARK_GATEWAY_PORT`` set; the package
+    arrives later with ``--py-files``) keeps the stock daemon."""
+    if "PYSPARK_GATEWAY_PORT" in os.environ:
+        return {}
+    return {"spark.python.daemon.module": "full_text_index_spark._daemon"}
+
+
 def default_driver_memory() -> str:
     """``SPARK_DRIVER_MEMORY`` if set, else a quarter of the host's physical
     memory (MemTotal on Linux) clamped to 1-8 GB: the driver holds query
@@ -73,7 +84,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**_daemon_conf(), **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

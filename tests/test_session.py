@@ -7,10 +7,12 @@ import os
 import subprocess
 import sys
 import textwrap
+import uuid
+import zipfile
 
 import pandas as pd
 
-from full_text_index_spark.session import PACKAGE_PARENT
+from full_text_index_spark.session import PACKAGE_PARENT, _daemon_conf
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -43,6 +45,69 @@ def test_worker_pythonpath_carries_package_parent(spark):
 
     (row,) = spark.range(1).coalesce(1).mapInPandas(env, "p string").collect()
     assert PACKAGE_PARENT in row["p"].split(os.pathsep)
+
+
+# a pyspark module the engine never imports
+PYSPARK_LEAF = "pyspark.mllib.stat.distribution"
+
+
+def test_workers_run_under_the_lazy_zip_daemon(spark):
+    def probe(batches):
+        import importlib
+        import time
+        import zipimport
+
+        t0 = time.perf_counter()
+        importlib.invalidate_caches()
+        invalidate_ms = (time.perf_counter() - t0) * 1e3
+        # dropped first, so that even a reused worker looks it up again,
+        # through the pyspark.zip directory this task invalidated
+        sys.modules.pop(PYSPARK_LEAF, None)
+        src = importlib.import_module(PYSPARK_LEAF).__file__
+
+        for _ in batches:
+            yield pd.DataFrame({
+                "fn": [zipimport.zipimporter.invalidate_caches.__code__.co_filename],
+                "ms": [invalidate_ms],
+                "src": [src],
+            })
+
+    rows = spark.range(4, numPartitions=4).mapInPandas(
+        probe, "fn string, ms double, src string").collect()
+    assert len(rows) == 4
+    for row in rows:
+        assert row["fn"].endswith(os.path.join("full_text_index_spark", "_daemon.py"))
+        assert row["ms"] < 20, row
+        assert "pyspark.zip" in row["src"], row
+
+
+def test_spark_submit_keeps_the_stock_daemon(monkeypatch):
+    monkeypatch.delenv("PYSPARK_GATEWAY_PORT", raising=False)
+    assert _daemon_conf() == {
+        "spark.python.daemon.module": "full_text_index_spark._daemon"}
+    # the JVM is up before the job runs; --py-files ship the package later
+    monkeypatch.setenv("PYSPARK_GATEWAY_PORT", "1")
+    assert _daemon_conf() == {}
+
+
+def test_workers_import_a_zip_added_after_they_started(spark, tmp_path):
+    spark.range(4, numPartitions=4).mapInPandas(
+        lambda batches: batches, "id long").collect()  # workers are up
+    name = f"late_{uuid.uuid4().hex}"
+    archive = tmp_path / f"{name}.zip"
+    with zipfile.ZipFile(archive, "w") as zf:
+        zf.writestr(f"{name}.py", "VALUE = 7\n")
+    spark.sparkContext.addPyFile(str(archive))
+
+    def late(batches):
+        import importlib
+
+        value = importlib.import_module(name).VALUE
+        for _ in batches:
+            yield pd.DataFrame({"v": [value]})
+
+    rows = spark.range(4, numPartitions=4).mapInPandas(late, "v long").collect()
+    assert [r["v"] for r in rows] == [7] * 4
 
 
 def test_workers_import_the_package_outside_the_repo(tmp_path):
