@@ -71,8 +71,7 @@ def _query_batch(spark, docs, n):
 
     # top-4096 terms by df, deterministic tie-break: the stride sampling
     # below then mixes head terms (df ≈ n_docs) with tail terms — the df
-    # spectrum a real log has, exercising all three kernel paths (bulk /
-    # dense / MaxScore) instead of head-only worst cases
+    # spectrum a real log has, instead of head-only worst cases
     vocab = [
         r["term"]
         for r in docs.select(F.explode(tokens_col(F.col("text"))).alias("term"))

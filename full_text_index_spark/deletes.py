@@ -9,9 +9,9 @@ soft-deletes) uses:
 - ``delete_docs`` records doc_ids in ``<index>/tombstones`` (parquet).
   Idempotent: re-deleting is a no-op; the stored set is distinct.
 - **Every doc-level query result excludes deleted docs immediately**:
-  ranked retrieval (BM25 incl. the MaxScore kernel, which masks at its
-  single decode choke point so deleted docs never enter any scoring
-  path), locate/positions, boolean/phrase/NEAR, substring/regex/approx/
+  ranked retrieval (BM25 incl. its one-pass kernel, which masks right
+  after its single decode so deleted docs never enter scoring),
+  locate/positions, boolean/phrase/NEAR, substring/regex/approx/
   ci locate — each masks against the tombstone set.
 - **Dictionary statistics stay physical until compaction**: df/cf/idf,
   short-gram stats and index_size keep counting tombstoned postings
@@ -25,7 +25,7 @@ soft-deletes) uses:
 The tombstone set is FULLY DISTRIBUTED end to end (VERDICT r04 #3 — the
 old 2M driver cap is gone): ``delete_docs`` merges DataFrames and writes
 parquet without driver staging, join-path masks anti-join the parquet
-(broadcast-hinted only while the set is small), and the BM25 MaxScore
+(broadcast-hinted only while the set is small), and the BM25 scoring
 kernel receives per-segment gap-encoded tombstone blob ROWS through its
 own mapInPandas input — routed by the same pmod(doc_id, n_segments) rule
 the build uses — instead of a driver-closure array.  Nothing is bounded
@@ -148,8 +148,8 @@ def deleted_ids(index: InvertedIndex) -> np.ndarray | None:
 
 def tombstone_segment_blobs(index: InvertedIndex) -> DataFrame | None:
     """Per-segment gap-encoded tombstone blobs ``(segment int, doc_blob
-    binary)`` — the rows the BM25 MaxScore kernel unions into its
-    mapInPandas input so each task masks with ONLY its segments'
+    binary)`` — the rows the BM25 kernel unions into its mapInPandas
+    input (with a null ``term``) so each task masks with ONLY its segments'
     tombstones (shuffled by the same pmod(doc_id, n_segments) rule the
     build uses, build.py:463-466).  Fully distributed: per-segment
     volume is total/n_segments and never touches the driver.

@@ -65,8 +65,7 @@ class InvertedIndex:
         return self.table("postings")
 
     def term_stats(self) -> DataFrame:
-        """(term, df, cf, max_tf, min_dl) + derived idf and an admissible
-        max_impact bound under the handle's avgdl — vocab-sized."""
+        """(term, df, cf, max_tf, min_dl) + the derived idf — vocab-sized."""
         if self._term_stats is None:
             n = float(self.n_docs)
             self._term_stats = self.table("term_stats").withColumn(
@@ -75,17 +74,8 @@ class InvertedIndex:
                     F.lit(1.0)
                     + (F.lit(n) - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
                 ),
-            ).withColumn("max_impact", self.impact_bound(F.col("max_tf"), F.col("min_dl")))
+            )
         return self._term_stats
-
-    def impact_bound(self, tf_col, dl_col):
-        """Admissible upper bound of tf/(tf+norm(dl)) given current avgdl
-        (impact is monotone increasing in tf, decreasing in dl)."""
-        t = tf_col.cast("double")
-        return t / (
-            t
-            + self.k1 * (1.0 - self.b + self.b * dl_col.cast("double") / self.avgdl)
-        )
 
     def doc_stats(self) -> DataFrame:
         return self.table("doc_stats")

@@ -1,15 +1,15 @@
-"""Query-side operators: BM25 top-k (block-max MaxScore), count, locate,
-extract, display.
+"""Query-side operators: BM25 top-k, count, locate, extract, display.
 
 The counterparts of the reference's query API (reference:
 utils/interface.h:59-92) and its query drivers (utils/run_queries.c:124-383):
 
 * ``count``/``locate`` — backward search + LF-walk (ssa/SSA.cpp:242-339)
   become a term-stats lookup / posting-block decode;
-* BM25 top-k is our ranked extension (the north_rule), with **MaxScore**
-  pruning: per-row max-impact bounds (from ``max_tf``/``min_dl``, the
-  analog of the superbucket occ headers, fm/fm_occurences.c:178-255) order
-  terms and stop non-essential ones from adding new candidates;
+* BM25 top-k is our ranked extension (the north_rule): one vectorized
+  accumulate-then-select pass per task — decode, score every posting, sum
+  per (term set, doc), then select each set's top-k (the group → aggregate
+  → select shape of *Cache-Efficient Top-k Aggregation over High
+  Cardinality Large Datasets*, VLDB 2023);
 * ``extract``/``display`` — the reference's decompression walks
   (fm/fm_extract.c:21-98) collapse to ``substring`` projections because the
   text is a stored column.
@@ -49,19 +49,24 @@ from full_text_index_spark.index import InvertedIndex
 # final ranking rounds scores to 6 decimals before ordering so rank identity
 # is robust to <=1-ulp libm differences between engines (SURVEY.md §7(a))
 RANK_ROUND = 6
-_EPS = 10.0 ** (-RANK_ROUND)
 
 # bm25_topk materializes the (qid, term) batch driver-side (it is a query
 # workload, small by construction); this cap turns an accidental 10^7-row
 # "query" table into a fast, explicit error instead of a driver OOM
 MAX_QUERY_BATCH_ROWS = 1_000_000
 
+# the BM25 kernel scores its term sets in chunks of at most this many
+# (set, doc, contribution) triples, cut at set boundaries, and sums a chunk
+# on a dense grid only when the grid is at most twice the triples: a
+# task's kernel memory is bounded by the chunk, not by sets × postings
+KERNEL_TRIPLE_BUDGET = 1 << 21
+
 
 def _whole_partition(kernel):
     """Wrap a pandas kernel for `mapInPandas` so it sees the task's WHOLE
     input at once: Arrow delivers a partition as multiple batches, and a
-    kernel whose groups must never split across batches (the bm25 MaxScore
-    kernel, the best-window sweep) has to concatenate them first."""
+    kernel whose groups must never split across batches (the bm25 kernel,
+    the best-window sweep) has to concatenate them first."""
     def run(batches):
         pdfs = [b for b in batches]
         if pdfs:
@@ -135,7 +140,6 @@ def bm25_topk(
     queries: DataFrame,
     k: int = 10,
     use_blockmax: bool = True,
-    prune_threshold: int = 4096,
 ) -> DataFrame:
     """Top-k BM25 (k1, b from the index meta) for ``queries(qid, terms)``.
 
@@ -143,8 +147,10 @@ def bm25_topk(
     (qid, rank, doc_id, score) with rank 1..k, tie-break (score@6 desc,
     doc_id asc). Queries whose terms all miss the vocabulary return no rows
     (the reference's "char not in file" path, fm/fm_search.c:204-211).
+    ``use_blockmax`` picks the scorer: True runs the one-pass Python kernel
+    (``_make_bm25_kernel``), False the JVM join-and-aggregate path
+    (``_bm25_scored_exact``); both return the same rows.
     """
-    spark = index.spark
     k1, b, avgdl = index.k1, index.b, index.avgdl
 
     # broadcast the QUERY side, never the dictionary: term_stats is
@@ -168,20 +174,15 @@ def bm25_topk(
     if not use_blockmax:
         return _rank_topk(_bm25_scored_exact(index, qterms), k)
 
-    # block-max MaxScore path.  The query batch is SMALL (it fits the
-    # driver by construction) and the postings are BIG — so the query
-    # table rides into the kernel as closure state and each posting row is
-    # Arrow-shipped exactly ONCE per segment, never joined against the
-    # queries (a qid×postings join would duplicate every blob once per
-    # query that uses its term — a ~|batch|× IPC amplification that
-    # dominated wall time at 2000 queries).  Impact bounds are derived
-    # HERE (JVM zip_with) from the raw per-block (max_tf, min_dl) so they
-    # are admissible under the current avgdl even after incremental
-    # appends shifted it.  rid: unique per posting ROW (a term may own
-    # several rows — one per generation); it keys the kernel decode cache.
-    # The batch fits the driver BY CONSTRUCTION (it is a query workload);
-    # the limit+check makes a mis-routed huge "query" table fail fast with
-    # a clear message instead of OOMing the driver (VERDICT r02 #5).
+    # kernel path.  The query batch is SMALL (it fits the driver by
+    # construction) and the postings are BIG — so the term sets ride into
+    # the kernel as closure state and each posting row is Arrow-shipped
+    # exactly ONCE, never joined against the queries (a qid×postings join
+    # would duplicate every blob once per query that uses its term — a
+    # ~|batch|× IPC amplification that dominated wall time at 2000
+    # queries).  The limit+check makes a mis-routed huge "query" table fail
+    # fast with a clear message instead of OOMing the driver (VERDICT r02
+    # #5).
     qterms_pd = qterms.limit(MAX_QUERY_BATCH_ROWS + 1).toPandas()
     if len(qterms_pd) > MAX_QUERY_BATCH_ROWS:
         raise ValueError(
@@ -197,36 +198,24 @@ def bm25_topk(
     # repeat patterns heavily).
     qid_sid_pd, sets_pd = _term_sets(qterms_pd)
     terms = sorted(qterms_pd["term"].unique().tolist())
-    matched = _matched_postings(index, terms)
-    mp = matched.withColumn("rid", F.monotonically_increasing_id()).select(
-        "segment", "term", "rid", "df_seg",
-        "doc_blob", "tf_blob", "dl_blob",
-        index.impact_bound(F.col("max_tf"), F.col("min_dl")).alias("max_impact"),
+    mp = _matched_postings(index, terms).select(
+        "segment", "term", "doc_blob", "tf_blob", "dl_blob"
     )
-    # tombstones ride the kernel's OWN input as per-segment blob rows
-    # (rid = −1) instead of closure state: fully distributed, no driver
+    # tombstones ride the kernel's OWN input as per-segment blob rows with
+    # a null term instead of closure state: fully distributed, no driver
     # size cap (VERDICT r04 #3).  With no tombstones, mp is untouched —
     # the plan is identical to the tombstone-free one.
     from full_text_index_spark.deletes import tombstone_segment_blobs
 
     tomb = tombstone_segment_blobs(index)
     if tomb is not None:
-        tomb_cols = []
-        for f in mp.schema.fields:
-            if f.name == "segment":
-                tomb_cols.append(F.col("segment").cast(f.dataType).alias(f.name))
-            elif f.name == "doc_blob":
-                tomb_cols.append(F.col("doc_blob").cast(f.dataType).alias(f.name))
-            elif f.name == "rid":
-                tomb_cols.append(F.lit(-1).cast(f.dataType).alias(f.name))
-            else:
-                tomb_cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-        mp = mp.unionByName(tomb.select(*tomb_cols))
+        seg_type = mp.schema["segment"].dataType
+        mp = mp.unionByName(
+            tomb.withColumn("segment", F.col("segment").cast(seg_type)),
+            allowMissingColumns=True,
+        )
 
-    kernel = _make_maxscore_kernel(
-        k1=k1, b=b, avgdl=avgdl, k=k, sets_pd=sets_pd,
-        prune_threshold=prune_threshold,
-    )
+    kernel = _make_bm25_kernel(k1=k1, b=b, avgdl=avgdl, k=k, sets_pd=sets_pd)
     # each kernel task takes several whole segments (docs live in exactly
     # one segment, so a segment-routed bucket keeps a doc's contributions
     # together and the kernel's math is unchanged)
@@ -311,303 +300,158 @@ def _decode_postings(postings: DataFrame) -> DataFrame:
     )
 
 
-def _make_maxscore_kernel(k1: float, b: float, avgdl: float, k: int,
-                          sets_pd: pd.DataFrame,
-                          prune_threshold: int = 4096):
-    """Per-segment scorer: bulk term-at-a-time for ordinary queries,
-    block-max MaxScore pruning for heavy ones.
+def _ranges(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """The aranges ``[starts[i], starts[i] + lens[i])``, concatenated."""
+    ends = np.cumsum(lens)
+    total = int(ends[-1]) if len(ends) else 0
+    return np.arange(total, dtype=np.int64) + np.repeat(starts - ends + lens, lens)
 
-    The query batch (qid, term, idf) arrives as CLOSURE state — each
-    segment's posting rows are Arrow-shipped once, never duplicated per
-    query (the 100 TB-relevant property: IPC volume scales with the index
-    slice touched, not index × batch size).
 
-    Bulk path: every query whose candidate volume (Σ df_seg of its terms in
-    this segment) is below ``prune_threshold`` is scored together in ONE
-    vectorized pass — decode each posting row once, concatenate
-    (qid, doc, contribution) triples across all such queries, hash-aggregate
-    in C (pandas groupby), top-k by one lexsort.  This amortizes all Python
-    overhead across the batch (the analog of the reference's batched locate
-    with shared Ψ-cycles, csa-sada/comparray4.c:816-877).
+def _first_k(group: np.ndarray, q: np.ndarray, k: int) -> np.ndarray:
+    """Positions of the first ``k`` entries of every group in (group asc,
+    q desc, position asc) order: one stable argsort on one int64 key.
+    ``group`` and ``q`` are non-negative int64."""
+    span = int(q.max()) + 1
+    if (int(group.max()) + 1) * span > np.iinfo(np.int64).max:
+        q = np.unique(q, return_inverse=True)[1]  # dense ranks keep the order
+        span = int(q.max()) + 1
+    o = np.argsort(group * span + (span - 1 - q), kind="stable")
+    g = group[o]
+    run = np.flatnonzero(np.r_[True, g[1:] != g[:-1]])
+    rank = np.arange(len(o)) - np.repeat(run, np.diff(np.r_[run, len(o)]))
+    return o[rank < k]
 
-    Dense path (heavy sets covering most of the segment): one score vector
-    over the segment's doc universe per term, vector adds per set, top-k by
-    argpartition — θ cannot prune a term every document contains, so
-    exhaustive-but-cache-resident beats MaxScore there.
 
-    MaxScore path (heavy sets with selective terms): process terms in
-    descending max-score; once the summed max-scores of the remaining terms
-    cannot lift any unseen document past the current k-th score (θ),
-    remaining terms are *non-essential* — only surviving candidates are
-    looked up in their already-decoded rows.
+def _select_topk(group: np.ndarray, q: np.ndarray, k: int) -> np.ndarray:
+    """``_first_k`` of a ``group``-sorted input, sorting only what can win:
+    a group's k-th best maximum over blocks of 64 consecutive members is at
+    most its k-th best ``q``, so the members below it are dropped before
+    the sort (exact, whatever the order of ``q``)."""
+    if k < 1:
+        return np.empty(0, dtype=np.int64)
+    block = 64
+    starts = np.flatnonzero(np.r_[True, group[1:] != group[:-1]])
+    n = np.diff(np.r_[starts, len(q)])
+    nb = -(-n // block)
+    first_block = np.cumsum(nb) - nb
+    b_run = np.repeat(np.arange(len(n)), nb)
+    b_max = np.maximum.reduceat(
+        q, starts[b_run] + block * (np.arange(len(b_run)) - first_block[b_run])
+    )
+    top = _first_k(b_run, b_max, k)
+    cnt = np.minimum(nb, k)
+    floor = np.where(cnt == k, b_max[top[np.cumsum(cnt) - 1]], -1)
+    keep = np.flatnonzero(q >= np.repeat(floor, n))
+    return keep[_first_k(group[keep], q[keep], k)]
+
+
+def _make_bm25_kernel(k1: float, b: float, avgdl: float, k: int,
+                      sets_pd: pd.DataFrame):
+    """Per-task scorer: the top-k docs of every term set over the task's
+    posting rows, in one accumulate-then-select pass.
+
+    The distinct term sets ``(sid, term, idf)`` arrive as CLOSURE state —
+    each posting row is Arrow-shipped once, never duplicated per query (IPC
+    volume scales with the index slice touched, not index × batch size).
+    Rows with a null ``term`` carry the task's tombstones as gap-encoded
+    ``doc_blob``s.
+
+    * decode every row once (one varbyte pass per stream) and compute every
+      posting's contribution; drop tombstoned docs;
+    * gather (set, doc, contribution) triples through the set→term
+      incidence, in ascending term order within each set;
+    * sum each (set, doc) cell sequentially in that order — the cells'
+      int64 key indexes a dense (set × doc) grid when the triples fill at
+      least half of it, else one stable sort groups them — so every score
+      is the same float, however the sets are chunked;
+    * select each set's top-k by (round(score, RANK_ROUND) desc, doc_id
+      asc) with one stable argsort on an int64 key (``_select_topk``).
+
+    Both keys are built from task-local dense ranks, never from raw
+    doc_ids (which may reach 2⁶³−1).  Sets are scored in chunks cut at set
+    boundaries, each holding at most ``KERNEL_TRIPLE_BUDGET`` triples
+    unless a single set is larger.
     """
-    idf_by_term: dict[str, float] = {}
-    terms_by_sid: dict[int, tuple] = {}
-    for r in sets_pd.itertuples(index=False):
-        idf_by_term[r.term] = float(r.idf)
-        terms_by_sid.setdefault(int(r.sid), ())
-        terms_by_sid[int(r.sid)] = terms_by_sid[int(r.sid)] + (r.term,)
-
-    def norm_of(dls: np.ndarray) -> np.ndarray:
-        return k1 * (1.0 - b + b * dls / avgdl)
+    sets_pd = sets_pd.reindex(columns=["sid", "term", "idf"]).sort_values(
+        ["sid", "term"], kind="stable"
+    )
+    vocab, pair_term = np.unique(
+        sets_pd["term"].to_numpy(dtype=object), return_inverse=True
+    )
+    vocab_index = pd.Index(vocab)
+    idf = np.zeros(len(vocab), dtype=np.float64)
+    idf[pair_term] = sets_pd["idf"].to_numpy(dtype=np.float64)
+    sids, pair_set = np.unique(
+        sets_pd["sid"].to_numpy(dtype=np.int64), return_inverse=True
+    )
+    # pair index where each set starts, plus the end
+    set_bounds = np.searchsorted(pair_set, np.arange(len(sids) + 1))
 
     def kernel(left: pd.DataFrame) -> pd.DataFrame:
-        if len(left) == 0:
-            return pd.DataFrame(columns=["sid", "doc_id", "score"])
-
-        # tombstones arrive IN-BAND as rid<0 rows carrying a per-segment
-        # gap-encoded doc_blob (deletes.tombstone_segment_blobs) — routed
-        # here by the same pmod(doc_id, n_segments) rule as the postings,
-        # so the mask set is partition-local and never driver-bounded
-        # (VERDICT r04 #3: the old 2M closure cap is gone)
-        rid_np = left["rid"].to_numpy()
-        tomb_sel = rid_np < 0
-        deleted: np.ndarray | None = None
-        if tomb_sel.any():
-            deleted = np.unique(decode_rows(left.loc[tomb_sel, "doc_blob"]).doc)
-            left = left.loc[~tomb_sel].reset_index(drop=True)
-            if len(left) == 0:
-                return pd.DataFrame(columns=["sid", "doc_id", "score"])
-
-        rows = list(left.itertuples(index=False))
-        term_rows: dict[str, list] = {}
-        for row in rows:
-            term_rows.setdefault(row.term, []).append(row)
-        df_by_term = {
-            t: sum(r.df_seg for r in rs) for t, rs in term_rows.items()
-        }
-        # per-SET candidate volume IN THIS SEGMENT
-        bulk_sets, heavy_sets = [], []
-        for sid, ts in terms_by_sid.items():
-            v = sum(df_by_term.get(t, 0) for t in ts)
-            if v == 0:
-                continue
-            (bulk_sets if v <= prune_threshold else heavy_sets).append(sid)
-
-        # decode + per-posting contribution once per posting ROW, shared
-        # across every query in the batch that touches it.  Postings are
-        # self-contained: the doclen stream is packed alongside tf.  Every
-        # row is decoded, in ONE varbyte pass per stream over the whole
-        # task (profiled: per-blob decode overhead was ~45% of kernel CPU
-        # at 10^4 rows/task): each row's term belongs to a set with v > 0
-        # here, which the bulk or the dense/MaxScore path decodes in full.
-        p = decode_rows(left["doc_blob"], left["tf_blob"], left["dl_blob"])
-        v_ends = np.cumsum(p.counts)
-        v_starts = v_ends - p.counts
-        tfs_all = p.tf.astype(np.float64)
-        idf_arr = np.fromiter(
-            (idf_by_term[t] for t in left["term"]),
-            dtype=np.float64, count=len(rows),
+        codes = vocab_index.get_indexer(left["term"])
+        live = codes >= 0
+        p = decode_rows(left["doc_blob"][live], left["tf_blob"][live],
+                        left["dl_blob"][live])
+        term = np.repeat(codes[live], p.counts)
+        tf = p.tf.astype(np.float64)
+        contrib = (
+            idf[term] * (k1 + 1.0) * tf
+            / (tf + k1 * (1.0 - b + b * p.dl.astype(np.float64) / avgdl))
         )
-        contrib_all = (
-            np.repeat(idf_arr, p.counts) * (k1 + 1.0) * tfs_all
-            / (tfs_all + norm_of(p.dl.astype(np.float64)))
-        )
-        # tombstone mask at the decode choke point: deleted docs never
-        # enter the cache, so none of bulk/dense/MaxScore can emit them
-        live_all = ~np.isin(p.doc, deleted) if deleted is not None else None
-        row_cache: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-        for i, rid in enumerate(left["rid"].tolist()):
-            s, e = int(v_starts[i]), int(v_ends[i])
-            d_, c_ = p.doc[s:e], contrib_all[s:e]
-            if live_all is not None:
-                m = live_all[s:e]
-                if not m.all():
-                    d_, c_ = d_[m], c_[m]
-            row_cache[rid] = (d_, c_)
+        # postings grouped by term, each term one contiguous run
+        order = np.argsort(term, kind="stable")
+        tomb = left["term"].isna().to_numpy()
+        if tomb.any():
+            deleted = decode_rows(left["doc_blob"][tomb]).doc
+            order = order[~np.isin(p.doc[order], deleted)]
+        doc, contrib, term = p.doc[order], contrib[order], term[order]
+        t_len = np.bincount(term, minlength=len(vocab))
+        t_start = np.cumsum(t_len) - t_len
+        udoc, doc_rank = np.unique(doc, return_inverse=True)
+        n_doc = len(udoc)
 
-        frames = []
-        if bulk_sets:
-            # invert: term → bulk sids that use it (fan the decoded arrays
-            # out per distinct SET, never per query)
-            bulk_by_term: dict[str, list[int]] = {}
-            for sid in bulk_sets:
-                for t in terms_by_sid[sid]:
-                    if t in term_rows:
-                        bulk_by_term.setdefault(t, []).append(sid)
-            qs, ds, cs = [], [], []
-            for t, sids_t in bulk_by_term.items():
-                for row in term_rows[t]:
-                    docs, contrib = row_cache[row.rid]
-                    for sid in sids_t:
-                        qs.append(np.full(len(docs), sid, dtype=np.int64))
-                        ds.append(docs)
-                        cs.append(contrib)
-            flat = pd.DataFrame(
-                {
-                    "sid": np.concatenate(qs),
-                    "doc_id": np.concatenate(ds),
-                    "c": np.concatenate(cs),
-                }
-            )
-            scored = flat.groupby(["sid", "doc_id"], sort=False, as_index=False)[
-                "c"
-            ].sum()
-            q = scored["sid"].to_numpy()
-            d = scored["doc_id"].to_numpy()
-            s = scored["c"].to_numpy()
-            order = np.lexsort((d, -np.round(s, RANK_ROUND), q))
-            q, d, s = q[order], d[order], s[order]
-            # first k rows of each sid run (sids are contiguous after sort)
-            if len(q):
-                change = np.empty(len(q), dtype=bool)
-                change[0] = True
-                change[1:] = q[1:] != q[:-1]
-                run_rank = np.arange(len(q)) - np.maximum.accumulate(
-                    np.where(change, np.arange(len(q)), 0)
-                )
-                keep = run_rank < k
-                frames.append(
-                    pd.DataFrame(
-                        {"sid": q[keep], "doc_id": d[keep], "score": s[keep]}
-                    )
-                )
-
-        out_q, out_d, out_s = [], [], []
-
-        # ---- dense term-at-a-time for heavy sets that touch most of the
-        # segment (head terms).  One float vector over the segment's doc
-        # universe per term; a set's scores are vector adds; top-k via
-        # argpartition + exact tie policy.  Cache-resident (universe ×
-        # 8 bytes) and cheaper than MaxScore whenever candidate volume ≈
-        # universe, because θ cannot prune a term that every doc contains.
-        universe: np.ndarray | None = None
-        dense_by_term: dict[str, np.ndarray] = {}
-        maxscore_sets: list[tuple] = []
-        dense_sets: list[tuple] = []
-        if heavy_sets:
-            # universe covers only the HEAVY sets' terms — decoding every
-            # term in the batch here would force full decode of rows the
-            # bulk path never touches and blocks MaxScore would have
-            # skipped (decode results are row-cached, so nothing decodes
-            # twice either way)
-            heavy_terms = sorted({
-                t for sid in heavy_sets for t in terms_by_sid[sid]
-                if t in term_rows
-            })
-            u_arrs = [row_cache[r.rid][0]
-                      for t in heavy_terms for r in term_rows[t]]
-            universe = (np.unique(np.concatenate(u_arrs)) if u_arrs
-                        else np.empty(0, dtype=np.int64))
-            for sid in heavy_sets:
-                if not any(t in term_rows for t in terms_by_sid[sid]):
-                    continue  # no postings in this segment -> no scores
-                v = sum(df_by_term.get(t, 0) for t in terms_by_sid[sid])
-                (dense_sets if v >= 0.25 * len(universe) else
-                 maxscore_sets).append(sid)
-
-        def dense_of(t: str) -> np.ndarray:
-            vec = dense_by_term.get(t)
-            if vec is None:
-                vec = np.zeros(len(universe), dtype=np.float64)
-                for row in term_rows[t]:
-                    docs, contrib = row_cache[row.rid]
-                    vec[np.searchsorted(universe, docs)] += contrib
-                dense_by_term[t] = vec
-            return vec
-
-        for sid in dense_sets:
-            present = [t for t in terms_by_sid[sid] if t in term_rows]
-            if len(present) == 1 and len(term_rows[present[0]]) == 1:
-                # single-term, single-generation: the decoded posting row IS
-                # the per-doc score list — top-k directly on it, no dense
-                # vector (saves ~3×universe memory traffic per head set)
-                docs_1, s_1 = row_cache[term_rows[present[0]][0].rid]
-                if len(s_1) > k:
-                    part = np.argpartition(-s_1, k - 1)[:k]
-                    thr = np.round(s_1[part], RANK_ROUND).min()
-                    cand = np.flatnonzero(np.round(s_1, RANK_ROUND) >= thr)
+        lens = t_len[pair_term]
+        before = np.concatenate(([0], np.cumsum(lens)))[set_bounds]
+        out_sid, out_doc, out_score = [], [], []
+        lo = 0
+        while lo < len(sids):
+            hi = max(lo + 1, int(np.searchsorted(
+                before, before[lo] + KERNEL_TRIPLE_BUDGET, "right")) - 1)
+            pa, pb = set_bounds[lo], set_bounds[hi]
+            if before[hi] > before[lo]:
+                idx = _ranges(t_start[pair_term[pa:pb]], lens[pa:pb])
+                key = (np.repeat((pair_set[pa:pb] - lo) * n_doc, lens[pa:pb])
+                       + doc_rank[idx])
+                c = contrib[idx]
+                n_cells = (hi - lo) * n_doc
+                if n_cells <= 2 * len(key):
+                    # every contribution is > 0 (idf > 0, tf ≥ 1), so a
+                    # grid cell holds a score iff it is non-zero
+                    score = np.bincount(key, weights=c, minlength=n_cells)
+                    cell = np.flatnonzero(score)
+                    score = score[cell]
                 else:
-                    cand = np.arange(len(s_1))
-                key = cand[
-                    np.lexsort((docs_1[cand], -np.round(s_1[cand], RANK_ROUND)))
-                ][:k]
-                out_q.append(np.full(len(key), sid, dtype=np.int64))
-                out_d.append(docs_1[key])
-                out_s.append(s_1[key])
-                continue
-            arrs = [dense_of(t) for t in present]
-            s = arrs[0] if len(arrs) == 1 else np.sum(arrs, axis=0)
-            pos = np.flatnonzero(s > 0.0)
-            if len(pos) == 0:
-                continue
-            if len(pos) > k:
-                part = pos[np.argpartition(-s[pos], k - 1)[:k]]
-                thr = np.round(s[part], RANK_ROUND).min()
-                pos = pos[np.round(s[pos], RANK_ROUND) >= thr]
-            key = pos[np.lexsort((universe[pos], -np.round(s[pos], RANK_ROUND)))][:k]
-            n = len(key)
-            out_q.append(np.full(n, sid, dtype=np.int64))
-            out_d.append(universe[key])
-            out_s.append(s[key])
-
-        for sid in maxscore_sets:
-            rlist = [r for t in terms_by_sid[sid] for r in term_rows.get(t, [])]
-            idf = np.array(
-                [idf_by_term[r.term] for r in rlist], dtype=np.float64
-            )
-            mi = np.array([r.max_impact for r in rlist], dtype=np.float64)
-            ms = idf * (k1 + 1.0) * mi
-            order = np.argsort(-ms, kind="stable")
-            rows_q = [rlist[i] for i in order]
-            ms = ms[order]
-            suffix = np.concatenate([np.cumsum(ms[::-1])[::-1], [0.0]])
-
-            acc_docs = np.empty(0, dtype=np.int64)
-            acc_scores = np.empty(0, dtype=np.float64)
-            theta = -np.inf
-            for i, row in enumerate(rows_q):
-                # every row was decoded above, so a non-essential term is
-                # a lookup of the surviving candidates in its decoded row
-                docs, contrib = row_cache[row.rid]
-                if suffix[i] < theta - _EPS:
-                    keep = acc_scores + suffix[i] >= theta - _EPS
-                    cand = acc_docs[keep]
-                    if len(cand) == 0:
-                        break
-                    pos = np.searchsorted(docs, cand)
-                    pos = pos[pos < len(docs)]
-                    hit = np.unique(pos[np.isin(docs[pos], cand)])
-                    docs, contrib = docs[hit], contrib[hit]
-                    if len(docs) == 0:
-                        continue
-                acc_docs, acc_scores = _merge_acc(acc_docs, acc_scores, docs, contrib)
-                if len(acc_scores) >= k:
-                    theta = np.partition(acc_scores, len(acc_scores) - k)[
-                        len(acc_scores) - k
-                    ]
-            if len(acc_docs) == 0:
-                continue
-            n = min(k, len(acc_docs))
-            # tie policy: score rounded @6 desc, doc_id asc
-            key = np.lexsort((acc_docs, -np.round(acc_scores, RANK_ROUND)))[:n]
-            out_q.append(np.full(n, sid, dtype=np.int64))
-            out_d.append(acc_docs[key])
-            out_s.append(acc_scores[key])
-        if out_q:
-            frames.append(
-                pd.DataFrame(
-                    {
-                        "sid": np.concatenate(out_q),
-                        "doc_id": np.concatenate(out_d),
-                        "score": np.concatenate(out_s),
-                    }
-                )
-            )
-        if not frames:
-            return pd.DataFrame(columns=["sid", "doc_id", "score"])
-        return pd.concat(frames, ignore_index=True)
+                    o = np.argsort(key, kind="stable")
+                    key = key[o]
+                    new = np.r_[True, key[1:] != key[:-1]]
+                    cell = key[new]
+                    score = np.bincount(np.cumsum(new) - 1, weights=c[o])
+                cset = cell // n_doc
+                q = np.rint(score * 10.0 ** RANK_ROUND).astype(np.int64)
+                top = _select_topk(cset, q - q.min(), k)
+                out_sid.append(sids[lo + cset[top]])
+                out_doc.append(udoc[cell[top] % n_doc])
+                out_score.append(score[top])
+            lo = hi
+        if not out_sid:
+            return pd.DataFrame({"sid": np.empty(0, np.int64),
+                                 "doc_id": np.empty(0, np.int64),
+                                 "score": np.empty(0, np.float64)})
+        return pd.DataFrame({"sid": np.concatenate(out_sid),
+                             "doc_id": np.concatenate(out_doc),
+                             "score": np.concatenate(out_score)})
 
     return kernel
-
-
-def _merge_acc(acc_docs, acc_scores, docs, contrib):
-    d = np.concatenate([acc_docs, docs])
-    s = np.concatenate([acc_scores, contrib])
-    uniq, inv = np.unique(d, return_inverse=True)
-    sums = np.zeros(len(uniq), dtype=np.float64)
-    np.add.at(sums, inv, s)
-    return uniq, sums
 
 
 # ---------------------------------------------------------------------------

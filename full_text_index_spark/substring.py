@@ -551,7 +551,7 @@ def _make_dist_verify_kernel():
     probe rows (both routed to the same shuffle partition by their
     (term, segment) hash): for each (term, segment) group, decode ONLY the
     posting blocks containing a probed doc (block directory → searchsorted,
-    the same skip machinery the BM25 MaxScore path uses) and confirm
+    ``codec.candidate_blocks``) and confirm
     (doc, pos) membership.  Emits one row per confirmed check, plus one
     stats row (slot = −1, cpos = decoded bytes) per task so plan benchmarks
     can report decoded volume.  Fully distributed: the candidate set never
@@ -678,7 +678,7 @@ def substring_locate(index: InvertedIndex, patterns: list[str],
     Default plan is RAREST-GRAM-FIRST (VERDICT r02 #2): candidates come
     from decoding only the least-frequent window gram of each pattern; the
     remaining grams of a greedy char-cover are verified by BLOCK-TARGETED
-    position lookups (the block directory already used by BM25 MaxScore),
+    position lookups (the posting rows' block directory),
     so a pattern containing a head gram ("th ", " a ") never decodes that
     gram's corpus-wide position list — decode cost is
     O(cf(rarest gram) + touched blocks), the Spark analog of backward

@@ -81,21 +81,6 @@ def test_blockmax_equals_exact(tiny_index, query_set):
     pd.testing.assert_frame_equal(a, b)
 
 
-def test_maxscore_pruning_path_equals_exact(tiny_index, query_set):
-    """prune_threshold=0 forces EVERY query through the block-max MaxScore
-    pruning path — must still be rank-identical to the exact path."""
-    spark = tiny_index.spark
-    qdf = spark.createDataFrame(
-        [(q, t) for q, t in query_set], "qid long, terms array<string>"
-    )
-    a = (
-        bm25_topk(tiny_index, qdf, k=10, use_blockmax=True, prune_threshold=0)
-        .toPandas().sort_values(["qid", "rank"]).reset_index(drop=True)
-    )
-    b = _run_engine(tiny_index, query_set, use_blockmax=False)
-    pd.testing.assert_frame_equal(a, b)
-
-
 def test_absent_query_returns_empty(tiny_index):
     spark = tiny_index.spark
     qdf = spark.createDataFrame([(0, ["absentterm"])], "qid long, terms array<string>")
@@ -248,3 +233,181 @@ def test_term_sets_match_the_per_qid_loop(n_queries):
     assert sets.equals(want_sets)
     if n_queries > 1:
         assert qid_sid["sid"].nunique() < len(qid_sid)
+
+
+# ---------------------------------------------------------------------------
+# the BM25 kernel alone (no Spark): per-set top-k vs a brute-force scorer
+# ---------------------------------------------------------------------------
+
+_K1, _B, _AVGDL = 1.2, 0.75, 7.0
+
+
+def _row(term, docs, tfs, dls, segment=0):
+    from full_text_index_spark.codec import encode_gaps, varbyte_encode
+
+    return {"segment": segment, "term": term, "doc_blob": encode_gaps(docs),
+            "tf_blob": varbyte_encode(tfs), "dl_blob": varbyte_encode(dls)}
+
+
+def _tomb(docs, segment=0):
+    from full_text_index_spark.codec import encode_gaps
+
+    return {"segment": segment, "term": None, "doc_blob": encode_gaps(docs),
+            "tf_blob": None, "dl_blob": None}
+
+
+def _sets(term_sets, idf):
+    return pd.DataFrame([{"sid": sid, "term": t, "idf": idf[t]}
+                         for sid, ts in enumerate(term_sets)
+                         for t in sorted(set(ts))],
+                        columns=["sid", "term", "idf"])
+
+
+def _brute_topk(rows, sets_pd, k):
+    """Score every (set, doc) by summing its terms' contributions in
+    ascending term order; keep (score@6 desc, doc_id asc) top-k."""
+    from full_text_index_spark.codec import decode_rows
+
+    deleted, postings = set(), {}
+    for r in rows:
+        if r["term"] is None:
+            deleted |= set(decode_rows([r["doc_blob"]]).doc.tolist())
+            continue
+        p = decode_rows([r["doc_blob"]], [r["tf_blob"]], [r["dl_blob"]])
+        for d, tf, dl in zip(p.doc.tolist(), p.tf.tolist(), p.dl.tolist()):
+            postings.setdefault(r["term"], {})[d] = (tf, dl)
+    out = []
+    for sid, grp in sets_pd.groupby("sid"):
+        scores = {}
+        for t, idf in sorted(zip(grp["term"], grp["idf"])):
+            for d, (tf, dl) in postings.get(t, {}).items():
+                if d not in deleted:
+                    c = idf * (_K1 + 1.0) * tf / (
+                        tf + _K1 * (1.0 - _B + _B * dl / _AVGDL))
+                    scores[d] = scores.get(d, 0.0) + c
+        ranked = sorted(scores.items(), key=lambda x: (-np.round(x[1], 6), x[0]))
+        out += [(sid, d, s) for d, s in ranked[:k]]
+    return pd.DataFrame(out, columns=["sid", "doc_id", "score"])
+
+
+def _run_kernel(rows, sets_pd, k):
+    from full_text_index_spark.query import _make_bm25_kernel
+
+    kernel = _make_bm25_kernel(k1=_K1, b=_B, avgdl=_AVGDL, k=k, sets_pd=sets_pd)
+    return kernel(pd.DataFrame(rows, columns=["segment", "term", "doc_blob",
+                                              "tf_blob", "dl_blob"]))
+
+
+def _canon(df):
+    return (df.astype({"sid": "int64", "doc_id": "int64", "score": "float64"})
+            .sort_values(["sid", "doc_id"]).reset_index(drop=True))
+
+
+def _assert_kernel_matches_brute(rows, sets_pd, k):
+    got = _canon(_run_kernel(rows, sets_pd, k))
+    want = _canon(_brute_topk(rows, sets_pd, k))
+    assert got[["sid", "doc_id"]].values.tolist() == \
+        want[["sid", "doc_id"]].values.tolist()
+    # same contributions, each (set, doc) summed from 0.0 in ascending term
+    # order: the scores are the same floats, not just close ones
+    np.testing.assert_array_equal(got["score"], want["score"])
+    return got
+
+
+def _kernel_case(seed):
+    """Posting rows for a head term (every doc), tail terms, one term split
+    over two generation rows, tombstones, and sets sharing the head."""
+    rng = np.random.default_rng(seed)
+    n_docs = 60
+    rows = [_row("head", np.arange(n_docs), np.ones(n_docs, int),
+                 np.full(n_docs, 7))]          # every doc ties on "head"
+    for t in ["t0", "t1", "t2", "t3"]:
+        docs = np.sort(rng.choice(n_docs, int(rng.integers(1, 30)), False))
+        rows.append(_row(t, docs, rng.integers(1, 4, len(docs)),
+                         rng.integers(3, 12, len(docs))))
+    # generation rows: "gen" in docs 0-19 and, appended later, 40-59
+    for lo in (0, 40):
+        docs = np.arange(lo, lo + 20)
+        rows.append(_row("gen", docs, rng.integers(1, 4, 20),
+                         rng.integers(3, 12, 20)))
+    rows.append(_tomb(np.sort(rng.choice(n_docs, 6, False))))
+    rows = [rows[i] for i in rng.permutation(len(rows))]
+    idf = {t: 0.5 + i / 3 for i, t in
+           enumerate(["absent", "gen", "head", "t0", "t1", "t2", "t3"])}
+    term_sets = [["head"], ["head", "t0"], ["head", "t1"], ["head", "t1", "t2"],
+                 ["gen"], ["gen", "t3"], ["t0", "t1", "t2", "t3"],
+                 ["absent"], ["absent", "t2"], ["head", "gen", "t0"], ["t0"]]
+    return rows, _sets(term_sets, idf)
+
+
+@pytest.mark.parametrize("seed", [0, 1, 2])
+@pytest.mark.parametrize("k", [0, 1, 3, 10, 200])
+def test_kernel_matches_brute_force(seed, k):
+    """Ties straddle the k-th score (the head term scores every doc alike),
+    many sets share the head term, one term has two generation rows, some
+    docs are tombstoned, one set's terms are all absent and k=200 exceeds
+    every set's candidate count."""
+    rows, sets_pd = _kernel_case(seed)
+    got = _assert_kernel_matches_brute(rows, sets_pd, k)
+    assert 7 not in set(got["sid"])                  # all-absent set: no rows
+    if k == 3:
+        head_only = got[got["sid"] == 0]["doc_id"].tolist()
+        assert len(head_only) == 3                  # 54 live docs tie
+        assert head_only == sorted(head_only)
+    if k == 200:
+        assert (got.groupby("sid").size() < k).all()
+
+
+def test_kernel_edge_inputs():
+    rows, sets_pd = _kernel_case(0)
+    tomb_only = [r for r in rows if r["term"] is None]
+    assert len(_run_kernel(tomb_only, sets_pd, 10)) == 0
+    assert len(_run_kernel(rows, pd.DataFrame([]), 10)) == 0
+    assert len(_run_kernel(tomb_only, pd.DataFrame([]), 10)) == 0
+
+
+@pytest.mark.parametrize("budget", [1, 3, 40])
+def test_kernel_chunking_is_invisible(monkeypatch, budget):
+    """Cutting the sets into chunks of a few triples (which also moves sets
+    between the dense-grid and the sorted sum) changes no bit of the
+    output, and doc_ids near 2**63 - 1 do not overflow the int64 keys."""
+    from full_text_index_spark import query
+
+    rows, sets_pd = _kernel_case(5)
+    big = 2 ** 63 - 2
+    rows.append(_row("t0", np.array([big - 5, big]), np.array([6, 9]),
+                     np.array([3, 2]), segment=1))
+    rows.append(_row("head", np.array([big - 5]), np.array([2]),
+                     np.array([4]), segment=1))
+    # a term over 1000 more docs leaves the (set × doc) grid sparse, so the
+    # whole batch is summed by the sorted path and the small chunks mostly
+    # on the grid
+    rows.append(_row("wide", np.arange(1000, 2000), np.ones(1000, int),
+                     np.full(1000, 5)))
+    sets_pd = pd.concat([sets_pd, _sets([["wide"]], {"wide": 0.7}).assign(sid=99)])
+    whole = _assert_kernel_matches_brute(rows, sets_pd, 4)
+    assert big in set(whole["doc_id"]) and big - 5 in set(whole["doc_id"])
+    monkeypatch.setattr(query, "KERNEL_TRIPLE_BUDGET", budget)
+    pd.testing.assert_frame_equal(_canon(_run_kernel(rows, sets_pd, 4)), whole,
+                                  check_exact=True)
+
+
+def test_select_topk_matches_a_full_sort():
+    """The block-maximum prefilter drops nothing that a full sort would
+    keep: groups of every size, heavy ties, and q values whose int64
+    (group, q) key would overflow."""
+    from full_text_index_spark.query import _select_topk
+
+    rng = np.random.default_rng(3)
+    sizes = rng.integers(1, 400, 300)
+    group = np.repeat(np.arange(len(sizes)), sizes) * 7
+    for q in (rng.integers(0, 20, len(group)),
+              rng.integers(0, 2 ** 62, len(group))):
+        for k in (1, 5, 70):
+            taken: dict[int, int] = {}
+            want = []
+            for i in sorted(range(len(q)), key=lambda i: (group[i], -q[i], i)):
+                if taken.get(group[i], 0) < k:
+                    taken[group[i]] = taken.get(group[i], 0) + 1
+                    want.append(i)
+            assert _select_topk(group, q, k).tolist() == want

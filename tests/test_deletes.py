@@ -54,7 +54,7 @@ def test_deletes_excluded_everywhere(del_setup, spark):
     assert _bm25_docs(idx, spark) == [0, 1, 2, 4]
     n = delete_docs(idx, [1, 4])
     assert n == 2
-    # both BM25 paths (MaxScore kernel closure mask + exact anti-join)
+    # both BM25 paths (kernel mask on in-band tombstone rows + exact anti-join)
     assert _bm25_docs(idx, spark) == [0, 2]
     assert _bm25_docs(idx, spark, use_blockmax=False) == [0, 2]
     # locate / positions ("alpha" lives in docs 0,1,2,4; 1 and 4 deleted)
