@@ -8,11 +8,11 @@ rescanning the text — rebuilt Spark-first as:
 
 * a SPIMI-style distributed build (tokenize with vectorized Arrow UDFs,
   hash-partition documents into segments, aggregate term postings JVM-side,
-  pack them into delta-gap + varbyte compressed blobs with block-max skip
-  metadata) — the counterpart of the reference's ``build_index`` C API
+  pack them into delta-gap + varbyte compressed blobs with a per-block skip
+  directory) — the counterpart of the reference's ``build_index`` C API
   (reference: utils/interface.h:34) and its two-level bucket layout
   (reference: fm/fm_build.c:580-702);
-* a block-max BM25 top-k query kernel (Okapi BM25, k1=1.2 b=0.75) over the
+* a one-pass BM25 top-k query kernel (Okapi BM25, k1=1.2 b=0.75) over the
   compressed postings — the counterpart of backward search + LF-walk locate
   (reference: ssa/SSA.cpp:242-339);
 * extract/display as projections over the stored text (reference's
@@ -25,7 +25,7 @@ rescanning the text — rebuilt Spark-first as:
 
 Nothing here is a port: no suffix arrays, BWT, wavelet trees or rank/select —
 their *role* (compressed, skip-accessible posting storage) is served by the
-delta-gap + varbyte + block-max parquet layout.
+delta-gap + varbyte + block-directory parquet layout.
 """
 
 from full_text_index_spark.session import get_spark

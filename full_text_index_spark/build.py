@@ -14,16 +14,16 @@ one in-memory byte string (ds/ds.c:73-129), we:
    a Zipf head term becomes ``n_segments`` independent bounded rows instead
    of one unbounded one (the role the reference's superbucket/bucket split
    plays for its occ tables, fm/fm_build.c:580-702);
-3. aggregate doc lengths with one tiny map-side-combined shuffle (a doc's
-   tokens never leave their input partition before combining, so the
-   doc-stats shuffle moves ~one row per document), then join ``doclen``
-   back onto the *document* rows (doc-level join — broadcast below the
-   autoBroadcastJoinThreshold, sort-merge on a cluster) so it rides the
-   explode into the pack shuffle;
+3. compute doc lengths per document (a projection for the built-in
+   streams), and on token indexes — the only ones BM25 scores — join
+   ``doclen`` back onto the *document* rows (doc-level join — broadcast
+   below the autoBroadcastJoinThreshold, sort-merge on a cluster) so it
+   rides the explode into the pack shuffle;
 4. shuffle the RAW token stream once on ``(segment, term)``, sort within
    partitions, and let the Arrow-batched ``mapInPandas`` packer aggregate
-   tf runs AND pack delta-gap + varbyte blobs with block-max skip metadata
-   in the same numpy pass.  This is deliberate bandwidth discipline: an
+   tf runs AND pack delta-gap + varbyte blobs with a block directory in
+   the same numpy pass (``_write_postings``, shared with
+   streaming.append_generation).  This is deliberate bandwidth discipline: an
    aggregate-then-pack pipeline needs TWO wide shuffles plus a persisted
    intermediate (measured r02: the extra materializations were the
    worst-scaling phase of the whole build — memory-bandwidth-bound work
@@ -62,25 +62,17 @@ from full_text_index_spark.tokenizer import TOKEN_SPLIT_REGEX, tokens_col
 K1_DEFAULT = 1.2
 B_DEFAULT = 0.75
 BLOCK_SIZE_DEFAULT = 128
-FORMAT_VERSION = "vbgap-blockmax-v4"  # v4: (generation, segment) layout
+FORMAT_VERSION = "vbgap-v5"  # v5: no block stats; dl stream on token indexes only
 
 POSTINGS_SCHEMA = (
     "segment int, term string, df_seg long, cf_seg long, "
     "doc_blob binary, tf_blob binary, dl_blob binary, pos_blob binary, "
     "doc_bytes int, tf_bytes int, dl_bytes int, pos_bytes int, "
     "block_last array<long>, block_doc_off array<int>, block_tf_off array<int>, "
-    "block_dl_off array<int>, block_pos_off array<int>, "
-    "block_max_tf array<int>, block_min_dl array<int>, max_tf int, min_dl int"
+    "block_pos_off array<int>"
 )
 
-_PACK_COLUMNS = [
-    "segment", "term", "df_seg", "cf_seg",
-    "doc_blob", "tf_blob", "dl_blob", "pos_blob",
-    "doc_bytes", "tf_bytes", "dl_bytes", "pos_bytes",
-    "block_last", "block_doc_off", "block_tf_off", "block_dl_off",
-    "block_pos_off",
-    "block_max_tf", "block_min_dl", "max_tf", "min_dl",
-]
+_PACK_COLUMNS = [field.split()[0] for field in POSTINGS_SCHEMA.split(", ")]
 
 
 @dataclass
@@ -111,140 +103,104 @@ class IndexPaths:
         return os.path.join(self.manifest_dir, f"segment_{segment:05d}.json")
 
 
+def _encoded(values: np.ndarray) -> tuple[bytes, np.ndarray]:
+    """Varbyte bytes of ``values`` and their byte offsets: value i occupies
+    ``off[i]:off[i + 1]``."""
+    return varbyte_encode(values), np.concatenate(
+        ([0], np.cumsum(varbyte_sizes(values)))
+    )
+
+
 def _pack_runs(pdf: pd.DataFrame, block_size: int,
                term_decode=None) -> pd.DataFrame:
-    """Collapse a sorted token-level stream ``(segment, term, doc_id, doclen
-    [, tpos])`` — sorted by (segment, term, doc_id[, tpos]) — into compressed
-    posting rows.  tf aggregation (run length per (segment, term, doc_id))
-    happens HERE, in the same numpy pass that packs: the build ships raw
-    occurrences through ONE wide shuffle with no separate aggregation
-    shuffle and no persisted intermediate.  Batch-wide varbyte encode, then
-    per-run slicing; inner loops are numpy."""
+    """Collapse a stream sorted by (segment, term, doc_id[, tpos]) into
+    compressed posting rows (format: codec.py).  The input is either
+    token-level ``(segment, term, doc_id[, doclen], tpos)`` — tf is then
+    aggregated HERE (run length per (segment, term, doc_id)), in the same
+    numpy pass that packs, so the build ships raw occurrences through ONE
+    wide shuffle with no persisted intermediate — or one row per posting
+    ``(segment, term, doc_id, tf[, doclen])``.  The dl stream is packed
+    only when a ``doclen`` column is present and the pos stream only when
+    ``tpos`` is; an absent stream's blob is empty.  Encoding and the block
+    directory are batch-wide numpy; the per-run loop only slices."""
     if len(pdf) == 0:
         return pd.DataFrame(columns=_PACK_COLUMNS)
-    have_pos = "tpos" in pdf.columns
+    seg = pdf["segment"].to_numpy()
+    doc = pdf["doc_id"].to_numpy(dtype=np.int64)
+    term = pdf["term"].to_numpy()
     if "tf" in pdf.columns:
         # aggregated input — one row per posting (non-positional builds:
         # the (segment, term, doc_id) → tf aggregation ran JVM-side after
         # the single wide exchange, so Arrow ships ~1 row per posting)
-        seg = pdf["segment"].to_numpy()
-        doc = pdf["doc_id"].to_numpy(dtype=np.int64)
-        dl = pdf["doclen"].to_numpy(dtype=np.int64)
-        term = pdf["term"].to_numpy()
+        post = np.arange(len(pdf))
         tf = pdf["tf"].to_numpy(dtype=np.int64)
     else:
         # token-level input (positional builds: the sorted occurrence rows
         # ARE the flat position stream, so no list-typed columns ever exist)
-        seg_t = pdf["segment"].to_numpy()
-        doc_t = pdf["doc_id"].to_numpy(dtype=np.int64)
-        dl_t = pdf["doclen"].to_numpy(dtype=np.int64)
-        term_t = pdf["term"].to_numpy()
-
-        # posting boundaries: change of (segment, term, doc_id) in token order
-        pchange = np.empty(len(pdf), dtype=bool)
-        pchange[0] = True
-        pchange[1:] = (
-            (term_t[1:] != term_t[:-1])
-            | (seg_t[1:] != seg_t[:-1])
-            | (doc_t[1:] != doc_t[:-1])
-        )
-        tok_starts = np.flatnonzero(pchange)
-        tok_ends = np.append(tok_starts[1:], len(pdf))
-        tf = (tok_ends - tok_starts).astype(np.int64)
-        doc = doc_t[tok_starts]
-        dl = dl_t[tok_starts]
-        seg = seg_t[tok_starts]
-        term = term_t[tok_starts]
+        post = np.flatnonzero(np.r_[
+            True,
+            (term[1:] != term[:-1]) | (seg[1:] != seg[:-1]) | (doc[1:] != doc[:-1]),
+        ])
+        tf = np.diff(np.append(post, len(pdf)))
+    seg, doc, term = seg[post], doc[post], term[post]
 
     # run boundaries: change of (segment, term) among collapsed postings
-    change = np.empty(len(doc), dtype=bool)
-    change[0] = True
-    change[1:] = (term[1:] != term[:-1]) | (seg[1:] != seg[:-1])
-    run_starts = np.flatnonzero(change)
+    run_starts = np.flatnonzero(
+        np.r_[True, (term[1:] != term[:-1]) | (seg[1:] != seg[:-1])]
+    )
     run_ends = np.append(run_starts[1:], len(doc))
 
     # delta-gap docIDs, reset at run starts (gap[start] = doc+1, see codec)
-    gaps = np.empty(len(doc), dtype=np.int64)
-    gaps[0] = doc[0] + 1
-    gaps[1:] = doc[1:] - doc[:-1]
+    gaps = np.diff(doc, prepend=np.int64(-1))
     gaps[run_starts] = doc[run_starts] + 1
     if gaps.min() <= 0:
         raise ValueError("postings not strictly sorted by (segment, term, doc_id)")
 
-    # optional positional stream: per posting, delta-gapped 1-based token
-    # positions (the reference's occurrence positions, utils/interface.h:66);
-    # the sorted token rows ARE the flat position stream
-    if have_pos:
-        flat = pdf["tpos"].to_numpy(dtype=np.int64)
-        p_ends = tok_ends
-        p_starts = tok_starts
-        pg = np.empty_like(flat)
-        pg[0] = flat[0]
-        pg[1:] = flat[1:] - flat[:-1]
-        pg[p_starts] = flat[p_starts]
+    # each stream's bytes and its per-posting offsets
+    streams = {"doc": _encoded(gaps), "tf": _encoded(tf)}
+    if "doclen" in pdf.columns:
+        streams["dl"] = _encoded(pdf["doclen"].to_numpy(dtype=np.int64)[post])
+    if "tpos" in pdf.columns:
+        # per posting, delta-gapped 1-based token positions (the reference's
+        # occurrence positions, utils/interface.h:66)
+        tpos = pdf["tpos"].to_numpy(dtype=np.int64)
+        pg = np.diff(tpos, prepend=np.int64(0))
+        pg[post] = tpos[post]
         if pg.min() <= 0:
             raise ValueError("positions must be strictly increasing, >= 1")
-        pos_buf = np.frombuffer(varbyte_encode(pg), dtype=np.uint8)
-        p_sizes = varbyte_sizes(pg)
-        flat_end = np.cumsum(p_sizes)
-        # per-POSTING byte extents of its position group (tf >= 1 always)
-        post_end = flat_end[p_ends - 1]
-        post_start = np.concatenate(([0], post_end[:-1]))
+        data, off = _encoded(pg)
+        # posting i's positions are token rows post[i]:post[i + 1]
+        streams["pos"] = (data, off[np.append(post, len(pdf))])
 
-    doc_buf = np.frombuffer(varbyte_encode(gaps), dtype=np.uint8)
-    tf_buf = np.frombuffer(varbyte_encode(tf), dtype=np.uint8)
-    dl_buf = np.frombuffer(varbyte_encode(dl), dtype=np.uint8)
-    # size each stream once (like p_sizes above): these vector scans run in
-    # the packer on the build's single wide shuffle — the hot path
-    doc_sizes = varbyte_sizes(gaps)
-    tf_sizes = varbyte_sizes(tf)
-    dl_sizes = varbyte_sizes(dl)
-    doc_end = np.cumsum(doc_sizes)
-    tf_end = np.cumsum(tf_sizes)
-    dl_end = np.cumsum(dl_sizes)
-    doc_start = doc_end - doc_sizes
-    tf_start = tf_end - tf_sizes
-    dl_start = dl_end - dl_sizes
+    # block directory: an entry every block_size postings of each run
+    n_blocks = -(-(run_ends - run_starts) // block_size)
+    b_run = np.repeat(np.arange(len(run_starts)), n_blocks)
+    b_first = np.cumsum(n_blocks) - n_blocks
+    b_start = run_starts[b_run] + block_size * (np.arange(len(b_run)) - b_first[b_run])
+    b_bounds = list(zip(b_first.tolist(), (b_first + n_blocks).tolist()))
 
-    # int-coded terms (gram streams ship packed codes through the shuffle)
-    # are decoded back to strings ONCE PER RUN — vocab-sized work, not
-    # row-count work
-    rows = []
-    for s, e in zip(run_starts, run_ends):
-        n = e - s
-        blob_d = doc_buf[doc_start[s]:doc_end[e - 1]].tobytes()
-        blob_t = tf_buf[tf_start[s]:tf_end[e - 1]].tobytes()
-        blob_l = dl_buf[dl_start[s]:dl_end[e - 1]].tobytes()
-        blob_p = pos_buf[post_start[s]:post_end[e - 1]].tobytes() if have_pos else b""
-        # block directory: entries every block_size postings
-        b_idx = np.arange(s, e, block_size)
-        b_end = np.minimum(b_idx + block_size, e)
-        block_last = doc[b_end - 1]
-        block_doc_off = (doc_start[b_idx] - doc_start[s]).astype(np.int32)
-        block_tf_off = (tf_start[b_idx] - tf_start[s]).astype(np.int32)
-        block_dl_off = (dl_start[b_idx] - dl_start[s]).astype(np.int32)
-        block_pos_off = (
-            (post_start[b_idx] - post_start[s]).astype(np.int32)
-            if have_pos else np.zeros(len(b_idx), np.int32)
-        )
-        # raw per-block bounds; impact bounds are derived at QUERY time with
-        # the then-current avgdl (BM25 impact is monotone: up in tf, down in
-        # dl), so incremental appends that shift avgdl stay admissible
-        b_max_tf = np.maximum.reduceat(tf[s:e], b_idx - s).astype(np.int32)
-        b_min_dl = np.minimum.reduceat(dl[s:e], b_idx - s).astype(np.int32)
-        term_out = term_decode(int(term[s])) if term_decode else term[s]
-        rows.append(
-            (
-                int(seg[s]), term_out, int(n), int(tf[s:e].sum()),
-                blob_d, blob_t, blob_l, blob_p,
-                len(blob_d), len(blob_t), len(blob_l), len(blob_p),
-                block_last.tolist(), block_doc_off.tolist(), block_tf_off.tolist(),
-                block_dl_off.tolist(), block_pos_off.tolist(),
-                b_max_tf.tolist(), b_min_dl.tolist(),
-                int(b_max_tf.max()), int(b_min_dl.min()),
-            )
-        )
-    return pd.DataFrame(rows, columns=_PACK_COLUMNS)
+    def per_run(block_values: np.ndarray) -> list[list]:
+        values = block_values.tolist()
+        return [values[lo:hi] for lo, hi in b_bounds]
+
+    out = {
+        "segment": seg[run_starts],
+        # int-coded terms (gram streams ship packed codes through the
+        # shuffle) are decoded back to strings once per run
+        "term": ([term_decode(int(t)) for t in term[run_starts]]
+                 if term_decode else term[run_starts]),
+        "df_seg": run_ends - run_starts,
+        "cf_seg": np.add.reduceat(tf, run_starts),
+        "block_last": per_run(doc[np.minimum(b_start + block_size, run_ends[b_run]) - 1]),
+    }
+    for name in ("doc", "tf", "dl", "pos"):
+        data, off = streams.get(name, (b"", np.zeros(len(doc) + 1, np.int64)))
+        lo, hi = off[run_starts], off[run_ends]
+        out[f"{name}_blob"] = [data[a:b] for a, b in zip(lo.tolist(), hi.tolist())]
+        out[f"{name}_bytes"] = hi - lo
+        if name != "dl":
+            out[f"block_{name}_off"] = per_run(off[b_start] - lo[b_run])
+    return pd.DataFrame(out, columns=_PACK_COLUMNS)
 
 
 def _pack_map_in_pandas(block_size: int, term_decode=None):
@@ -411,19 +367,108 @@ def _clean_stale_index(paths: IndexPaths) -> None:
         os.remove(paths.meta)
 
 
-def _validate_resume_meta(paths: IndexPaths, new_meta: dict) -> None:
+def _read_meta(paths: IndexPaths) -> dict:
     if not os.path.exists(paths.meta):
-        return
+        return {}
     with open(paths.meta) as fh:
-        old = json.load(fh)
+        return json.load(fh)
+
+
+def _format_meta(*, n_segments: int, block_size: int, positions: bool,
+                 unit: str) -> dict:
+    """The ``_IMMUTABLE_META`` values of an index built with these
+    parameters by this version."""
+    return {
+        "n_segments": n_segments, "block_size": block_size,
+        "tokenizer": TOKEN_SPLIT_REGEX if unit == "token" else unit,
+        "positions": positions, "unit": unit, "format": FORMAT_VERSION,
+    }
+
+
+def _validate_resume_meta(paths: IndexPaths, new_meta: dict) -> None:
+    """Refuse to write into an index whose immutable format parameters
+    differ from ``new_meta``'s (a resumed build or an appended generation
+    would otherwise mix two layouts)."""
+    old = _read_meta(paths)
     for key in _IMMUTABLE_META:
         if key in old and old[key] != new_meta[key]:
             raise ValueError(
-                f"resume with mismatched immutable format parameter {key!r}: "
-                f"existing index has {old[key]!r}, caller passed "
-                f"{new_meta[key]!r} — rebuild with resume=False or match the "
-                "original parameters"
+                f"index at {paths.root} has immutable format parameter "
+                f"{key}={old[key]!r}, caller passed {new_meta[key]!r} — "
+                "rebuild with resume=False or match the original parameters"
             )
+
+
+def _write_postings(spark: SparkSession, docs: DataFrame, paths: IndexPaths,
+                    generation: int, *, stream, positions: bool, unit: str,
+                    n_segments: int, block_size: int,
+                    shuffle_partitions: int) -> None:
+    """Pass B of build_index and streaming.append_generation: ``docs``
+    (doc_id, segment, text) → stream → ONE wide shuffle → the aggregating
+    packer → the ``(generation, segment)`` partitions of the postings
+    table (dynamic overwrite, so a replay rewrites only its own).
+
+    The dl stream is packed iff ``unit == "token"``: BM25 is its only
+    reader.  There ``doclen`` joins onto the DOCUMENT rows (broadcast
+    under the autoBroadcastJoinThreshold; sort-merge co-partitioned on
+    doc_id at cluster scale) and rides the explode, so no token-level
+    join ever runs."""
+    carry = []
+    if unit == "token":
+        doclen = spark.read.parquet(paths.doc_stats).select("doc_id", "doclen")
+        docs, carry = docs.join(doclen, "doc_id"), ["doclen"]
+    keys = ["segment", "term", "doc_id"]
+    rows = stream(docs).select(*keys, *carry, *(["tpos"] if positions else []))
+    n_buckets = kernel_tasks(spark, n_segments)
+    if positions:
+        # positional builds route the ONE wide shuffle by segment: each
+        # pack task holds whole segments (the sorted occurrence rows are
+        # themselves the position stream — there is no aggregation to
+        # lose), and the write emits n_segments well-sized files.
+        pack_in = route(rows, "segment", n_buckets).sortWithinPartitions(
+            *keys, "tpos"
+        )
+    else:
+        # non-positional builds keep the agg-first shape: raw occurrences
+        # cross the ONE (segment, term) exchange, tf aggregates JVM-side
+        # behind it (subset-partitioning reuse — no second exchange), and
+        # the Arrow hop ships one row per POSTING.  Routing the raw rows
+        # with in-packer aggregation instead was ~8% faster at local[1]
+        # but ~10% SLOWER at local[4] (1-vs-4 A/B on the 240k bench
+        # corpus): the agg reduces bytes BEFORE the sort and the
+        # JVM→Python hop (guide §2.3), which is what scales on a
+        # bandwidth-limited host.
+        pack_in = (
+            rows.repartition(shuffle_partitions, "segment", "term")
+            .groupBy(*keys)
+            .agg(F.count("*").alias("tf"), *(F.first(c).alias(c) for c in carry))
+            .sortWithinPartitions(*keys)
+        )
+    packed = pack_in.mapInPandas(
+        _pack_map_in_pandas(block_size, getattr(stream, "term_decode", None)),
+        schema=POSTINGS_SCHEMA,
+    ).withColumn("generation", F.lit(generation))
+    if not positions:
+        # file-count discipline WITHOUT giving up the agg: route the PACKED
+        # rows (tiny — the compressed index itself) by segment so the write
+        # emits n_segments files instead of partitions × n_segments small
+        # ones (guide §6)
+        packed = route(packed, "segment", n_buckets)
+    packed.write.mode("overwrite").partitionBy("generation", "segment").parquet(
+        paths.postings
+    )
+
+
+def _write_term_stats(spark: SparkSession, paths: IndexPaths) -> None:
+    """Global ``(term, df, cf)`` over every generation — a vocab-sized
+    aggregation of the postings rows."""
+    (
+        spark.read.parquet(paths.postings)
+        .groupBy("term")
+        .agg(F.sum("df_seg").alias("df"), F.sum("cf_seg").alias("cf"))
+        .write.mode("overwrite")
+        .parquet(paths.term_stats)
+    )
 
 
 def build_index(
@@ -468,7 +513,6 @@ def build_index(
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     sp = shuffle_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     stream = stream or token_stream
-    tokenizer_tag = TOKEN_SPLIT_REGEX if unit == "token" else unit
 
     corpus_bytes: int | None = None
     if "doc_id" not in corpus.columns:
@@ -497,21 +541,14 @@ def build_index(
     # the gram builder, generations from streaming appends) — inherit the
     # prior meta and overwrite only what this build recomputes (same
     # contract as streaming.append_generation)
-    old_meta: dict = {}
-    if resume and os.path.exists(paths.meta):
-        with open(paths.meta) as fh:
-            old_meta = json.load(fh)
-    if k1 is None:
-        k1 = float(old_meta.get("k1", K1_DEFAULT))
-    if b is None:
-        b = float(old_meta.get("b", B_DEFAULT))
-    meta = dict(old_meta)
-    meta.update({
-        "build_id": build_id, "n_segments": n_segments,
-        "block_size": block_size, "k1": k1, "b": b,
-        "tokenizer": tokenizer_tag, "format": FORMAT_VERSION,
-        "positions": positions, "unit": unit,
-    })
+    old_meta = _read_meta(paths) if resume else {}
+    meta = {
+        **old_meta, "build_id": build_id,
+        "k1": float(old_meta.get("k1", K1_DEFAULT)) if k1 is None else k1,
+        "b": float(old_meta.get("b", B_DEFAULT)) if b is None else b,
+        **_format_meta(n_segments=n_segments, block_size=block_size,
+                       positions=positions, unit=unit),
+    }
     if resume:
         _validate_resume_meta(paths, meta)
 
@@ -570,19 +607,14 @@ def build_index(
             .agg(F.count("*").alias("n"), F.sum("doclen").alias("s"))
             .first()
         )
-    ds = spark.read.parquet(paths.doc_stats)
     avgdl = float(sum_dl) / float(n_docs)
     # corpus_bytes: the denominator of the reference's size report (index
     # bytes as % of text, utils/build_index.c:66-68) — observed during the
     # docs write above; falls back to prior meta, then one pruned scan
     if corpus_bytes is None:
-        if os.path.exists(paths.meta):
-            with open(paths.meta) as fh:
-                corpus_bytes = json.load(fh).get("corpus_bytes")
-        if corpus_bytes is None:
-            corpus_bytes = int(
-                docs.agg(F.sum(F.octet_length("text"))).first()[0] or 0
-            )
+        corpus_bytes = old_meta.get("corpus_bytes")
+    if corpus_bytes is None:
+        corpus_bytes = int(docs.agg(F.sum(F.octet_length("text"))).first()[0] or 0)
     meta.update(
         {"n_docs": int(n_docs), "avgdl": avgdl, "n_tokens": int(sum_dl),
          "corpus_bytes": corpus_bytes}
@@ -591,18 +623,6 @@ def build_index(
         json.dump(meta, fh, indent=1)
 
     # ---- pass B: postings, segment-group at a time ------------------------
-    # doclen joins onto the DOCUMENT rows (broadcast under the
-    # autoBroadcastJoinThreshold; sort-merge co-partitioned on doc_id at
-    # cluster scale) and rides the explode, so the raw token stream goes
-    # through exactly ONE wide shuffle — (segment, term) — straight into
-    # the aggregating packer.
-    docs_dl = docs.join(ds.select("doc_id", "doclen"), "doc_id")
-    term_decode = getattr(stream, "term_decode", None)
-    sort_keys = ["segment", "term", "doc_id"] + (["tpos"] if positions else [])
-    pack_cols = ["segment", "term", "doc_id", "doclen"] + (
-        ["tpos"] if positions else []
-    )
-    n_buckets = kernel_tasks(spark, n_segments)
     groups: list[list[int]] = [
         [s for s in todo_all if s % segment_groups == g]
         for g in range(segment_groups)
@@ -611,58 +631,13 @@ def build_index(
     for todo in groups:
         if not todo:
             continue
-        scope = docs_dl if len(todo) == n_segments else docs_dl.where(
+        scope = docs if len(todo) == n_segments else docs.where(
             F.col("segment").isin([int(s) for s in todo])
         )
-        if positions:
-            # positional builds route the ONE wide shuffle by segment:
-            # each pack task holds whole segments (the sorted occurrence
-            # rows are themselves the position stream — there is no
-            # aggregation to lose), and the write below emits n_segments
-            # well-sized files.
-            pack_in = route(
-                stream(scope).select(*pack_cols), "segment", n_buckets
-            ).sortWithinPartitions(*sort_keys)
-        else:
-            # token builds keep the r05 agg-first shape: raw occurrences
-            # cross the ONE (segment, term) exchange, tf aggregates
-            # JVM-side behind it (subset-partitioning reuse — no second
-            # exchange), and the Arrow hop ships one row per POSTING.
-            # This was briefly replaced by routing the raw rows with
-            # in-packer aggregation, which was ~8% faster at local[1] but
-            # ~10% SLOWER at local[4] (1-vs-4 A/B on the 240k bench
-            # corpus): the agg reduces bytes BEFORE the sort and the
-            # JVM→Python hop (guide §2.3), which is what scales on a
-            # bandwidth-limited host — so agg-first wins the N→4N gate.
-            shuffled = (
-                stream(scope)
-                .select(*pack_cols)  # prune pre-shuffle
-                .repartition(sp, "segment", "term")
-            )
-            pack_in = (
-                shuffled.groupBy("segment", "term", "doc_id")
-                .agg(F.count("*").alias("tf"), F.first("doclen").alias("doclen"))
-                .sortWithinPartitions(*sort_keys)
-            )
-        packed = (
-            pack_in
-            .mapInPandas(
-                _pack_map_in_pandas(block_size, term_decode),
-                schema=POSTINGS_SCHEMA,
-            )
-            .withColumn("generation", F.lit(0))
-        )
-        if not positions:
-            # file-count discipline WITHOUT giving up the agg: route the
-            # PACKED rows (tiny — the compressed index itself) by segment
-            # so the partitionBy(generation, segment) write emits
-            # n_segments files instead of sp × n_segments small ones
-            # (guide §6; the write was ~3.9 s of the 5.1 s token pack
-            # phase at sp=32).  The positional branch is already
-            # segment-aligned from its own routing.
-            packed = route(packed, "segment", n_buckets)
-        packed.write.mode("overwrite").partitionBy("generation", "segment").parquet(
-            paths.postings
+        _write_postings(
+            spark, scope, paths, 0, stream=stream, positions=positions,
+            unit=unit, n_segments=n_segments, block_size=block_size,
+            shuffle_partitions=sp,
         )
         # per-segment lineage + metrics manifests (north_rule resumability);
         # metadata-only aggregation over the freshly written partitions
@@ -695,18 +670,7 @@ def build_index(
 
     # ---- global term stats (vocab-sized; one small agg over postings) -----
     t0 = time.monotonic()
-    postings = spark.read.parquet(paths.postings)
-    (
-        postings.groupBy("term")
-        .agg(
-            F.sum("df_seg").alias("df"),
-            F.sum("cf_seg").alias("cf"),
-            F.max("max_tf").alias("max_tf"),
-            F.min("min_dl").alias("min_dl"),
-        )
-        .write.mode("overwrite")
-        .parquet(paths.term_stats)
-    )
+    _write_term_stats(spark, paths)
     _phase("term_stats", t0)
 
     # ---- compression accounting (utils/build_index.c:62-68 analog) -------

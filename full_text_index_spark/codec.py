@@ -20,18 +20,22 @@ through ``decode_rows``/``decode_blocks`` below and never slices a blob):
 * one row holds the postings of one (segment, term) run, ``df_seg`` of
   them, in four varbyte streams: ``doc_blob`` (doc-id gaps), ``tf_blob``
   and ``dl_blob`` (one term frequency and one doc length per posting) and
-  ``pos_blob`` (``tf`` positions per posting; empty without positions);
+  ``pos_blob`` (``tf`` positions per posting);
+* ``dl_blob`` is written only on token indexes (BM25 is its one reader)
+  and ``pos_blob`` only on positional ones; elsewhere the blob is empty
+  and its ``*_bytes`` column 0, so ``decode_rows`` asked for it raises;
 * doc gaps restart in every row: the first gap is ``doc + 1``, the rest
   ``doc[i] − doc[i−1]`` (always ≥ 1);
 * positions restart in every posting: the first value is the absolute
   1-based token position, the rest are gaps;
 * the block directory splits a row every ``block_size`` postings:
   ``block_last`` holds each block's last doc id and ``block_doc_off``,
-  ``block_tf_off``, ``block_dl_off``, ``block_pos_off`` each block's first
-  byte in the matching stream, relative to the blob start.  The last block
-  ends at the blob end.  A block decodes alone: its doc gaps continue from
-  the previous block's ``block_last`` (−1 for the first block), and blocks
-  end on posting boundaries, so positions need no carry.
+  ``block_tf_off``, ``block_pos_off`` each block's first byte in the
+  matching stream, relative to the blob start (dl has no directory: only
+  whole rows of it are read).  The last block ends at the blob end.  A
+  block decodes alone: its doc gaps continue from the previous block's
+  ``block_last`` (−1 for the first block), and blocks end on posting
+  boundaries, so positions need no carry.
 """
 
 from __future__ import annotations
@@ -246,7 +250,7 @@ def candidate_blocks(row, docs: np.ndarray) -> np.ndarray:
     return np.unique(blk[blk < len(block_last)])
 
 
-def decode_blocks(row, blocks: np.ndarray, tf: bool = False, dl: bool = False,
+def decode_blocks(row, blocks: np.ndarray, tf: bool = False,
                   pos: bool = False) -> Postings:
     """Decode only ``blocks`` (sorted, distinct block indexes) of one
     posting row, each stream sliced by its block-offset directory
@@ -254,8 +258,7 @@ def decode_blocks(row, blocks: np.ndarray, tf: bool = False, dl: bool = False,
     blocks = np.asarray(blocks, dtype=np.int64)
     block_last = np.asarray(row.block_last, dtype=np.int64)
     base = np.where(blocks > 0, block_last[blocks - 1], -1)
-    names = ["doc"] + [n for n, on in (("tf", tf or pos), ("dl", dl),
-                                       ("pos", pos)) if on]
+    names = ["doc"] + [n for n, on in (("tf", tf or pos), ("pos", pos)) if on]
     streams = {}
     for name in names:
         blob = np.frombuffer(getattr(row, f"{name}_blob"), dtype=np.uint8)

@@ -65,7 +65,7 @@ class InvertedIndex:
         return self.table("postings")
 
     def term_stats(self) -> DataFrame:
-        """(term, df, cf, max_tf, min_dl) + the derived idf — vocab-sized."""
+        """(term, df, cf) + the derived idf — vocab-sized."""
         if self._term_stats is None:
             n = float(self.n_docs)
             self._term_stats = self.table("term_stats").withColumn(
@@ -82,7 +82,8 @@ class InvertedIndex:
 
     def index_size_bytes(self) -> int:
         """`index_size` analog (reference: utils/interface.h:70) — ALL four
-        compressed streams (doc, tf, doclen, positions)."""
+        compressed streams (doc, tf, doclen, positions); an index without
+        doc lengths (chargram) or positions counts 0 bytes for them."""
         row = (
             self.postings()
             .agg(

@@ -87,6 +87,16 @@ def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
+def _require_token_unit(index: InvertedIndex) -> None:
+    """BM25 reads the doc-length stream, which only token indexes carry."""
+    unit = index.meta.get("unit", "token")
+    if unit != "token":
+        raise ValueError(
+            f"BM25 scoring needs a token index (unit={unit!r}): a {unit} "
+            "index holds no doc-length stream; build one with build_index"
+        )
+
+
 def _bm25_scored_exact(index: InvertedIndex, qterms: DataFrame) -> DataFrame:
     """Exact (non-blockmax) BM25 scoring: every (qid, doc_id, score) for
     ``qterms(qid, term, idf)`` — vectorized decode → JVM join + agg (no
@@ -95,10 +105,11 @@ def _bm25_scored_exact(index: InvertedIndex, qterms: DataFrame) -> DataFrame:
     anti-joined out pre-scoring (fully distributed)."""
     from full_text_index_spark.deletes import mask_deleted
 
+    _require_token_unit(index)
     k1, b, avgdl = index.k1, index.b, index.avgdl
     terms = [r["term"] for r in qterms.select("term").distinct().collect()]
     decoded = mask_deleted(
-        index, _decode_postings(_matched_postings(index, terms, qterms))
+        index, _decode_postings(_matched_postings(index, terms, qterms), dl=True)
     )
     return (
         decoded.join(F.broadcast(qterms), "term")
@@ -149,8 +160,10 @@ def bm25_topk(
     (the reference's "char not in file" path, fm/fm_search.c:204-211).
     ``use_blockmax`` picks the scorer: True runs the one-pass Python kernel
     (``_make_bm25_kernel``), False the JVM join-and-aggregate path
-    (``_bm25_scored_exact``); both return the same rows.
+    (``_bm25_scored_exact``); both return the same rows.  Raises
+    ValueError on a chargram index, which holds no doc lengths.
     """
+    _require_token_unit(index)
     k1, b, avgdl = index.k1, index.b, index.avgdl
 
     # broadcast the QUERY side, never the dictionary: term_stats is
@@ -271,32 +284,34 @@ def _term_sets(qterms_pd: pd.DataFrame) -> tuple[pd.DataFrame, pd.DataFrame]:
     return qid_sid, sets
 
 
-def _decode_postings(postings: DataFrame) -> DataFrame:
-    """(segment, term, blobs…) → exploded (segment, term, doc_id, tf) via a
-    vectorized Arrow-batched decoder."""
+def _decode_postings(postings: DataFrame, dl: bool = False) -> DataFrame:
+    """(segment, term, blobs…) → exploded (segment, term, doc_id, tf
+    [, doclen]) via a vectorized Arrow-batched decoder.  The dl stream is
+    selected and decoded only with ``dl=True`` (BM25 scoring, token
+    indexes): no other caller ships it across the Arrow boundary."""
+    blobs = ["doc_blob", "tf_blob"] + (["dl_blob"] if dl else [])
 
     def decode(iterator):
         for pdf in iterator:
-            p = decode_rows(pdf["doc_blob"], pdf["tf_blob"], pdf["dl_blob"])
-            yield pd.DataFrame(
-                {
-                    "segment": np.repeat(
-                        pdf["segment"].to_numpy(dtype=np.int32), p.counts
-                    ),
-                    "term": np.repeat(pdf["term"].to_numpy(), p.counts),
-                    "doc_id": p.doc,
-                    "tf": p.tf,
-                    "doclen": p.dl,
-                }
-            )
+            p = decode_rows(*(pdf[c] for c in blobs))
+            cols = {
+                "segment": np.repeat(
+                    pdf["segment"].to_numpy(dtype=np.int32), p.counts
+                ),
+                "term": np.repeat(pdf["term"].to_numpy(), p.counts),
+                "doc_id": p.doc,
+                "tf": p.tf,
+            }
+            if dl:
+                cols["doclen"] = p.dl
+            yield pd.DataFrame(cols)
 
     # widen: the decode kernel inherits SCAN parallelism, and a
     # well-sized postings layout (few large files) packs into few scan
     # tasks — round-robin the blob rows first (no-op on wide scans)
-    return widen_partitions(
-        postings.select("segment", "term", "doc_blob", "tf_blob", "dl_blob")
-    ).mapInPandas(
-        decode, schema="segment int, term string, doc_id long, tf long, doclen long"
+    return widen_partitions(postings.select("segment", "term", *blobs)).mapInPandas(
+        decode, schema="segment int, term string, doc_id long, tf long"
+        + (", doclen long" if dl else "")
     )
 
 

@@ -31,18 +31,18 @@ from pyspark.sql import functions as F
 
 from full_text_index_spark.build import (
     IndexPaths,
-    FORMAT_VERSION,
     K1_DEFAULT,
     B_DEFAULT,
     BLOCK_SIZE_DEFAULT,
-    POSTINGS_SCHEMA,
-    _pack_map_in_pandas,
+    _format_meta,
+    _read_meta,
+    _validate_resume_meta,
+    _write_postings,
+    _write_term_stats,
     doc_lengths,
     prepare_corpus,
     token_stream,
 )
-from full_text_index_spark.functions.util import kernel_tasks, route
-from full_text_index_spark.tokenizer import TOKEN_SPLIT_REGEX
 
 GEN_SHIFT = 44  # doc_id = (generation << 44) | dense-id-within-generation
 
@@ -66,10 +66,11 @@ def append_generation(
     Idempotent per generation: replays overwrite the same (gen, segment)
     parquet partitions and manifest.  Appending to a batch-built index is
     supported directly — build_index writes generation 0 in the identical
-    (generation, segment) layout — but the immutable format parameters
-    (n_segments, block_size, tokenizer, unit, positions) must match the
-    existing meta.  ``positions``/``stream``/``unit`` mirror build_index, so
-    positional token indexes AND character k-gram substring indexes append
+    (generation, segment) layout through the same writer — but the
+    immutable format parameters (n_segments, block_size, tokenizer, unit,
+    positions, format) must match the existing meta, else ValueError.
+    ``positions``/``stream``/``unit`` mirror build_index, so positional
+    token indexes AND character k-gram substring indexes append
     incrementally too (substring.append_gram_generation wraps this) — a
     capability the reference lacks entirely (its indexes are immutable,
     utils/interface.h:34-44).
@@ -78,29 +79,17 @@ def append_generation(
     os.makedirs(paths.manifest_dir, exist_ok=True)
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     stream = stream or token_stream
-    tokenizer_tag = TOKEN_SPLIT_REGEX if unit == "token" else unit
-    if os.path.exists(paths.meta):
-        with open(paths.meta) as fh:
-            old = json.load(fh)
-        for key, val in (("n_segments", n_segments), ("block_size", block_size),
-                         ("tokenizer", tokenizer_tag), ("unit", unit),
-                         ("positions", positions)):
-            if key in old and old[key] != val:
-                raise ValueError(
-                    f"append_generation: index at {out_dir} has immutable "
-                    f"{key}={old[key]!r} but the append expects {val!r}"
-                )
-        # scoring parameters are inherited from the existing index unless
-        # the caller overrides them explicitly — an append must not silently
-        # reset a custom-k1/b index back to the defaults
-        if k1 is None:
-            k1 = float(old.get("k1", K1_DEFAULT))
-        if b is None:
-            b = float(old.get("b", B_DEFAULT))
-    if k1 is None:
-        k1 = K1_DEFAULT
-    if b is None:
-        b = B_DEFAULT
+    # scoring parameters are inherited from the existing index unless the
+    # caller overrides them explicitly — an append must not silently reset
+    # a custom-k1/b index back to the defaults
+    meta = _read_meta(paths)  # keeps batch-build accounting fields
+    meta.update({
+        "k1": float(meta.get("k1", K1_DEFAULT)) if k1 is None else k1,
+        "b": float(meta.get("b", B_DEFAULT)) if b is None else b,
+        **_format_meta(n_segments=n_segments, block_size=block_size,
+                       positions=positions, unit=unit),
+    })
+    _validate_resume_meta(paths, meta)
 
     base = generation << GEN_SHIFT
     docs = prepare_corpus(docs)
@@ -119,78 +108,19 @@ def append_generation(
     )
 
     # norms need a current avgdl — refresh from everything appended so far
-    ds_all = spark.read.parquet(paths.doc_stats)
-    n_docs, sum_dl = ds_all.agg(F.count("*"), F.sum("doclen")).first()
-    avgdl = float(sum_dl) / float(n_docs)
-
-    # pass B (mirrors build_index): doclen joins the DOCUMENT rows and
-    # rides the explode; raw token stream → one (segment, term) shuffle →
-    # aggregating packer
-    docs_dl = docs.join(ds_all.select("doc_id", "doclen"), "doc_id")
-    term_decode = getattr(stream, "term_decode", None)
-    sort_keys = ["segment", "term", "doc_id"] + (["tpos"] if positions else [])
-    pack_cols = ["segment", "term", "doc_id", "doclen"] + (
-        ["tpos"] if positions else []
+    n_docs, sum_dl = (
+        spark.read.parquet(paths.doc_stats)
+        .agg(F.count("*"), F.sum("doclen")).first()
     )
-    # mirrors build_index: positional appends route the one wide shuffle
-    # by segment (whole segments per pack task); token appends keep the
-    # agg-first shape behind the (segment, term) exchange and route only
-    # the PACKED rows — n_segments output files either way (guide §6)
-    # without giving up the byte-reducing agg
-    sp = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    n_buckets = kernel_tasks(spark, n_segments)
-    if positions:
-        pack_in = route(
-            stream(docs_dl).select(*pack_cols), "segment", n_buckets
-        ).sortWithinPartitions(*sort_keys)
-    else:
-        shuffled = (
-            stream(docs_dl)
-            .select(*pack_cols)  # prune pre-shuffle
-            .repartition(sp, "segment", "term")
-        )
-        pack_in = (
-            shuffled.groupBy("segment", "term", "doc_id")
-            .agg(F.count("*").alias("tf"), F.first("doclen").alias("doclen"))
-            .sortWithinPartitions(*sort_keys)
-        )
-    packed = (
-        pack_in
-        .mapInPandas(
-            _pack_map_in_pandas(block_size, term_decode),
-            schema=POSTINGS_SCHEMA,
-        )
-        .withColumn("generation", F.lit(generation))
+    _write_postings(
+        spark, docs, paths, generation, stream=stream, positions=positions,
+        unit=unit, n_segments=n_segments, block_size=block_size,
+        shuffle_partitions=int(spark.conf.get("spark.sql.shuffle.partitions")),
     )
-    if not positions:
-        packed = route(packed, "segment", n_buckets)
-    packed.write.mode("overwrite").partitionBy("generation", "segment").parquet(
-        paths.postings
-    )
-
-    # refresh global stats (vocab-sized agg) + meta
-    postings = spark.read.parquet(paths.postings)
-    (
-        postings.groupBy("term")
-        .agg(
-            F.sum("df_seg").alias("df"),
-            F.sum("cf_seg").alias("cf"),
-            F.max("max_tf").alias("max_tf"),
-            F.min("min_dl").alias("min_dl"),
-        )
-        .write.mode("overwrite")
-        .parquet(paths.term_stats)
-    )
-    meta = {}
-    if os.path.exists(paths.meta):
-        with open(paths.meta) as fh:
-            meta = json.load(fh)  # keep batch-build accounting fields
+    _write_term_stats(spark, paths)
     meta.update({
         "build_id": f"stream-gen-{generation}", "n_docs": int(n_docs),
-        "avgdl": avgdl, "n_segments": n_segments, "block_size": block_size,
-        "k1": k1, "b": b, "tokenizer": tokenizer_tag, "unit": unit,
-        "positions": positions, "format": FORMAT_VERSION,
-        "generations": generation + 1,
+        "avgdl": float(sum_dl) / float(n_docs), "generations": generation + 1,
     })
     with open(paths.meta, "w") as fh:
         json.dump(meta, fh, indent=1)

@@ -179,7 +179,7 @@ def test_decode_blocks_matches_slice_of_full_decode(tokens, rnd):
                            [row.pos_blob])
         n_blocks = len(row.block_last)
         blocks = sorted(rnd.sample(range(n_blocks), rnd.randint(0, n_blocks)))
-        got = decode_blocks(row, blocks, tf=True, dl=True, pos=True)
+        got = decode_blocks(row, blocks, tf=True, pos=True)
         posting = np.concatenate(
             [np.arange(3 * b, min(3 * b + 3, len(full.doc))) for b in blocks]
             or [np.empty(0, np.int64)]
@@ -192,7 +192,6 @@ def test_decode_blocks_matches_slice_of_full_decode(tokens, rnd):
         assert got.counts.tolist() == [min(3, len(full.doc) - 3 * b) for b in blocks]
         assert np.array_equal(got.doc, full.doc[posting])
         assert np.array_equal(got.tf, full.tf[posting])
-        assert np.array_equal(got.dl, full.dl[posting])
         assert np.array_equal(got.pos, full.pos[occ])
         assert np.array_equal(candidate_blocks(row, got.doc), blocks)
 
@@ -202,40 +201,57 @@ def test_decode_blocks_matches_slice_of_full_decode(tokens, rnd):
 def test_pack_runs_round_trip(tokens):
     """The encoder and the decoders agree on the format: packing a sorted
     token stream with positions and decoding every row, whole and block by
-    block, gives back every (segment, term, doc_id, tf, doclen, tpos)."""
+    block, gives back every (segment, term, doc_id, tf, doclen, tpos)
+    (doclen from whole rows; the dl stream has no block directory).
+    Without a ``doclen`` column the dl stream is empty and the rest round
+    trips unchanged."""
     pdf = _token_frame(tokens)
     expect = pdf.assign(
         tf=pdf.groupby(["segment", "term", "doc_id"])["tpos"].transform("size")
     )[["segment", "term", "doc_id", "tf", "doclen", "tpos"]]
     packed = _pack(tokens, block_size=4)
+    no_dl = _pack_runs(pdf.drop(columns="doclen"), 4)
 
     def explode(segs, terms, p):
         post_seg = np.repeat(segs, p.counts)
         post_term = np.repeat(terms, p.counts)
-        return pd.DataFrame({
+        out = pd.DataFrame({
             "segment": np.repeat(post_seg, p.tf).astype(np.int32),
             "term": np.repeat(post_term, p.tf).astype(object),
             "doc_id": np.repeat(p.doc, p.tf),
             "tf": np.repeat(p.tf, p.tf),
-            "doclen": np.repeat(p.dl, p.tf),
             "tpos": p.pos,
         })
+        if p.dl is not None:
+            out.insert(4, "doclen", np.repeat(p.dl, p.tf))
+        return out
+
+    def check(got, want):
+        assert got.reset_index(drop=True).astype(str).equals(
+            want.reset_index(drop=True).astype(str))
 
     whole = decode_rows(packed["doc_blob"], packed["tf_blob"],
                         packed["dl_blob"], packed["pos_blob"])
-    got_rows = explode(packed["segment"].to_numpy(), packed["term"].to_numpy(),
-                       whole)
-    parts = []
-    for row in packed.itertuples(index=False):
-        assert len(row.block_last) == -(-row.df_seg // 4)
-        p = decode_blocks(row, np.arange(len(row.block_last)), dl=True, pos=True)
-        parts.append(explode([row.segment], [row.term],
-                             p._replace(counts=np.array([p.counts.sum()]))))
-    got_blocks = (pd.concat(parts, ignore_index=True) if parts
-                  else got_rows.iloc[:0])
-    for got in (got_rows, got_blocks):
-        assert got.reset_index(drop=True).astype(str).equals(
-            expect.reset_index(drop=True).astype(str))
+    check(explode(packed["segment"].to_numpy(), packed["term"].to_numpy(),
+                  whole), expect)
+    for rows in (packed, no_dl):
+        parts = []
+        for row in rows.itertuples(index=False):
+            assert len(row.block_last) == -(-row.df_seg // 4)
+            p = decode_blocks(row, np.arange(len(row.block_last)), pos=True)
+            parts.append(explode([row.segment], [row.term],
+                                 p._replace(counts=np.array([p.counts.sum()]))))
+        got_blocks = (pd.concat(parts, ignore_index=True) if parts
+                      else expect.drop(columns="doclen").iloc[:0])
+        check(got_blocks, expect.drop(columns="doclen"))
+
+    assert no_dl["dl_blob"].tolist() == [b""] * len(no_dl)
+    assert no_dl["dl_bytes"].tolist() == [0] * len(no_dl)
+    assert no_dl.drop(columns=["dl_blob", "dl_bytes"]).equals(
+        packed.drop(columns=["dl_blob", "dl_bytes"]))
+    if len(no_dl):
+        with pytest.raises(ValueError, match="the dl stream"):
+            decode_rows(no_dl["doc_blob"], dl_blobs=no_dl["dl_blob"])
 
 
 def test_decode_rows_rejects_truncated_middle_blob():

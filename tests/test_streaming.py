@@ -446,3 +446,78 @@ def test_stream_base_pin_is_stable_per_checkpoint(spark, tmp_path):
     assert _stream_generation_base(root, ckpt) == b0
     # a DIFFERENT checkpoint computes a fresh base from the meta
     assert _stream_generation_base(root, str(tmp_path / "ckpt6")) == 7
+
+
+def test_append_refuses_another_format_or_positions(spark, two_gen_corpus,
+                                                    tmp_path):
+    """An append checks the existing meta's immutable format parameters
+    like a resumed build does: a generation of another on-disk format or
+    another ``positions`` setting is refused before anything is written."""
+    import json
+    import os
+
+    a, b = two_gen_corpus
+    root = str(tmp_path / "sidx_fmt")
+    append_generation(spark, spark.createDataFrame(a.head(20), CORPUS_SCHEMA),
+                      root, 0, n_segments=4, block_size=16)
+    more = spark.createDataFrame(b.head(20), CORPUS_SCHEMA)
+    with pytest.raises(ValueError, match="immutable format parameter positions"):
+        append_generation(spark, more, root, 1, n_segments=4, block_size=16,
+                          positions=True)
+    meta_path = os.path.join(root, "meta.json")
+    with open(meta_path) as fh:
+        meta = json.load(fh)
+    meta["format"] = "vbgap-blockmax-v4"
+    with open(meta_path, "w") as fh:
+        json.dump(meta, fh)
+    with pytest.raises(ValueError, match="immutable format parameter format"):
+        append_generation(spark, more, root, 1, n_segments=4, block_size=16)
+    assert not os.path.exists(os.path.join(root, "postings", "generation=1"))
+
+
+def _sorted_rows(spark, path: str, keys: list[str]) -> tuple[list, list]:
+    """(columns, rows sorted by ``keys``) of a parquet table, with binary
+    and array cells as plain bytes and lists."""
+    pdf = spark.read.parquet(path).toPandas().sort_values(keys)
+
+    def plain(v):
+        if isinstance(v, (bytes, bytearray)):
+            return bytes(v)
+        return list(v) if hasattr(v, "__len__") and not isinstance(v, str) else v
+
+    return list(pdf.columns), [[plain(v) for v in row]
+                               for row in pdf.itertuples(index=False)]
+
+
+@pytest.mark.parametrize("unit", ["token", "chargram-3"])
+def test_append_into_empty_dir_writes_what_build_writes(spark, two_gen_corpus,
+                                                        tmp_path, unit):
+    """build_index and append_generation share one posting writer and one
+    term_stats refresh: generation 0 appended into an empty directory holds
+    the same postings rows and term_stats as a build of the same docs.
+    Rows hold exactly the format's columns, the dl stream only on token
+    indexes."""
+    import os
+
+    from full_text_index_spark.build import _PACK_COLUMNS, build_index, prepare_corpus
+    from full_text_index_spark.substring import make_gram_stream
+
+    a, _ = two_gen_corpus
+    docs = prepare_corpus(spark.createDataFrame(a.head(60), CORPUS_SCHEMA))
+    kw = dict(n_segments=4, block_size=16, positions=True, unit=unit)
+    if unit != "token":
+        kw["stream"] = make_gram_stream(3)
+    built, appended = str(tmp_path / "built"), str(tmp_path / "appended")
+    build_index(spark, docs, built, **kw)
+    append_generation(spark, docs, appended, 0, **kw)
+
+    for table, keys in (("postings", ["segment", "term"]), ("term_stats", ["term"])):
+        want = _sorted_rows(spark, os.path.join(built, table), keys)
+        assert _sorted_rows(spark, os.path.join(appended, table), keys) == want
+    cols, rows = _sorted_rows(spark, os.path.join(built, "postings"),
+                              ["segment", "term"])
+    assert sorted(cols) == sorted(_PACK_COLUMNS + ["generation"])
+    dl_bytes = [r[cols.index("dl_bytes")] for r in rows]
+    assert rows and all((n > 0) == (unit == "token") for n in dl_bytes)
+    assert _sorted_rows(spark, os.path.join(built, "term_stats"),
+                        ["term"])[0] == ["term", "df", "cf"]

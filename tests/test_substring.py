@@ -132,6 +132,22 @@ def test_gram_index_meta(gram_setup):
     assert rep["index_bytes"] > 0 and rep["bits_per_token"] > 0
 
 
+def test_bm25_rejects_chargram_index(spark, gram_setup):
+    """BM25 reads doc lengths, which a chargram index does not store: both
+    scorers name the unit instead of failing inside the decoder."""
+    from full_text_index_spark.query import _bm25_scored_exact, bm25_topk
+
+    idx, _ = gram_setup
+    queries = spark.createDataFrame([(0, ["row"])], "qid long, terms array<string>")
+    for use_blockmax in (True, False):
+        with pytest.raises(ValueError, match="unit='chargram-3'"):
+            bm25_topk(idx, queries, k=5, use_blockmax=use_blockmax)
+    qterms = spark.createDataFrame([(0, "row", 1.0)],
+                                   "qid long, term string, idf double")
+    with pytest.raises(ValueError, match="unit='chargram-3'"):
+        _bm25_scored_exact(idx, qterms)
+
+
 def test_rarest_gram_plan_agrees_with_alljoin(gram_setup):
     """The rarest-gram-first candidate+verify plan (default) and the
     all-windows join plan are two independent implementations of the same
