@@ -202,15 +202,10 @@ class Op(NamedTuple):
 
 
 def _substring_batch(fx: Fixtures):
-    # the plan stats add diagnostic jobs on the rarest plan (candidate
-    # count, decoded-byte agg): collect them on the first of ≥ 2 reps only,
-    # so the min keeps an undiagnosed rep — a single rep stays clean
-    first = "substring_plan" not in fx.diag
+    # the count path's plan record holds driver-side values only (it adds
+    # no job), so every rep records it
     stats = fx.diag.setdefault("substring_plan", {})
-    return substring_count(
-        fx.grams, fx.sub_patterns,
-        stats=stats if first and fx.reps >= 2 else None,
-    ).collect()
+    return substring_count(fx.grams, fx.sub_patterns, stats=stats).collect()
 
 
 def _asof(fx: Fixtures):

@@ -34,6 +34,10 @@ This module is the Spark-native substring self-index:
   — any pattern length is answered from the index, like the reference
   (sau/SAu.c:253-344 binary-searches even m=1).
 
+* **Count** — never locates (the reference's count is cheaper than its
+  locate, ssa/SSA.cpp:242-261): short and length-k patterns are answered by
+  one stats lookup, longer ones by one segment-local counting kernel.
+
 * **Adaptive cutover** — ``substring_search`` keeps the whole-corpus scan
   for tiny corpora, the SMALLFILESIZE analog (reference: fm/fm_index.h:20-22
   — Boyer–Moore scan below a size cutoff, fm/fm_search.c:417-498), with
@@ -862,38 +866,57 @@ def _count_from_locate(located: DataFrame, patterns_df: DataFrame) -> DataFrame:
     )
 
 
+_COUNT_DDL = "pattern string, n_docs_matching long, n_occurrences long"
+
+
+def _stats_lookup(index: InvertedIndex, grams: list[str],
+                  short: list[str]) -> dict[str, tuple[int, int]]:
+    """``{gram: (df, cf)}`` for the k-grams ``grams`` (term_stats) and the
+    shorter grams ``short`` (short_stats, summed over generations: a doc
+    lives in exactly one generation, so per-generation df adds up exactly)
+    in ONE collect of the two tables' rows, unioned.  Absent grams have no
+    entry."""
+    parts = []
+    if grams:
+        parts.append(index.term_stats().where(F.col("term").isin(grams))
+                     .select("term", "df", "cf"))
+    if short:
+        if not index.meta.get("short_grams"):
+            raise ValueError(
+                "index has no short-gram stats table — rebuild with "
+                "build_gram_index (or route short patterns to the scan path)"
+            )
+        parts.append(index.table("short_stats").where(F.col("gram").isin(short))
+                     .select(F.col("gram").alias("term"), "df", "cf"))
+    if not parts:
+        return {}
+    rows = parts[0]
+    for part in parts[1:]:
+        rows = rows.unionByName(part)
+    out: dict[str, tuple[int, int]] = {}
+    for term, df, cf in rows.collect():
+        d, c = out.get(term, (0, 0))
+        out[term] = (d + int(df), c + int(cf))
+    return out
+
+
 def substring_count_short(index: InvertedIndex,
                           patterns: list[str]) -> DataFrame:
     """Indexed `count` for patterns SHORTER than the gram size (1..k−1
-    chars): a broadcast lookup in the build-time short-gram stats table —
+    chars): a driver lookup in the build-time short-gram stats table —
     no postings decode, no corpus scan (VERDICT r02 missing #1; the
     reference answers m=1 patterns from its index, sau/SAu.c:253-344).
     Output (pattern, n_docs_matching, n_occurrences); absent → zeros."""
     k = _gram_k(index)
-    if not index.meta.get("short_grams"):
-        raise ValueError(
-            "index has no short-gram stats table — rebuild with "
-            "build_gram_index (or route short patterns to the scan path)"
-        )
     bad = [p for p in patterns if not (1 <= len(p) < k)]
     if bad:
         raise ValueError(
             f"substring_count_short handles lengths 1..{k - 1}; got {bad[0]!r}"
         )
-    spark = index.spark
-    pdf = local_frame(spark, [(p,) for p in patterns], "pattern string")
-    st = index.table("short_stats")
-    # a doc lives in exactly one generation, so summing per-generation df is
-    # exact; cf sums trivially
-    agg = (
-        st.join(F.broadcast(pdf), st["gram"] == pdf["pattern"])
-        .groupBy("pattern")
-        .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
-    )
-    return pdf.join(F.broadcast(agg), "pattern", "left").select(
-        "pattern",
-        F.coalesce("df", F.lit(0)).alias("n_docs_matching"),
-        F.coalesce("cf", F.lit(0)).alias("n_occurrences"),
+    patterns = list(dict.fromkeys(patterns))
+    found = _stats_lookup(index, [], patterns)
+    return local_frame(
+        index.spark, [(p, *found.get(p, (0, 0))) for p in patterns], _COUNT_DDL
     )
 
 
@@ -1047,76 +1070,239 @@ def _locate_any(index: InvertedIndex, patterns: list[str]) -> DataFrame:
     return out
 
 
+def _count_plan(patterns: list[str], k: int,
+                cf: dict[str, int]) -> dict[str, list[tuple[int, str]]]:
+    """Per pattern (length ≥ k, every window gram present), the
+    ``(slot, gram)`` checks the counting kernel runs: the rarest slot of a
+    greedy char-cover first — its occurrences are the candidate starts —
+    then the cover's other slots, which each candidate must also hit."""
+    plan = {}
+    for p in patterns:
+        windows = [p[i:i + k] for i in range(len(p) - k + 1)]
+        cover = _greedy_cover(windows, cf, k)
+        c = min(cover, key=lambda s: (cf[windows[s]], s))
+        plan[p] = [(c, windows[c])] + [(s, windows[s]) for s in cover if s != c]
+    return plan
+
+
+def _member(sorted_keys: np.ndarray, keys: np.ndarray) -> np.ndarray:
+    """Mask of ``keys`` found in the sorted array ``sorted_keys``."""
+    idx = np.searchsorted(sorted_keys, keys)
+    ok = idx < len(sorted_keys)
+    ok[ok] = sorted_keys[idx[ok]] == keys[ok]
+    return ok
+
+
+def _make_substring_count_kernel(plan: dict[str, list[tuple[int, str]]]):
+    """mapInPandas kernel over SEGMENT-routed posting rows: per task, the
+    ``(pattern, n_docs, n_occ)`` of every pattern in ``plan``
+    (``_count_plan``), with a zero row for each pattern without a hit.
+
+    The plan rides in the closure; the input holds the posting rows of the
+    plan's grams (segment, term, doc/tf/pos blobs and block directory) and,
+    with a null ``term``, the task's tombstone ``doc_blob``s.  Per segment:
+
+    * one ``decode_rows`` call decodes every row whose gram is some
+      pattern's candidate gram, and every single-block row; each
+      occurrence is keyed (dense local doc index) · 2³² + pos
+      (``_KEY_SHIFT``: generation-shifted ids never overflow);
+    * a pattern's candidate starts are its first slot's keys shifted back
+      by that slot, tombstoned docs dropped; a start survives a check
+      (s, g) iff start + s is one of g's keys;
+    * the remaining rows (several blocks, verify-only gram) decode only
+      the blocks that can hold a surviving candidate doc of a pattern that
+      checks them (``candidate_blocks``/``decode_blocks``).
+
+    A doc lives in exactly one segment, so summing the rows over tasks is
+    the exact count."""
+    import pandas as pd
+
+    from full_text_index_spark.codec import (
+        candidate_blocks,
+        decode_blocks,
+        decode_rows,
+    )
+
+    pats = list(plan)
+    grams = pd.Index(sorted({g for checks in plan.values() for _, g in checks}))
+    checks = [[(s, int(grams.get_loc(g))) for s, g in plan[p]] for p in pats]
+    is_cand = np.zeros(len(grams), dtype=bool)
+    is_cand[[c[0][1] for c in checks]] = True
+    pos_mask = _KEY_SHIFT - 1
+
+    def segment_counts(rows: pd.DataFrame, n_docs: np.ndarray,
+                       n_occ: np.ndarray) -> None:
+        tomb = rows["term"].isna().to_numpy()
+        code = grams.get_indexer(rows["term"])
+        posts, code = rows[code >= 0], code[code >= 0]
+        if not is_cand[code].any():
+            return
+        whole = is_cand[code] | (posts["block_last"].map(len).to_numpy() <= 1)
+        w = posts[whole]
+        p = decode_rows(w["doc_blob"], w["tf_blob"], pos_blobs=w["pos_blob"])
+        udoc = np.unique(p.doc)
+        occ_code = np.repeat(np.repeat(code[whole], p.counts), p.tf)
+        key = (np.repeat(np.searchsorted(udoc, p.doc), p.tf) * _KEY_SHIFT
+               + p.pos)
+        order = np.lexsort((key, occ_code))
+        key = key[order]
+        bounds = np.searchsorted(occ_code[order], np.arange(len(grams) + 1))
+        keys = {g: key[bounds[g]:bounds[g + 1]] for g in range(len(grams))}
+        live = None
+        if tomb.any():
+            live = ~np.isin(udoc, decode_rows(rows["doc_blob"][tomb]).doc)
+        blocked = posts[~whole]
+        late = set(code[~whole].tolist())
+
+        starts = []
+        for chk in checks:
+            c, g = chk[0]
+            st = keys[g][(keys[g] & pos_mask) > c] - c
+            if live is not None:
+                st = st[live[st >> 32]]
+            for s, g in chk[1:]:
+                if g not in late:
+                    st = st[_member(keys[g], st + s)]
+            starts.append(st)
+        if late:
+            # multi-block verify-only rows: decode only the blocks that
+            # can hold a candidate doc of a pattern checking them
+            want = {g: [] for g in late}
+            for st, chk in zip(starts, checks):
+                for _, g in chk[1:]:
+                    if g in want:
+                        want[g].append(st >> 32)
+            found = {g: [keys[g]] for g in late}
+            for g, row in zip(code[~whole], blocked.itertuples(index=False)):
+                docs = udoc[np.unique(np.concatenate(want[g]))]
+                blocks = candidate_blocks(row, docs)
+                if not len(blocks):
+                    continue
+                b = decode_blocks(row, blocks, pos=True)
+                doc = np.repeat(b.doc, b.tf)
+                ok = _member(udoc, doc)
+                found[g].append(np.searchsorted(udoc, doc[ok]) * _KEY_SHIFT
+                                + b.pos[ok])
+            for g in late:
+                keys[g] = np.sort(np.concatenate(found[g]))
+            for i, chk in enumerate(checks):
+                for s, g in chk[1:]:
+                    if g in late:
+                        starts[i] = starts[i][_member(keys[g], starts[i] + s)]
+        for i, st in enumerate(starts):
+            if len(st):
+                n_occ[i] += len(st)
+                n_docs[i] += 1 + np.count_nonzero(np.diff(st >> 32))
+
+    def count(batches):
+        pdfs = [b for b in batches if len(b)]
+        n_docs = np.zeros(len(pats), dtype=np.int64)
+        n_occ = np.zeros(len(pats), dtype=np.int64)
+        if pdfs:
+            rows = pd.concat(pdfs, ignore_index=True)
+            for _, seg in rows.groupby("segment", sort=False):
+                segment_counts(seg, n_docs, n_occ)
+        yield pd.DataFrame({"pattern": pats, "n_docs": n_docs, "n_occ": n_occ})
+
+    return count
+
+
 def substring_count(index: InvertedIndex, patterns: list[str],
                     *, stats: dict | None = None) -> DataFrame:
     """`count` for arbitrary substrings (reference: utils/interface.h:59):
     (pattern, n_docs_matching, n_occurrences) with OVERLAPPING occurrence
-    counting; absent patterns report zeros.  Patterns shorter than the gram
-    size route to the short-gram stats table (a lookup), everything else to
-    the positional gram index — any length is answered from the index, like
-    the reference.  ``stats`` forwards to substring_locate's chooser
-    diagnostics (plan, cf estimates, decoded bytes)."""
-    from full_text_index_spark.deletes import tombstone_count
+    counting, one row per distinct pattern; absent patterns report zeros.
+    Any length is answered from the index, like the reference — and, like
+    its backward-search count (ssa/SSA.cpp:242-261), without locating:
+
+    * one driver collect reads the term_stats rows of every window gram
+      and the short_stats rows of the patterns shorter than k.  A pattern
+      with an absent window gram counts zero; a length-k pattern IS one
+      gram and a shorter one a short_stats gram, so their (df, cf) are
+      the answer;
+    * the other patterns are counted by one segment-routed kernel
+      (``_make_substring_count_kernel``) where their postings live, summed
+      over tasks by one gram-free aggregate.
+
+    With live tombstones the stats tables still count deleted docs, so
+    length-k patterns join the kernel (which masks them) and shorter ones
+    count the masked ``substring_locate_short``.  ``stats``, if given,
+    receives the plan record — driver values only, no extra job: pattern
+    counts per class, the Σcf of the grams the kernel reads, its task
+    count and ``block_decode_grams`` (verify-only grams with df above the
+    block size: only their rows can take the block-targeted decode)."""
+    from full_text_index_spark.deletes import (
+        tombstone_count,
+        tombstone_segment_blobs,
+    )
+    from full_text_index_spark.query import _matched_postings
 
     patterns = list(dict.fromkeys(patterns))
     k = _gram_k(index)
     spark = index.spark
+    masked = tombstone_count(index) > 0
     short = [p for p in patterns if len(p) < k]
-    exact_k = [p for p in patterns if len(p) == k]
-    longp = [p for p in patterns if len(p) > k]
-    # With live tombstones the aggregate tables (short_stats, term_stats)
-    # still count deleted postings — Lucene's deferred-merge contract is
-    # fine for scoring stats, but count() is a QUERY result and the >k
-    # branch already masks via locate.  Route every length class through
-    # the masked locate so one result set has one delete semantics; the
-    # cheap lookup paths return once the index is compacted.
-    if tombstone_count(index) > 0:
-        if short:
-            pdf_s = local_frame(spark, [(p,) for p in short],
-                                "pattern string")
-            longp = list(longp)
-            parts0 = [_count_from_locate(
-                substring_locate_short(index, short), pdf_s)]
-        else:
-            parts0 = []
-        if exact_k:
-            longp = exact_k + longp
-        if longp:
-            pdf_l = local_frame(spark, [(p,) for p in longp],
-                                "pattern string")
-            parts0.append(_count_from_locate(
-                substring_locate(index, longp, stats=stats), pdf_l))
-        out = parts0[0]
-        for p in parts0[1:]:
-            out = out.unionByName(p)
-        return out
-    parts = []
-    if short:
-        parts.append(substring_count_short(index, short))
-    if exact_k:
-        # a length-k pattern IS one gram: term_stats already holds its exact
-        # (df, cf) — no posting decode at all (the backward-search-count
-        # analog, ssa/SSA.cpp:242-261: count is cheaper than locate)
-        pdf = local_frame(spark, [(p,) for p in exact_k], "pattern string")
-        ts = (
-            index.term_stats().select("term", "df", "cf")
-            .join(F.broadcast(pdf), F.col("term") == F.col("pattern"))
+    windows = {p: [p[i:i + k] for i in range(len(p) - k + 1)]
+               for p in patterns if len(p) >= k}
+    found = _stats_lookup(
+        index, sorted({g for ws in windows.values() for g in ws}),
+        [] if masked else short,
+    )
+    absent = {p for p, ws in windows.items() if any(g not in found for g in ws)}
+    present = [p for p in windows if p not in absent]
+    counted = [p for p in present if masked or len(p) > k]
+    answered = [(p, 0, 0) for p in absent]
+    if not masked:
+        answered += [(p, *found.get(p, (0, 0))) for p in short]
+        answered += [(p, *found[p]) for p in present if len(p) == k]
+    parts = [local_frame(spark, answered, _COUNT_DDL)] if answered else []
+    plan = _count_plan(counted, k, {g: cf for g, (_, cf) in found.items()})
+    live_grams = sorted({g for checks in plan.values() for _, g in checks})
+    n_tasks = kernel_tasks(spark, index.n_segments) if plan else 0
+    if plan:
+        mp = _matched_postings(index, live_grams).select(
+            "segment", "term", "doc_blob", "tf_blob", "pos_blob",
+            "block_last", "block_doc_off", "block_tf_off", "block_pos_off",
         )
-        parts.append(
-            pdf.join(F.broadcast(ts), "pattern", "left").select(
-                "pattern",
-                F.coalesce("df", F.lit(0)).alias("n_docs_matching"),
-                F.coalesce("cf", F.lit(0)).alias("n_occurrences"),
+        tomb = tombstone_segment_blobs(index)
+        if tomb is not None:
+            mp = mp.unionByName(
+                tomb.withColumn("segment", F.col("segment").cast(
+                    mp.schema["segment"].dataType)),
+                allowMissingColumns=True,
             )
+        parts.append(
+            route(mp, "segment", n_tasks)
+            .mapInPandas(_make_substring_count_kernel(plan),
+                         schema="pattern string, n_docs long, n_occ long")
+            .groupBy("pattern")
+            .agg(F.sum("n_docs").alias("n_docs_matching"),
+                 F.sum("n_occ").alias("n_occurrences"))
         )
-    if longp:
-        pdf = local_frame(spark, [(p,) for p in longp], "pattern string")
+    if masked and short:
         parts.append(_count_from_locate(
-            substring_locate(index, longp, stats=stats), pdf
+            substring_locate_short(index, short),
+            local_frame(spark, [(p,) for p in short], "pattern string"),
         ))
+    if stats is not None:
+        block = int(index.meta.get("block_size", 128))
+        cand = {checks[0][1] for checks in plan.values()}
+        stats.update({
+            "plan": "count_kernel" if plan else "lookup",
+            "n_short": len(short),
+            "n_exact_k": sum(len(p) == k for p in windows),
+            "n_long_live": sum(len(p) > k for p in counted),
+            "n_absent": len(absent),
+            "live_cf": sum(found[g][1] for g in live_grams),
+            "kernel_tasks": n_tasks,
+            "block_decode_grams": sum(
+                found[g][0] > block for g in live_grams if g not in cand),
+        })
+    if not parts:
+        return local_frame(spark, [], _COUNT_DDL)
     out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
+    for part in parts[1:]:
+        out = out.unionByName(part)
     return out
 
 

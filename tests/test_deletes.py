@@ -262,6 +262,18 @@ def test_substring_count_masks_every_length_class(spark, tmp_path):
         # overlapping counting: these patterns have no self-overlap, so
         # str.count matches the engine's overlapping semantics here
         assert got[p] == (len(docs_m), occ), p
+    # self-overlapping patterns ("ere", "a ga": a prefix is also a suffix;
+    # "ere" lives in two deleted docs and one live one) and a repeated-gram
+    # pattern ("ent" at slots 0 and 4 of "ent ent"), counted by start
+    # position
+    extra = ["ere", "a ga", "ent ent", "ntent ent"]
+    got = {r["pattern"]: (r["n_docs_matching"], r["n_occurrences"])
+           for r in substring_count(gidx, extra).collect()}
+    for p in extra:
+        starts = {i: sum(t.startswith(p, j) for j in range(len(t)))
+                  for i, t in texts_live.items()}
+        assert got[p] == (sum(1 for n in starts.values() if n),
+                          sum(starts.values())), p
 
 
 def test_rebuild_in_place_clears_docs_and_tombstones(spark, tmp_path):

@@ -165,8 +165,8 @@ def test_bm25_blockmax_plans_scan_no_python_rdd(spark, tiny_index, executed_plan
 
 
 @pytest.mark.parametrize("plan", ["alljoin", "rarest"])
-def test_substring_count_plans_scan_no_python_rdd(gram_setup, executed_plans,
-                                                  monkeypatch, plan):
+def test_substring_locate_plans_scan_no_python_rdd(gram_setup, executed_plans,
+                                                   monkeypatch, plan):
     from full_text_index_spark import substring
 
     if plan == "alljoin":
@@ -175,17 +175,33 @@ def test_substring_count_plans_scan_no_python_rdd(gram_setup, executed_plans,
         monkeypatch.setattr(substring, "ALLJOIN_CHEAP_CF", -1)
         monkeypatch.setattr(substring, "RAREST_WIN_FACTOR", 0)
     idx, _ = gram_setup
-    pats = ["scan merge", "row sca", "batch batch", "zzz absent", "ba"]
+    pats = ["scan merge", "row sca", "batch batch", "zzz absent"]
     stats = {}
-    substring.substring_count(idx, pats, stats=stats).collect()
+    substring.substring_locate(idx, pats, stats=stats).collect()
     assert stats["plan"] == plan
     # the plans are checked on a call without ``stats``: with it, the rarest
     # plan localCheckpoints its verify output (a JVM-side "Scan ExistingRDD"
     # of kernel rows, not a side table) to read its diagnostics
     executed_plans.clear()
-    got = {r["pattern"]: r["n_occurrences"]
-           for r in substring.substring_count(idx, pats).collect()}
-    assert got == {p: sum(_occurrences(t, p) for t in TEXTS) for p in pats}
+    got = sorted((r["pattern"], r["doc_id"], r["cpos"])
+                 for r in substring.substring_locate(idx, pats).collect())
+    assert got == sorted((p, d, i + 1) for p in pats
+                         for d, t in enumerate(TEXTS)
+                         for i in range(len(t)) if t.startswith(p, i))
+    _assert_no_python_rdd(executed_plans)
+
+
+def test_substring_count_plan_scans_no_python_rdd(gram_setup, executed_plans):
+    from full_text_index_spark import substring
+
+    idx, _ = gram_setup
+    pats = ["scan merge", "row sca", "batch batch", "zzz absent", "ba", "row"]
+    stats = {}
+    got = {r["pattern"]: (r["n_docs_matching"], r["n_occurrences"])
+           for r in substring.substring_count(idx, pats, stats=stats).collect()}
+    assert stats["plan"] == "count_kernel"
+    assert got == {p: (sum(_occurrences(t, p) > 0 for t in TEXTS),
+                       sum(_occurrences(t, p) for t in TEXTS)) for p in pats}
     _assert_no_python_rdd(executed_plans)
 
 

@@ -5,6 +5,7 @@ reference's count/locate semantics (utils/interface.h:59-66)."""
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -523,3 +524,130 @@ def test_gram_code_supplementary_plane_roundtrip(spark, tmp_path_factory):
             if pos:
                 want[(p, d)] = pos
     assert {k: sorted(v) for k, v in got.items()} == want and len(want) == 3
+
+
+# ---------------------------------------------------------------------------
+# the counting kernel alone (no Spark): synthetic posting rows vs str.find
+# ---------------------------------------------------------------------------
+
+_BIG = 1 << 45  # generation-shifted doc ids start above 2**44
+
+
+def _gram_rows(texts: dict[int, str], block_size: int, n_segments: int = 2,
+               k: int = 3) -> pd.DataFrame:
+    """Positional k-gram posting rows of ``texts`` (doc_id → text), one row
+    per (segment, gram), packed by the build's own packer."""
+    from full_text_index_spark.build import _pack_runs
+
+    occ = sorted((d % n_segments, t[i:i + k], d, i + 1)
+                 for d, t in texts.items() for i in range(len(t) - k + 1))
+    return _pack_runs(pd.DataFrame(occ, columns=["segment", "term", "doc_id",
+                                                 "tpos"]), block_size)
+
+
+def _tomb_rows(doc_ids, n_segments: int = 2) -> pd.DataFrame:
+    from full_text_index_spark.codec import encode_gaps
+
+    by_seg: dict[int, list[int]] = {}
+    for d in sorted(doc_ids):
+        by_seg.setdefault(d % n_segments, []).append(d)
+    return pd.DataFrame({"segment": list(by_seg), "term": [None] * len(by_seg),
+                         "doc_blob": [encode_gaps(ids) for ids in by_seg.values()]})
+
+
+def _str_find_counts(texts: dict[int, str], pat: str) -> tuple[int, int]:
+    per_doc = []
+    for t in texts.values():
+        n, j = 0, t.find(pat)
+        while j != -1:
+            n, j = n + 1, t.find(pat, j + 1)
+        per_doc.append(n)
+    return sum(1 for n in per_doc if n), sum(per_doc)
+
+
+def _kernel_counts(tasks: list[pd.DataFrame], patterns: list[str],
+                   cf: dict[str, int]) -> dict[str, tuple[int, int]]:
+    """Run the kernel once per task (an empty frame is a task with no
+    rows) and sum its rows per pattern, as the groupBy after it does."""
+    from full_text_index_spark.substring import (
+        _count_plan,
+        _make_substring_count_kernel,
+    )
+
+    kernel = _make_substring_count_kernel(_count_plan(patterns, 3, cf))
+    got = {p: (0, 0) for p in patterns}
+    for task in tasks:
+        out = pd.concat(list(kernel(iter([task] if len(task) else []))))
+        assert sorted(out["pattern"]) == sorted(patterns)  # zero rows too
+        for p, d, o in zip(out["pattern"], out["n_docs"], out["n_occ"]):
+            got[p] = (got[p][0] + int(d), got[p][1] + int(o))
+    return got
+
+
+_KERNEL_TEXTS = {
+    0: "aaaaaaa b aaaa",                  # self-overlap: "aaaa" 4 + 1 times
+    1: "abcabc xabcabcabc abca",           # "abc" at slots 0 and 3 of "abcabc"
+    2: "xyz yzw zwq",                      # grams of "xyzw" present, unaligned
+    3: "the cat sat on the mat",
+    4: "row scan slow scan row",
+    5: "aaaa abcabc",
+    6: "zz",                               # no grams at all
+    7: "mat cat bat rat sat",
+}
+
+
+@pytest.mark.parametrize("block_size", [2, 128])
+@pytest.mark.parametrize("seed", [0, 1])
+def test_count_kernel_matches_str_find(block_size, seed):
+    """Self-overlap, a gram repeated at two slots, present-but-unaligned
+    grams, two generation rows of one gram in one task (the second
+    generation's ids ≥ 2**44), tombstones, a gram absent from a segment,
+    multi-block rows (block_size=2 runs the block-targeted decode) and an
+    empty task; the plan's cf is random, so the candidate slot varies."""
+    rng = np.random.default_rng(seed)
+    gen1 = {_BIG + d: t for d, t in _KERNEL_TEXTS.items() if d % 3 == 0}
+    texts = {**_KERNEL_TEXTS, **gen1}
+    deleted = {5, _BIG + 3}
+    rows = pd.concat([_gram_rows(_KERNEL_TEXTS, block_size),
+                      _gram_rows(gen1, block_size), _tomb_rows(deleted)],
+                     ignore_index=True)
+    patterns = ["aaaa", "abcabc", "xyzw", "the ", "at sat", " scan ", "cat",
+                "bcabca", "t on the mat", "row scan slow scan row", "aaaaaaa"]
+    grams = {p[i:i + 3] for p in patterns for i in range(len(p) - 2)}
+    present = set(rows["term"].dropna())
+    patterns = [p for p in patterns
+                if all(p[i:i + 3] in present for i in range(len(p) - 2))]
+    cf = {g: int(rng.integers(1, 50)) for g in grams}
+    tasks = [rows[rows["segment"] == s] for s in (0, 1)] + [rows.iloc[:0]]
+    got = _kernel_counts(tasks, patterns, cf)
+    live = {d: t for d, t in texts.items() if d not in deleted}
+    assert got == {p: _str_find_counts(live, p) for p in patterns}
+    assert got["aaaa"][1] > got["aaaa"][0]            # overlapping counted
+    assert got["xyzw"] == (0, 0)                      # unaligned grams
+    # one task holding both segments counts the same
+    assert _kernel_counts([rows], patterns, cf) == got
+
+
+def test_count_kernel_randomized():
+    """Low-alphabet random texts (dense repeats and block boundaries) over
+    three segments, patterns sliced from them: kernel = str.find."""
+    rng = np.random.default_rng(7)
+    block_size = 3
+    texts = {int(d): "".join(rng.choice(list("ab c"), int(rng.integers(0, 60))))
+             for d in rng.choice(10_000, 30, replace=False)}
+    rows = pd.concat([_gram_rows(texts, block_size, n_segments=3),
+                      _tomb_rows(list(texts)[:4], n_segments=3)],
+                     ignore_index=True)
+    present = set(rows["term"].dropna())
+    long_texts = [t for t in texts.values() if len(t) >= 12]
+    patterns = sorted({t[i:i + m] for t in long_texts[:12]
+                       for i, m in [(int(rng.integers(0, len(t) - 10)),
+                                     int(rng.integers(3, 10)))]})
+    patterns = [p for p in patterns
+                if all(p[i:i + 3] in present for i in range(len(p) - 2))]
+    cf = {p[i:i + 3]: int(rng.integers(1, 9)) for p in patterns
+          for i in range(len(p) - 2)}
+    tasks = [rows[rows["segment"] == s] for s in range(3)]
+    live = {d: t for d, t in list(texts.items())[4:]}
+    assert _kernel_counts(tasks, patterns, cf) == {
+        p: _str_find_counts(live, p) for p in patterns}
