@@ -12,7 +12,7 @@ document truncate (so the minimum effectively also ranges over the
 shorter tail slice).  Every start position is reported independently —
 both engines count the same set.
 
-Plan (Spark-first, candidate + verify like the exact rarest-gram path):
+Plan (Spark-first, candidate + verify like exact `substring_locate`):
 
 1. **q-gram count filter** (Jokinen & Ukkonen 1991; the filtration behind
    agrep/nrgrep): an occurrence of P with <= e edits still contains at

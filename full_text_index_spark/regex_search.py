@@ -17,7 +17,7 @@ Plan (Spark-first, two stages):
    (`required_literal_branches`).  The rarest run per branch (estimated
    from term_stats window-gram counts — the same driver-side stats read
    the substring planner does) is located through the existing machinery:
-   `substring_locate` for runs ≥ k (rarest-gram-first candidate+verify),
+   `substring_locate` for runs ≥ k (the segment-local cover kernel),
    `substring_locate_short` for shorter runs (prefix grams + tails).  A
    branch whose required literal never occurs contributes nothing — an
    absent-literal regex is answered 0 with NO text access at all.

@@ -25,18 +25,19 @@ This module is the Spark-native substring self-index:
 * **Query** — for a pattern P of length L ≥ k, every window
   ``g_i = P[i:i+k]`` (i = 0..L−k) must occur at aligned position p+i.  If
   all windows align, every char of P is covered, so the match is EXACT — no
-  text access, no verify scan.  The default plan is rarest-gram-first:
-  candidates come from the least-frequent window gram only, and the
-  remaining grams of a greedy char-cover are verified by a fully
-  DISTRIBUTED block-targeted kernel (probes shuffle to the postings — the
-  candidate set never touches the driver).  For L < k, positions come from
+  text access, no verify scan.  One segment-local kernel answers it where
+  the postings live: per segment, the rarest gram of a greedy char-cover
+  gives the candidate starts, and the cover's other grams are checked at
+  start + slot, their multi-block rows decoded only at the blocks of
+  candidate docs (``_segment_starts``).  For L < k, positions come from
   the k-grams prefixed by P plus the tails table (``substring_locate_short``)
   — any pattern length is answered from the index, like the reference
   (sau/SAu.c:253-344 binary-searches even m=1).
 
 * **Count** — never locates (the reference's count is cheaper than its
   locate, ssa/SSA.cpp:242-261): short and length-k patterns are answered by
-  one stats lookup, longer ones by one segment-local counting kernel.
+  one stats lookup, longer ones by the same kernel emitting per-pattern
+  sums instead of occurrences.
 
 * **Adaptive cutover** — ``substring_search`` keeps the whole-corpus scan
   for tiny corpora, the SMALLFILESIZE analog (reference: fm/fm_index.h:20-22
@@ -446,86 +447,13 @@ def _gram_k(index: InvertedIndex) -> int:
     return int(unit.split("-", 1)[1])
 
 
-# local-index/position packing for the verify kernel's membership keys:
-# probe doc ids are first mapped to dense LOCAL indexes (< number of probed
-# docs, far below 2^31), so idx·2^32 + pos never overflows int64 no matter
-# how large the generation-shifted doc_id is (ADVICE r03 high: the old
-# doc_id·2^32 + pos packing wrapped mod 2^64 for generation ≥ 1 ids —
-# GEN_SHIFT = 44 — and could cross-confirm occurrences across generations)
+# local-index/position packing for the kernels' occurrence keys: doc ids
+# are first mapped to dense LOCAL indexes (< docs in the segment, far below
+# 2^31), so idx·2^32 + pos never overflows int64 no matter how large the
+# generation-shifted doc_id is (ADVICE r03 high: a doc_id·2^32 + pos
+# packing wraps mod 2^64 for generation ≥ 1 ids — GEN_SHIFT = 44 — and
+# could cross-confirm occurrences across generations)
 _KEY_SHIFT = np.int64(1) << np.int64(32)
-
-# below this total posting volume (Σ cf over ALL window grams) the
-# all-windows join is a single cheap job — the rarest-first plan's extra
-# stages (probe shuffle, verify job) would cost more than they save.  The
-# chooser is COST-BASED: both numbers come free from term_stats before any
-# decode happens.
-ALLJOIN_CHEAP_CF = 250_000
-
-# rarest-first must cut ESTIMATED decoded volume by at least this factor
-# to repay its extra stages (probe shuffle + verify job vs the alljoin's
-# single job).  The estimate is block-aware (see the chooser): each
-# verify gram decodes at most one block per candidate, capped by its own
-# cf — so on flat gram-frequency workloads (random slices over a
-# low-diversity corpus, where candidates touch nearly every block of
-# every verify gram) the estimate approaches all_cf and the alljoin wins,
-# while a genuinely rare candidate gram bounds the verify decode to
-# cand·block ≪ all_cf and rarest-first wins by the real ratio.  The old
-# candidate-COUNT heuristic (total_cand·4 > all_cf) ignored verify block
-# decodes and picked rarest-first on flat workloads where measured decode
-# reduction was only ~1.4× (BENCH §d control rows) — 17 s vs ~3 s serial
-# on the bench pattern set.
-RAREST_WIN_FACTOR = 4
-
-
-def _locate_via_all_windows(index: InvertedIndex,
-                            patterns: list[str]) -> DataFrame:
-    """The r02 plan: decode EVERY window gram's positions, join against a
-    broadcast (pattern, slot, gram) table, keep aligned starts hit by all
-    slots.  Exact, fully distributed, constant stage count — but its decode
-    cost is O(Σ posting lengths of ALL window grams), so a pattern
-    containing a head gram ("th ", " a ") decodes that gram's entire
-    corpus-wide position list.  Kept for workloads whose grams are all
-    cheap or uniformly common (the cost-based chooser picks it there)."""
-    spark = index.spark
-    # patterns ride the wide aggregation as small int pids, not strings
-    # (guide §2.3 — shuffle fewer bytes: the groupBy moves ~cf(all grams)
-    # rows, and the pattern string was its widest key); the string comes
-    # back via a broadcast join over the |patterns|-row map at the end
-    pats = sorted(set(patterns))
-    pid_of = {p: i for i, p in enumerate(pats)}
-    slot_rows = []
-    for p in pats:
-        for i in range(len(p) - _gram_k(index) + 1):
-            slot_rows.append(
-                (pid_of[p], i, p[i:i + _gram_k(index)],
-                 len(p) - _gram_k(index) + 1)
-            )
-    slots = local_frame(
-        spark, slot_rows, "pid int, slot int, term string, n_slots int"
-    )
-    pid_map = local_frame(
-        spark, [(i, p) for p, i in pid_of.items()], "pid int, pattern string"
-    )
-    grams = sorted({r[2] for r in slot_rows})
-    gp = term_positions(index, grams)
-    # aligned window start p0 = cpos − slot; a hit per slot means every
-    # char of the pattern matched (windows cover all of P).  count(*) IS
-    # the distinct slot count here: gp rows are unique per (term, doc,
-    # tpos) and slot rows per (pid, slot), so no (pid, slot, doc, cpos)
-    # pair can repeat — count_distinct only added a second aggregation
-    # layer over the widest shuffle of the plan.
-    return (
-        gp.join(F.broadcast(slots), "term")
-        .select(
-            "pid", "n_slots", "doc_id",
-            (F.col("tpos") - F.col("slot")).alias("cpos"),
-        )
-        .groupBy("pid", "n_slots", "doc_id", "cpos")
-        .agg(F.count(F.lit(1)).alias("n_hit"))
-        .where(F.col("n_hit") == F.col("n_slots"))
-        .join(F.broadcast(pid_map), "pid")
-        .select("pattern", "doc_id", "cpos")
-    )
 
 
 def _greedy_cover(windows: list[str], cf: dict[str, int],
@@ -550,153 +478,33 @@ def _greedy_cover(windows: list[str], cf: dict[str, int],
     return sorted(cover)
 
 
-def _make_dist_verify_kernel():
-    """mapInPandas kernel over the UNION of verify-gram posting rows and
-    probe rows (both routed to the same shuffle partition by their
-    (term, segment) hash): for each (term, segment) group, decode ONLY the
-    posting blocks containing a probed doc (block directory → searchsorted,
-    ``codec.candidate_blocks``) and confirm
-    (doc, pos) membership.  Emits one row per confirmed check, plus one
-    stats row (slot = −1, cpos = decoded bytes) per task so plan benchmarks
-    can report decoded volume.  Fully distributed: the candidate set never
-    touches the driver and nothing rides in the task closure
-    (VERDICT r03 #1)."""
-    import pandas as pd
-
-    from full_text_index_spark.codec import candidate_blocks, decode_blocks
-
-    def verify(iterator):
-        pdfs = [p for p in iterator]
-        stats_bytes = 0
-        out = []
-        whole = pd.concat(pdfs, ignore_index=True) if pdfs else None
-        if whole is not None and len(whole):
-            posts = whole[whole["kind"] == 0]
-            probes = whole[whole["kind"] == 1]
-            post_groups: dict[tuple, list] = {}
-            for row in posts.itertuples(index=False):
-                post_groups.setdefault((row.term, row.segment), []).append(row)
-            if len(probes) and post_groups:
-                for (term, seg), g in probes.groupby(
-                    ["term", "segment"], sort=False
-                ):
-                    prows = post_groups.get((term, seg))
-                    if not prows:
-                        continue
-                    dN = g["doc_id"].to_numpy(np.int64)
-                    pN = g["pos"].to_numpy(np.int64)
-                    u = np.unique(dN)
-                    need_key = (
-                        np.searchsorted(u, dN).astype(np.int64) * _KEY_SHIFT
-                        + pN
-                    )
-                    hit_all = np.zeros(len(dN), dtype=bool)
-                    for row in prows:
-                        p = decode_blocks(row, candidate_blocks(row, u), pos=True)
-                        stats_bytes += p.nbytes
-                        docs_rep = np.repeat(p.doc, p.tf)
-                        idx = np.searchsorted(u, docs_rep)
-                        ok = idx < len(u)
-                        ok[ok] = u[idx[ok]] == docs_rep[ok]
-                        have = idx[ok].astype(np.int64) * _KEY_SHIFT + p.pos[ok]
-                        hit_all |= np.isin(need_key, have)
-                    if hit_all.any():
-                        out.append(
-                            pd.DataFrame(
-                                {
-                                    "pattern": g["pattern"].to_numpy()[hit_all],
-                                    "doc_id": dN[hit_all],
-                                    "cpos": g["cpos"].to_numpy(np.int64)[hit_all],
-                                    "slot": g["slot"].to_numpy(np.int64)[hit_all],
-                                }
-                            )
-                        )
-        out.append(
-            pd.DataFrame(
-                {"pattern": [None], "doc_id": [np.int64(-1)],
-                 "cpos": [np.int64(stats_bytes)], "slot": [np.int64(-1)]}
-            )
-        )
-        yield pd.concat(out, ignore_index=True)
-
-    return verify
-
-
-def _verify_probes(index: InvertedIndex, matched: DataFrame,
-                   probes: DataFrame, stats: dict | None = None) -> DataFrame:
-    """Distributed candidate verification: probe rows (term, segment,
-    doc_id, pos, pattern, cpos, slot) and the verify grams' posting rows are
-    UNIONed and routed to the same shuffle partition by their
-    (term, segment) hash (functions.util.route).  Each posting blob ships
-    at most once — probes shuffle TO the postings, never the reverse — so
-    verify traffic scales with candidate count + touched index slice,
-    never their product.
-    Returns the confirmed probe rows (pattern, doc_id, cpos, slot)."""
-    spark = index.spark
-    n_buckets = max(2 * spark.sparkContext.defaultParallelism, 8)
-    null_bin = F.lit(None).cast("binary")
-    post = matched.select(
-        F.lit(0).alias("kind"), "term", "segment",
-        "doc_blob", "tf_blob", "pos_blob",
-        "block_last", "block_doc_off", "block_tf_off", "block_pos_off",
-        F.lit(-1).cast("long").alias("doc_id"),
-        F.lit(-1).cast("long").alias("pos"),
-        F.lit(None).cast("string").alias("pattern"),
-        F.lit(-1).cast("long").alias("cpos"),
-        F.lit(-1).cast("int").alias("slot"),
-    )
-    prob = probes.select(
-        F.lit(1).alias("kind"), "term", "segment",
-        null_bin.alias("doc_blob"), null_bin.alias("tf_blob"),
-        null_bin.alias("pos_blob"),
-        F.lit(None).cast("array<long>").alias("block_last"),
-        F.lit(None).cast("array<int>").alias("block_doc_off"),
-        F.lit(None).cast("array<int>").alias("block_tf_off"),
-        F.lit(None).cast("array<int>").alias("block_pos_off"),
-        "doc_id", "pos", "pattern", "cpos", "slot",
-    )
-    mixed = route(post.unionByName(prob), F.hash("term", "segment"), n_buckets)
-    raw = mixed.mapInPandas(
-        _make_dist_verify_kernel(),
-        schema="pattern string, doc_id long, cpos long, slot long",
-    )
-    if stats is not None:
-        # bench diagnostics: materialize once so the stats aggregation and
-        # the confirmations both read the SAME kernel execution (the lazy
-        # plan would run the most expensive job twice — ADVICE r03)
-        raw = raw.localCheckpoint()
-        stats["verify_decoded_bytes"] = int(
-            raw.where(F.col("slot") < 0).agg(F.sum("cpos")).first()[0] or 0
-        )
-    return raw.where(F.col("slot") >= 0)
+_LOCATE_DDL = "pattern string, doc_id long, cpos long"
 
 
 def substring_locate(index: InvertedIndex, patterns: list[str],
-                     *, plan: str = "auto",
-                     stats: dict | None = None) -> DataFrame:
+                     *, stats: dict | None = None) -> DataFrame:
     """`locate` for arbitrary substrings (reference: utils/interface.h:66):
     every exact, case-sensitive, OVERLAPPING occurrence as
     (pattern, doc_id, cpos) with cpos the 1-based character position —
     answered entirely from the k-gram postings (no text access).
 
-    Default plan is RAREST-GRAM-FIRST (VERDICT r02 #2): candidates come
-    from decoding only the least-frequent window gram of each pattern; the
-    remaining grams of a greedy char-cover are verified by BLOCK-TARGETED
-    position lookups (the posting rows' block directory),
-    so a pattern containing a head gram ("th ", " a ") never decodes that
-    gram's corpus-wide position list — decode cost is
-    O(cf(rarest gram) + touched blocks), the Spark analog of backward
-    search starting from the rarest end (ssa/SSA.cpp:242-261 costs O(m)
-    regardless of char frequency; our cost is governed by the rare gram,
-    not the common one).  Verification is FULLY DISTRIBUTED (VERDICT r03
-    #1): candidates become probe rows shuffled to the verify grams'
-    postings — no driver staging, no closure shipping, no size cap — so
-    the plan's asymptotic win holds for rare-but-huge candidate sets too.
+    The plan is ``substring_count``'s (``_cover_kernel``): one driver
+    collect of the window grams' term_stats rows drops the patterns with
+    an absent gram, and one segment-routed kernel
+    (``_make_substring_locate_kernel``) emits the occurrences of the rest
+    where their postings live.  Per segment it decodes each pattern's
+    rarest greedy-cover gram whole — its occurrences are the candidate
+    starts — and checks the cover's other grams at start + slot, decoding
+    their multi-block rows only at the blocks of candidate docs.  So a
+    pattern containing a head gram ("th ", " a ") never decodes that
+    gram's corpus-wide position list: decode cost is governed by the rare
+    gram, the Spark analog of backward search starting from the rarest end
+    (ssa/SSA.cpp:242-261).  Tombstoned docs are masked inside the kernel;
+    ``stats``, if given, receives the plan record.
 
     Patterns shorter than the index's k are rejected — route them through
     substring_locate_short (indexed) or substring_search (dispatcher)."""
     k = _gram_k(index)
-    spark = index.spark
     patterns = list(dict.fromkeys(patterns))
     for p in patterns:
         if len(p) < k:
@@ -704,152 +512,9 @@ def substring_locate(index: InvertedIndex, patterns: list[str],
                 f"pattern {p!r} shorter than gram size {k}; use "
                 "substring_locate_short or substring_search"
             )
-    if plan == "alljoin":
-        if stats is not None:
-            # diagnostics must survive every exit path (a bench shot that
-            # reads an empty dict looks like "chooser never ran")
-            stats["plan"] = "alljoin"
-            stats["plan_forced"] = True
-        return _locate_via_all_windows(index, patterns)
-
-    windows = {p: [p[i:i + k] for i in range(len(p) - k + 1)] for p in patterns}
-    all_grams = sorted({g for ws in windows.values() for g in ws})
-    ts = index.term_stats()
-    if len(all_grams) <= 256:
-        ts = ts.where(F.col("term").isin(all_grams))
-    else:  # constant-time planning for big workloads (IN-list grows linearly)
-        gdf = local_frame(spark, [(g,) for g in all_grams], "term string")
-        ts = ts.join(F.broadcast(gdf), "term")
-    cf_rows = ts.select("term", "cf").collect()
-    cf = {g: 0 for g in all_grams}
-    cf.update({r["term"]: int(r["cf"]) for r in cf_rows})
-
-    empty = local_frame(spark, [], "pattern string, doc_id long, cpos long")
-    # any absent window gram ⇒ the pattern cannot occur
-    live = [p for p in patterns if all(cf[g] > 0 for g in windows[p])]
-    if not live:
-        if stats is not None:
-            stats["plan"] = "no_live_patterns"
-            stats["all_cf"] = 0
-            stats["est_rarest_cf"] = 0
-        return empty
-
-    covers = {p: _greedy_cover(windows[p], cf, k) for p in live}
-    cand_slot = {p: min(covers[p], key=lambda s: (cf[windows[p][s]], s))
-                 for p in live}
-    all_cf = sum(cf[g] for p in live for g in set(windows[p]))
-    # cost-based choice ("auto"): the all-windows join is ONE job — it wins
-    # when the whole decode is cheap OR when the rarest plan's ESTIMATED
-    # decode isn't far below it.  Estimate: candidates decode cf(rarest);
-    # each verify gram decodes at most one block_size-posting block per
-    # candidate (the kernel's block-targeted lookup), never more than its
-    # whole list.  "rarest" forces the candidate+verify plan (benchmarks,
-    # tests).
-    block = int(index.meta.get("block_size", 128))
-    est_rarest = total_cand = 0
-    for p in live:
-        if len(covers[p]) <= 1:
-            continue  # no verify stage; both plans decode the same gram
-        cand_cf = cf[windows[p][cand_slot[p]]]
-        total_cand += cand_cf
-        est_rarest += cand_cf
-        for s in covers[p]:
-            if s != cand_slot[p]:
-                est_rarest += min(cf[windows[p][s]], cand_cf * block)
-    if stats is not None:
-        # chooser diagnostics (VERDICT r04 #2): which plan ran and why —
-        # lets a single bench shot adjudicate host-burst vs engine choice
-        stats["all_cf"] = int(all_cf)
-        stats["est_rarest_cf"] = int(est_rarest)
-    if plan == "auto" and (
-        all_cf <= ALLJOIN_CHEAP_CF
-        or est_rarest * RAREST_WIN_FACTOR > all_cf
-    ):
-        if stats is not None:
-            stats["plan"] = "alljoin"
-        return _locate_via_all_windows(index, patterns)
-    if stats is not None:
-        stats["plan"] = "rarest"
-
-    cand_slots_df = local_frame(
-        spark, [(p, cand_slot[p], windows[p][cand_slot[p]]) for p in live],
-        "pattern string, slot int, term string",
-    )
-    cand_grams = sorted({windows[p][cand_slot[p]] for p in live})
-    cands = (
-        term_positions(index, cand_grams)
-        .join(F.broadcast(cand_slots_df), "term")
-        .select(
-            "pattern", "doc_id",
-            (F.col("tpos") - F.col("slot")).alias("cpos"),
-        )
-        .where(F.col("cpos") >= 1)
-    )
-    no_verify = [p for p in live if len(covers[p]) == 1]
-    with_verify = [p for p in live if len(covers[p]) > 1]
-    final_parts = []
-    if no_verify:
-        final_parts.append(cands.where(F.col("pattern").isin(no_verify)))
-    if with_verify:
-        # per candidate, one probe per remaining cover slot: the probe's
-        # (doc, cpos+slot) must appear in that slot's gram postings
-        check_rows = [
-            (p, s, windows[p][s])
-            for p in with_verify for s in covers[p] if s != cand_slot[p]
-        ]
-        checks_df = local_frame(
-            spark, check_rows, "pattern string, slot int, term string"
-        )
-        nseg = int(index.meta["n_segments"])
-        probes = (
-            cands.where(F.col("pattern").isin(with_verify))
-            .join(F.broadcast(checks_df), "pattern")
-            .select(
-                "term",
-                F.pmod(F.col("doc_id"), F.lit(nseg)).cast("int")
-                .alias("segment"),
-                "doc_id",
-                (F.col("cpos") + F.col("slot")).alias("pos"),
-                "pattern", "cpos", F.col("slot").cast("int").alias("slot"),
-            )
-        )
-        verify_grams = sorted({r[2] for r in check_rows})
-        from full_text_index_spark.query import _matched_postings
-
-        matched = _matched_postings(index, verify_grams).select(
-            "segment", "term", "doc_blob", "tf_blob", "pos_blob",
-            "block_last", "block_doc_off", "block_tf_off", "block_pos_off",
-        )
-        if stats is not None:
-            stats["cand_grams_cf"] = int(total_cand)
-            stats["n_candidates"] = int(
-                cands.where(F.col("pattern").isin(with_verify)).count()
-            )
-        confirmed = _verify_probes(index, matched, probes, stats=stats)
-        nck = local_frame(
-            spark,
-            [(p, sum(1 for s in covers[p] if s != cand_slot[p]))
-             for p in with_verify],
-            "pattern string, n_checks int",
-        )
-        survivors = (
-            confirmed.groupBy("pattern", "doc_id", "cpos")
-            .agg(F.count("*").alias("n_ok"))
-            .join(F.broadcast(nck), "pattern")
-            .where(F.col("n_ok") == F.col("n_checks"))
-            .select("pattern", "doc_id", "cpos")
-        )
-        final_parts.append(survivors)
-    if not final_parts:
-        return empty
-    out = final_parts[0]
-    for part in final_parts[1:]:
-        out = out.unionByName(part)
-    # tombstoned docs excluded (deletes.py); the all-windows plan inherits
-    # its mask through term_positions
-    from full_text_index_spark.deletes import mask_deleted
-
-    return mask_deleted(index, out)
+    _, _, out = _cover_kernel(index, patterns, _make_substring_locate_kernel,
+                              _LOCATE_DDL, stats=stats)
+    return local_frame(index.spark, [], _LOCATE_DDL) if out is None else out
 
 
 def _count_from_locate(located: DataFrame, patterns_df: DataFrame) -> DataFrame:
@@ -1070,12 +735,12 @@ def _locate_any(index: InvertedIndex, patterns: list[str]) -> DataFrame:
     return out
 
 
-def _count_plan(patterns: list[str], k: int,
+def _cover_plan(patterns: list[str], k: int,
                 cf: dict[str, int]) -> dict[str, list[tuple[int, str]]]:
     """Per pattern (length ≥ k, every window gram present), the
-    ``(slot, gram)`` checks the counting kernel runs: the rarest slot of a
-    greedy char-cover first — its occurrences are the candidate starts —
-    then the cover's other slots, which each candidate must also hit."""
+    ``(slot, gram)`` checks the kernels run: the rarest slot of a greedy
+    char-cover first — its occurrences are the candidate starts — then
+    the cover's other slots, which each candidate must also hit."""
     plan = {}
     for p in patterns:
         windows = [p[i:i + k] for i in range(len(p) - k + 1)]
@@ -1093,118 +758,233 @@ def _member(sorted_keys: np.ndarray, keys: np.ndarray) -> np.ndarray:
     return ok
 
 
-def _make_substring_count_kernel(plan: dict[str, list[tuple[int, str]]]):
-    """mapInPandas kernel over SEGMENT-routed posting rows: per task, the
-    ``(pattern, n_docs, n_occ)`` of every pattern in ``plan``
-    (``_count_plan``), with a zero row for each pattern without a hit.
-
-    The plan rides in the closure; the input holds the posting rows of the
-    plan's grams (segment, term, doc/tf/pos blobs and block directory) and,
-    with a null ``term``, the task's tombstone ``doc_blob``s.  Per segment:
-
-    * one ``decode_rows`` call decodes every row whose gram is some
-      pattern's candidate gram, and every single-block row; each
-      occurrence is keyed (dense local doc index) · 2³² + pos
-      (``_KEY_SHIFT``: generation-shifted ids never overflow);
-    * a pattern's candidate starts are its first slot's keys shifted back
-      by that slot, tombstoned docs dropped; a start survives a check
-      (s, g) iff start + s is one of g's keys;
-    * the remaining rows (several blocks, verify-only gram) decode only
-      the blocks that can hold a surviving candidate doc of a pattern that
-      checks them (``candidate_blocks``/``decode_blocks``).
-
-    A doc lives in exactly one segment, so summing the rows over tasks is
-    the exact count."""
+def _kernel_plan(plan: dict[str, list[tuple[int, str]]]):
+    """A ``_cover_plan`` as the kernels' closure: its patterns, its grams
+    (a sorted ``pd.Index``), per pattern the checks as (slot, gram code)
+    with the candidate first, and the mask of candidate gram codes."""
     import pandas as pd
-
-    from full_text_index_spark.codec import (
-        candidate_blocks,
-        decode_blocks,
-        decode_rows,
-    )
 
     pats = list(plan)
     grams = pd.Index(sorted({g for checks in plan.values() for _, g in checks}))
     checks = [[(s, int(grams.get_loc(g))) for s, g in plan[p]] for p in pats]
     is_cand = np.zeros(len(grams), dtype=bool)
     is_cand[[c[0][1] for c in checks]] = True
+    return pats, grams, checks, is_cand
+
+
+def _task_segments(batches):
+    """A kernel task's input batches, one frame per segment."""
+    import pandas as pd
+
+    pdfs = [b for b in batches if len(b)]
+    if pdfs:
+        rows = pd.concat(pdfs, ignore_index=True)
+        for _, seg in rows.groupby("segment", sort=False):
+            yield seg
+
+
+def _segment_starts(rows, grams, checks, is_cand):
+    """One segment's rows → ``(udoc, starts)``: the segment's decoded doc
+    ids (sorted) and, per pattern of ``checks``, the sorted keys
+    (index into ``udoc``) · 2³² + 1-based start of its occurrences.
+
+    * one ``decode_rows`` call decodes every row whose gram is some
+      pattern's candidate gram, and every single-block row; each
+      occurrence is keyed (dense local doc index) · 2³² + pos
+      (``_KEY_SHIFT``: generation-shifted ids never overflow);
+    * a pattern's candidate starts are its first slot's keys shifted back
+      by that slot, tombstoned docs (the ``doc_blob`` of rows with a null
+      ``term``) dropped; a start survives a check (s, g) iff start + s is
+      one of g's keys;
+    * the remaining rows (several blocks, verify-only gram) decode only
+      the blocks that can hold a surviving candidate doc of a pattern that
+      checks them (``candidate_blocks``/``decode_blocks``)."""
+    from full_text_index_spark.codec import (
+        candidate_blocks,
+        decode_blocks,
+        decode_rows,
+    )
+
     pos_mask = _KEY_SHIFT - 1
+    tomb = rows["term"].isna().to_numpy()
+    code = grams.get_indexer(rows["term"])
+    posts, code = rows[code >= 0], code[code >= 0]
+    if not is_cand[code].any():
+        none = np.empty(0, dtype=np.int64)
+        return none, [none] * len(checks)
+    whole = is_cand[code] | (posts["block_last"].map(len).to_numpy() <= 1)
+    w = posts[whole]
+    p = decode_rows(w["doc_blob"], w["tf_blob"], pos_blobs=w["pos_blob"])
+    udoc = np.unique(p.doc)
+    occ_code = np.repeat(np.repeat(code[whole], p.counts), p.tf)
+    key = (np.repeat(np.searchsorted(udoc, p.doc), p.tf) * _KEY_SHIFT
+           + p.pos)
+    order = np.lexsort((key, occ_code))
+    key = key[order]
+    bounds = np.searchsorted(occ_code[order], np.arange(len(grams) + 1))
+    keys = {g: key[bounds[g]:bounds[g + 1]] for g in range(len(grams))}
+    live = None
+    if tomb.any():
+        live = ~np.isin(udoc, decode_rows(rows["doc_blob"][tomb]).doc)
+    blocked = posts[~whole]
+    late = set(code[~whole].tolist())
 
-    def segment_counts(rows: pd.DataFrame, n_docs: np.ndarray,
-                       n_occ: np.ndarray) -> None:
-        tomb = rows["term"].isna().to_numpy()
-        code = grams.get_indexer(rows["term"])
-        posts, code = rows[code >= 0], code[code >= 0]
-        if not is_cand[code].any():
-            return
-        whole = is_cand[code] | (posts["block_last"].map(len).to_numpy() <= 1)
-        w = posts[whole]
-        p = decode_rows(w["doc_blob"], w["tf_blob"], pos_blobs=w["pos_blob"])
-        udoc = np.unique(p.doc)
-        occ_code = np.repeat(np.repeat(code[whole], p.counts), p.tf)
-        key = (np.repeat(np.searchsorted(udoc, p.doc), p.tf) * _KEY_SHIFT
-               + p.pos)
-        order = np.lexsort((key, occ_code))
-        key = key[order]
-        bounds = np.searchsorted(occ_code[order], np.arange(len(grams) + 1))
-        keys = {g: key[bounds[g]:bounds[g + 1]] for g in range(len(grams))}
-        live = None
-        if tomb.any():
-            live = ~np.isin(udoc, decode_rows(rows["doc_blob"][tomb]).doc)
-        blocked = posts[~whole]
-        late = set(code[~whole].tolist())
-
-        starts = []
-        for chk in checks:
-            c, g = chk[0]
-            st = keys[g][(keys[g] & pos_mask) > c] - c
-            if live is not None:
-                st = st[live[st >> 32]]
+    starts = []
+    for chk in checks:
+        c, g = chk[0]
+        st = keys[g][(keys[g] & pos_mask) > c] - c
+        if live is not None:
+            st = st[live[st >> 32]]
+        for s, g in chk[1:]:
+            if g not in late:
+                st = st[_member(keys[g], st + s)]
+        starts.append(st)
+    if late:
+        # multi-block verify-only rows: decode only the blocks that
+        # can hold a candidate doc of a pattern checking them
+        want = {g: [] for g in late}
+        for st, chk in zip(starts, checks):
+            for _, g in chk[1:]:
+                if g in want:
+                    want[g].append(st >> 32)
+        found = {g: [keys[g]] for g in late}
+        for g, row in zip(code[~whole], blocked.itertuples(index=False)):
+            docs = udoc[np.unique(np.concatenate(want[g]))]
+            blocks = candidate_blocks(row, docs)
+            if not len(blocks):
+                continue
+            b = decode_blocks(row, blocks, pos=True)
+            doc = np.repeat(b.doc, b.tf)
+            ok = _member(udoc, doc)
+            found[g].append(np.searchsorted(udoc, doc[ok]) * _KEY_SHIFT
+                            + b.pos[ok])
+        for g in late:
+            keys[g] = np.sort(np.concatenate(found[g]))
+        for i, chk in enumerate(checks):
             for s, g in chk[1:]:
-                if g not in late:
-                    st = st[_member(keys[g], st + s)]
-            starts.append(st)
-        if late:
-            # multi-block verify-only rows: decode only the blocks that
-            # can hold a candidate doc of a pattern checking them
-            want = {g: [] for g in late}
-            for st, chk in zip(starts, checks):
-                for _, g in chk[1:]:
-                    if g in want:
-                        want[g].append(st >> 32)
-            found = {g: [keys[g]] for g in late}
-            for g, row in zip(code[~whole], blocked.itertuples(index=False)):
-                docs = udoc[np.unique(np.concatenate(want[g]))]
-                blocks = candidate_blocks(row, docs)
-                if not len(blocks):
-                    continue
-                b = decode_blocks(row, blocks, pos=True)
-                doc = np.repeat(b.doc, b.tf)
-                ok = _member(udoc, doc)
-                found[g].append(np.searchsorted(udoc, doc[ok]) * _KEY_SHIFT
-                                + b.pos[ok])
-            for g in late:
-                keys[g] = np.sort(np.concatenate(found[g]))
-            for i, chk in enumerate(checks):
-                for s, g in chk[1:]:
-                    if g in late:
-                        starts[i] = starts[i][_member(keys[g], starts[i] + s)]
-        for i, st in enumerate(starts):
-            if len(st):
-                n_occ[i] += len(st)
-                n_docs[i] += 1 + np.count_nonzero(np.diff(st >> 32))
+                if g in late:
+                    starts[i] = starts[i][_member(keys[g], starts[i] + s)]
+    return udoc, starts
+
+
+def _make_substring_count_kernel(plan: dict[str, list[tuple[int, str]]]):
+    """mapInPandas kernel over SEGMENT-routed posting rows: per task, the
+    ``(pattern, n_docs, n_occ)`` of every pattern in ``plan``
+    (``_cover_plan``), with a zero row for each pattern without a hit.
+
+    The plan rides in the closure; the input holds the posting rows of the
+    plan's grams (segment, term, doc/tf/pos blobs and block directory) and,
+    with a null ``term``, the task's tombstone ``doc_blob``s.  Each
+    segment's occurrences come from ``_segment_starts``.  A doc lives in
+    exactly one segment, so summing the rows over tasks is the exact
+    count."""
+    import pandas as pd
+
+    pats, grams, checks, is_cand = _kernel_plan(plan)
 
     def count(batches):
-        pdfs = [b for b in batches if len(b)]
         n_docs = np.zeros(len(pats), dtype=np.int64)
         n_occ = np.zeros(len(pats), dtype=np.int64)
-        if pdfs:
-            rows = pd.concat(pdfs, ignore_index=True)
-            for _, seg in rows.groupby("segment", sort=False):
-                segment_counts(seg, n_docs, n_occ)
+        for seg in _task_segments(batches):
+            _, starts = _segment_starts(seg, grams, checks, is_cand)
+            for i, st in enumerate(starts):
+                if len(st):
+                    n_occ[i] += len(st)
+                    n_docs[i] += 1 + np.count_nonzero(np.diff(st >> 32))
         yield pd.DataFrame({"pattern": pats, "n_docs": n_docs, "n_occ": n_occ})
 
     return count
+
+
+def _make_substring_locate_kernel(plan: dict[str, list[tuple[int, str]]]):
+    """The counting kernel's input and ``_segment_starts``, emitting the
+    occurrences instead: one ``(pattern, doc_id, cpos)`` frame per segment
+    that has any, yielded as soon as the segment is done."""
+    import pandas as pd
+
+    pats, grams, checks, is_cand = _kernel_plan(plan)
+    pats = np.asarray(pats, dtype=object)
+
+    def locate(batches):
+        for seg in _task_segments(batches):
+            udoc, starts = _segment_starts(seg, grams, checks, is_cand)
+            st = np.concatenate(starts)
+            if len(st):
+                yield pd.DataFrame({
+                    "pattern": np.repeat(pats, [len(s) for s in starts]),
+                    "doc_id": udoc[st >> 32],
+                    "cpos": st & (_KEY_SHIFT - 1),
+                })
+
+    return locate
+
+
+def _cover_kernel(index: InvertedIndex, patterns: list[str], make_kernel,
+                  schema: str, *, short: list[str] | None = None,
+                  lookup_k: bool = False, stats: dict | None = None):
+    """The driver half of ``substring_count`` and ``substring_locate``.
+
+    One collect (``_stats_lookup``) reads the term_stats rows of every
+    window gram of the patterns of length ≥ k and the short_stats rows of
+    ``short``.  A pattern with an absent window gram cannot occur.  Every
+    other one — except, with ``lookup_k``, the length-k patterns, whose
+    one gram's stats are their count — gets a ``_cover_plan`` entry, and
+    ``make_kernel(plan)`` runs over the posting rows of the plan's grams
+    plus the tombstone rows (null ``term``), routed by segment.
+
+    Returns ``(found, absent, out)``: the lookup ``{gram: (df, cf)}``, the
+    absent patterns, and the kernel's output (None when no pattern needs
+    it).  ``stats``, if given, receives the plan record — driver values
+    only, no extra job: ``plan`` (``kernel``, or ``lookup`` when no kernel
+    runs), ``n_absent``, ``n_live`` (the patterns the kernel runs),
+    ``live_cf`` (Σcf of the grams it reads), ``kernel_tasks`` and
+    ``block_decode_grams`` (verify-only grams with df above the block
+    size: only their rows can take the block-targeted decode; which rows
+    have more than one block is known only inside the kernel)."""
+    from full_text_index_spark.deletes import tombstone_segment_blobs
+    from full_text_index_spark.query import _matched_postings
+
+    k = _gram_k(index)
+    spark = index.spark
+    windows = {p: [p[i:i + k] for i in range(len(p) - k + 1)]
+               for p in patterns if len(p) >= k}
+    found = _stats_lookup(
+        index, sorted({g for ws in windows.values() for g in ws}), short or []
+    )
+    absent = [p for p, ws in windows.items() if any(g not in found for g in ws)]
+    live = [p for p, ws in windows.items()
+            if all(g in found for g in ws) and not (lookup_k and len(ws) == 1)]
+    plan = _cover_plan(live, k, {g: cf for g, (_, cf) in found.items()})
+    live_grams = sorted({g for checks in plan.values() for _, g in checks})
+    n_tasks = kernel_tasks(spark, index.n_segments) if plan else 0
+    out = None
+    if plan:
+        mp = _matched_postings(index, live_grams).select(
+            "segment", "term", "doc_blob", "tf_blob", "pos_blob",
+            "block_last", "block_doc_off", "block_tf_off", "block_pos_off",
+        )
+        tomb = tombstone_segment_blobs(index)
+        if tomb is not None:
+            mp = mp.unionByName(
+                tomb.withColumn("segment", F.col("segment").cast(
+                    mp.schema["segment"].dataType)),
+                allowMissingColumns=True,
+            )
+        out = route(mp, "segment", n_tasks).mapInPandas(
+            make_kernel(plan), schema=schema)
+    if stats is not None:
+        block = int(index.meta.get("block_size", 128))
+        cand = {checks[0][1] for checks in plan.values()}
+        stats.update({
+            "plan": "kernel" if plan else "lookup",
+            "n_absent": len(absent),
+            "n_live": len(plan),
+            "live_cf": sum(found[g][1] for g in live_grams),
+            "kernel_tasks": n_tasks,
+            "block_decode_grams": sum(
+                found[g][0] > block for g in live_grams if g not in cand),
+        })
+    return found, absent, out
 
 
 def substring_count(index: InvertedIndex, patterns: list[str],
@@ -1220,84 +1000,47 @@ def substring_count(index: InvertedIndex, patterns: list[str],
       with an absent window gram counts zero; a length-k pattern IS one
       gram and a shorter one a short_stats gram, so their (df, cf) are
       the answer;
-    * the other patterns are counted by one segment-routed kernel
-      (``_make_substring_count_kernel``) where their postings live, summed
-      over tasks by one gram-free aggregate.
+    * the other patterns are counted by the segment-routed kernel
+      ``substring_locate`` runs (``_cover_kernel``), emitting per-pattern
+      sums (``_make_substring_count_kernel``) that one gram-free
+      aggregate adds up over tasks.
 
     With live tombstones the stats tables still count deleted docs, so
     length-k patterns join the kernel (which masks them) and shorter ones
     count the masked ``substring_locate_short``.  ``stats``, if given,
-    receives the plan record — driver values only, no extra job: pattern
-    counts per class, the Σcf of the grams the kernel reads, its task
-    count and ``block_decode_grams`` (verify-only grams with df above the
-    block size: only their rows can take the block-targeted decode)."""
-    from full_text_index_spark.deletes import (
-        tombstone_count,
-        tombstone_segment_blobs,
-    )
-    from full_text_index_spark.query import _matched_postings
+    receives ``_cover_kernel``'s plan record plus the pattern counts
+    ``n_short`` and ``n_exact_k``."""
+    from full_text_index_spark.deletes import tombstone_count
 
     patterns = list(dict.fromkeys(patterns))
     k = _gram_k(index)
     spark = index.spark
     masked = tombstone_count(index) > 0
     short = [p for p in patterns if len(p) < k]
-    windows = {p: [p[i:i + k] for i in range(len(p) - k + 1)]
-               for p in patterns if len(p) >= k}
-    found = _stats_lookup(
-        index, sorted({g for ws in windows.values() for g in ws}),
-        [] if masked else short,
+    found, absent, counts = _cover_kernel(
+        index, patterns, _make_substring_count_kernel,
+        "pattern string, n_docs long, n_occ long",
+        short=[] if masked else short, lookup_k=not masked, stats=stats,
     )
-    absent = {p for p, ws in windows.items() if any(g not in found for g in ws)}
-    present = [p for p in windows if p not in absent]
-    counted = [p for p in present if masked or len(p) > k]
     answered = [(p, 0, 0) for p in absent]
     if not masked:
         answered += [(p, *found.get(p, (0, 0))) for p in short]
-        answered += [(p, *found[p]) for p in present if len(p) == k]
+        answered += [(p, *found[p]) for p in patterns
+                     if len(p) == k and p in found]
     parts = [local_frame(spark, answered, _COUNT_DDL)] if answered else []
-    plan = _count_plan(counted, k, {g: cf for g, (_, cf) in found.items()})
-    live_grams = sorted({g for checks in plan.values() for _, g in checks})
-    n_tasks = kernel_tasks(spark, index.n_segments) if plan else 0
-    if plan:
-        mp = _matched_postings(index, live_grams).select(
-            "segment", "term", "doc_blob", "tf_blob", "pos_blob",
-            "block_last", "block_doc_off", "block_tf_off", "block_pos_off",
-        )
-        tomb = tombstone_segment_blobs(index)
-        if tomb is not None:
-            mp = mp.unionByName(
-                tomb.withColumn("segment", F.col("segment").cast(
-                    mp.schema["segment"].dataType)),
-                allowMissingColumns=True,
-            )
-        parts.append(
-            route(mp, "segment", n_tasks)
-            .mapInPandas(_make_substring_count_kernel(plan),
-                         schema="pattern string, n_docs long, n_occ long")
-            .groupBy("pattern")
-            .agg(F.sum("n_docs").alias("n_docs_matching"),
-                 F.sum("n_occ").alias("n_occurrences"))
-        )
+    if counts is not None:
+        parts.append(counts.groupBy("pattern").agg(
+            F.sum("n_docs").alias("n_docs_matching"),
+            F.sum("n_occ").alias("n_occurrences"),
+        ))
     if masked and short:
         parts.append(_count_from_locate(
             substring_locate_short(index, short),
             local_frame(spark, [(p,) for p in short], "pattern string"),
         ))
     if stats is not None:
-        block = int(index.meta.get("block_size", 128))
-        cand = {checks[0][1] for checks in plan.values()}
-        stats.update({
-            "plan": "count_kernel" if plan else "lookup",
-            "n_short": len(short),
-            "n_exact_k": sum(len(p) == k for p in windows),
-            "n_long_live": sum(len(p) > k for p in counted),
-            "n_absent": len(absent),
-            "live_cf": sum(found[g][1] for g in live_grams),
-            "kernel_tasks": n_tasks,
-            "block_decode_grams": sum(
-                found[g][0] > block for g in live_grams if g not in cand),
-        })
+        stats["n_short"] = len(short)
+        stats["n_exact_k"] = sum(len(p) == k for p in patterns)
     if not parts:
         return local_frame(spark, [], _COUNT_DDL)
     out = parts[0]
@@ -1536,7 +1279,7 @@ def substring_locate_ci(
         )
         parts.append(scan_part)
     if not parts:
-        return local_frame(spark, [], "pattern string, doc_id long, cpos long")
+        return local_frame(spark, [], _LOCATE_DDL)
     out = parts[0]
     for part in parts[1:]:
         out = out.unionByName(part)

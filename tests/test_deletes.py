@@ -90,11 +90,9 @@ def test_substring_plans_exclude_deleted(spark, tmp_path):
                      block_size=8)
     gidx = InvertedIndex.open(spark, root)
     delete_docs(gidx, [0, 2])
-    for plan in ("rarest", "alljoin"):
-        got = sorted({r["doc_id"] for r in
-                      substring_locate(gidx, ["shared wo"],
-                                       plan=plan).collect()})
-        assert got == [1, 4], plan
+    got = sorted({r["doc_id"] for r in
+                  substring_locate(gidx, ["shared wo"]).collect()})
+    assert got == [1, 4]
     # short (prefix-gram + tails) plan
     from full_text_index_spark.substring import substring_locate_short
     got = sorted({r["doc_id"] for r in

@@ -164,31 +164,30 @@ def test_bm25_blockmax_plans_scan_no_python_rdd(spark, tiny_index, executed_plan
     _assert_no_python_rdd(executed_plans)
 
 
-@pytest.mark.parametrize("plan", ["alljoin", "rarest"])
+# the two pattern sets are the shapes an earlier planner split between an
+# all-gram join (every gram common) and a rarest-gram probe (one rare gram
+# among common ones); both now go through the one kernel
+@pytest.mark.parametrize("pats", [
+    pytest.param(["scan merge", "row sca", "batch batch", "zzz absent"],
+                 id="alljoin"),
+    pytest.param(["row scal", "hit ratio", "scan join", "zzz absent"],
+                 id="rarest"),
+])
 def test_substring_locate_plans_scan_no_python_rdd(gram_setup, executed_plans,
-                                                   monkeypatch, plan):
+                                                   pats):
     from full_text_index_spark import substring
 
-    if plan == "alljoin":
-        monkeypatch.setattr(substring, "ALLJOIN_CHEAP_CF", 10**12)
-    else:
-        monkeypatch.setattr(substring, "ALLJOIN_CHEAP_CF", -1)
-        monkeypatch.setattr(substring, "RAREST_WIN_FACTOR", 0)
     idx, _ = gram_setup
-    pats = ["scan merge", "row sca", "batch batch", "zzz absent"]
     stats = {}
-    substring.substring_locate(idx, pats, stats=stats).collect()
-    assert stats["plan"] == plan
-    # the plans are checked on a call without ``stats``: with it, the rarest
-    # plan localCheckpoints its verify output (a JVM-side "Scan ExistingRDD"
-    # of kernel rows, not a side table) to read its diagnostics
-    executed_plans.clear()
-    got = sorted((r["pattern"], r["doc_id"], r["cpos"])
-                 for r in substring.substring_locate(idx, pats).collect())
+    got = sorted((r["pattern"], r["doc_id"], r["cpos"]) for r in
+                 substring.substring_locate(idx, pats, stats=stats).collect())
+    assert stats["plan"] == "kernel"
     assert got == sorted((p, d, i + 1) for p in pats
                          for d, t in enumerate(TEXTS)
                          for i in range(len(t)) if t.startswith(p, i))
-    _assert_no_python_rdd(executed_plans)
+    # the plan rides in the kernel's closure: no side table to scan at all
+    assert executed_plans
+    assert not any("ExistingRDD" in plan for plan in executed_plans)
 
 
 def test_substring_count_plan_scans_no_python_rdd(gram_setup, executed_plans):
@@ -199,7 +198,7 @@ def test_substring_count_plan_scans_no_python_rdd(gram_setup, executed_plans):
     stats = {}
     got = {r["pattern"]: (r["n_docs_matching"], r["n_occurrences"])
            for r in substring.substring_count(idx, pats, stats=stats).collect()}
-    assert stats["plan"] == "count_kernel"
+    assert stats["plan"] == "kernel"
     assert got == {p: (sum(_occurrences(t, p) > 0 for t in TEXTS),
                        sum(_occurrences(t, p) for t in TEXTS)) for p in pats}
     _assert_no_python_rdd(executed_plans)

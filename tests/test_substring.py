@@ -149,11 +149,10 @@ def test_bm25_rejects_chargram_index(spark, gram_setup):
         _bm25_scored_exact(idx, qterms)
 
 
-def test_rarest_gram_plan_agrees_with_alljoin(gram_setup):
-    """The rarest-gram-first candidate+verify plan (default) and the
-    all-windows join plan are two independent implementations of the same
-    semantics — they must agree exactly, including on patterns built from
-    head grams (the case the new plan exists for) and repeated grams."""
+def test_locate_head_and_repeated_grams_match_brute_force(gram_setup):
+    """Locate is exact on patterns built from head grams (the case the
+    rarest-gram candidate exists for), repeated grams and long patterns
+    with many cover slots."""
     idx, _ = gram_setup
     pats = [p for p in PATTERNS if len(p) >= 3] + [
         "a a",          # head-ish grams in this fixture
@@ -161,27 +160,43 @@ def test_rarest_gram_plan_agrees_with_alljoin(gram_setup):
         "row scan slow fast",   # long pattern, many slots
         " and ",
     ]
-    new = _collect_locate(substring_locate(idx, pats, plan="rarest"))
-    old = _collect_locate(substring_locate(idx, pats, plan="alljoin"))
-    assert new == old == brute(pats)
+    assert _collect_locate(substring_locate(idx, pats)) == brute(pats)
 
 
-def test_rarest_verify_is_distributed_no_driver_candidates(gram_setup):
-    """The verify stage must not stage candidates driver-side: the plan is
-    DataFrame-only (probes shuffled to postings), so it works with stats
-    collection and produces decoded-volume accounting from the kernel's
-    stats rows (VERDICT r03 #1)."""
+def test_locate_plan_record_is_driver_only(spark, gram_setup):
+    """``stats`` receives the plan record substring_count fills, built from
+    driver values: once the index's tables have been read, planning a
+    locate runs exactly one Spark job (the stats lookup collect) —
+    candidates never reach the driver."""
+    from full_text_index_spark.functions.util import kernel_tasks
+    from full_text_index_spark.substring import _cover_plan
+
     idx, _ = gram_setup
-    pats = ["row sca", "aaa", "a aaaa"]
+    pats = ["row sca", "aaa", "a aaaa", "zzz not here"]
+    substring_locate(idx, pats)  # first reads list the parquet files
     stats: dict = {}
-    got = _collect_locate(substring_locate(idx, pats, plan="rarest",
-                                           stats=stats))
-    assert got == brute(pats)
-    assert stats["verify_decoded_bytes"] > 0
-    assert stats["n_candidates"] >= 1
+    sc = spark.sparkContext
+    sc.setJobGroup("locate-plan-record", "planning only")
+    try:
+        located = substring_locate(idx, pats, stats=stats)
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup("locate-plan-record"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert n_jobs == 1
+    assert _collect_locate(located) == brute(pats)
+    ts = {r["term"]: (r["df"], r["cf"]) for r in idx.term_stats().collect()}
+    plan = _cover_plan(pats[:3], 3, {g: cf for g, (_, cf) in ts.items()})
+    grams = {g for checks in plan.values() for _, g in checks}
+    verify_only = grams - {checks[0][1] for checks in plan.values()}
+    assert stats == {
+        "plan": "kernel", "n_absent": 1, "n_live": 3,
+        "live_cf": sum(ts[g][1] for g in grams),
+        "kernel_tasks": kernel_tasks(spark, idx.n_segments),
+        "block_decode_grams": sum(ts[g][0] > 8 for g in verify_only),
+    }
 
 
-def test_rarest_plan_multi_generation_no_cross_confirm(spark, tmp_path):
+def test_locate_multi_generation_no_cross_confirm(spark, tmp_path):
     """ADVICE r03 high: the old verify key packed doc_id·2^32 + pos, which
     wrapped for generation-shifted doc_ids (GEN_SHIFT = 44) and could
     cross-confirm an occurrence from gen-0's candidate gram with gen-1's
@@ -209,7 +224,7 @@ def test_rarest_plan_multi_generation_no_cross_confirm(spark, tmp_path):
                            k=3, n_segments=2, block_size=4)
     idx = InvertedIndex.open(spark, root)
     pats = ["abcd", "needle0", "bcd ", "abcZ"]
-    got = _collect_locate(substring_locate(idx, pats, plan="rarest"))
+    got = _collect_locate(substring_locate(idx, pats))
     from full_text_index_spark.streaming import GEN_SHIFT
 
     # brute force over the ACTUAL stored doc ids (gen-1 ids are shifted)
@@ -299,12 +314,11 @@ def test_display_substring(gram_setup):
             assert snip == TEXTS[d][lo - 1:cpos - 1 + len(p) + 5]
 
 
-def test_rarest_plan_randomized_differential(spark, tmp_path):
-    """Seeded random fuzz over the rarest-gram verify kernel: random
-    low-alphabet corpora (dense repeats → many block-boundary and
-    overlapping-occurrence cases) and random patterns sampled from the
-    corpus plus mutants; the candidate+verify plan must equal the
-    all-windows plan AND Python brute force on every (pattern, doc, cpos)."""
+def test_locate_randomized_differential(spark, tmp_path):
+    """Seeded random fuzz over the locate kernel: random low-alphabet
+    corpora (dense repeats → many block-boundary and overlapping-occurrence
+    cases) and random patterns sampled from the corpus plus mutants; locate
+    must equal Python brute force on every (pattern, doc, cpos)."""
     import random
 
     from full_text_index_spark.build import prepare_corpus
@@ -345,11 +359,7 @@ def test_rarest_plan_randomized_differential(spark, tmp_path):
                     out[(p, d)] = pos
         return out
 
-    want = brute_local(pats)
-    got_new = _collect_locate(substring_locate(idx, pats, plan="rarest"))
-    got_old = _collect_locate(substring_locate(idx, pats, plan="alljoin"))
-    assert got_new == want
-    assert got_old == want
+    assert _collect_locate(substring_locate(idx, pats)) == brute_local(pats)
 
     # short patterns (len < k) against the same fuzz corpus: the indexed
     # prefix-gram + tails plan must equal brute force too
@@ -527,7 +537,8 @@ def test_gram_code_supplementary_plane_roundtrip(spark, tmp_path_factory):
 
 
 # ---------------------------------------------------------------------------
-# the counting kernel alone (no Spark): synthetic posting rows vs str.find
+# the count and locate kernels alone (no Spark): synthetic posting rows vs
+# str.find
 # ---------------------------------------------------------------------------
 
 _BIG = 1 << 45  # generation-shifted doc ids start above 2**44
@@ -555,6 +566,16 @@ def _tomb_rows(doc_ids, n_segments: int = 2) -> pd.DataFrame:
                          "doc_blob": [encode_gaps(ids) for ids in by_seg.values()]})
 
 
+def _str_find_positions(texts: dict[int, str], patterns: list[str]):
+    """Every (pattern, doc_id, 1-based start) occurrence, overlaps too."""
+    for p in patterns:
+        for d, t in texts.items():
+            j = t.find(p)
+            while j != -1:
+                yield p, d, j + 1
+                j = t.find(p, j + 1)
+
+
 def _str_find_counts(texts: dict[int, str], pat: str) -> tuple[int, int]:
     per_doc = []
     for t in texts.values():
@@ -566,21 +587,32 @@ def _str_find_counts(texts: dict[int, str], pat: str) -> tuple[int, int]:
 
 
 def _kernel_counts(tasks: list[pd.DataFrame], patterns: list[str],
-                   cf: dict[str, int]) -> dict[str, tuple[int, int]]:
-    """Run the kernel once per task (an empty frame is a task with no
-    rows) and sum its rows per pattern, as the groupBy after it does."""
+                   cf: dict[str, int],
+                   live: dict[int, str]) -> dict[str, tuple[int, int]]:
+    """Run the count kernel once per task (an empty frame is a task with
+    no rows) and sum its rows per pattern, as the groupBy after it does.
+    The locate kernel runs on the same tasks; its rows must be exactly the
+    ``str.find`` positions of every pattern in the ``live`` texts."""
     from full_text_index_spark.substring import (
-        _count_plan,
+        _cover_plan,
         _make_substring_count_kernel,
+        _make_substring_locate_kernel,
     )
 
-    kernel = _make_substring_count_kernel(_count_plan(patterns, 3, cf))
+    plan = _cover_plan(patterns, 3, cf)
+    count = _make_substring_count_kernel(plan)
+    locate = _make_substring_locate_kernel(plan)
     got = {p: (0, 0) for p in patterns}
+    located = []
     for task in tasks:
-        out = pd.concat(list(kernel(iter([task] if len(task) else []))))
+        out = pd.concat(list(count(iter([task] if len(task) else []))))
         assert sorted(out["pattern"]) == sorted(patterns)  # zero rows too
         for p, d, o in zip(out["pattern"], out["n_docs"], out["n_occ"]):
             got[p] = (got[p][0] + int(d), got[p][1] + int(o))
+        for frame in locate(iter([task] if len(task) else [])):
+            located += zip(frame["pattern"], frame["doc_id"].tolist(),
+                           frame["cpos"].tolist())
+    assert sorted(located) == sorted(_str_find_positions(live, patterns))
     return got
 
 
@@ -619,13 +651,13 @@ def test_count_kernel_matches_str_find(block_size, seed):
                 if all(p[i:i + 3] in present for i in range(len(p) - 2))]
     cf = {g: int(rng.integers(1, 50)) for g in grams}
     tasks = [rows[rows["segment"] == s] for s in (0, 1)] + [rows.iloc[:0]]
-    got = _kernel_counts(tasks, patterns, cf)
     live = {d: t for d, t in texts.items() if d not in deleted}
+    got = _kernel_counts(tasks, patterns, cf, live)
     assert got == {p: _str_find_counts(live, p) for p in patterns}
     assert got["aaaa"][1] > got["aaaa"][0]            # overlapping counted
     assert got["xyzw"] == (0, 0)                      # unaligned grams
     # one task holding both segments counts the same
-    assert _kernel_counts([rows], patterns, cf) == got
+    assert _kernel_counts([rows], patterns, cf, live) == got
 
 
 def test_count_kernel_randomized():
@@ -649,5 +681,5 @@ def test_count_kernel_randomized():
           for i in range(len(p) - 2)}
     tasks = [rows[rows["segment"] == s] for s in range(3)]
     live = {d: t for d, t in list(texts.items())[4:]}
-    assert _kernel_counts(tasks, patterns, cf) == {
+    assert _kernel_counts(tasks, patterns, cf, live) == {
         p: _str_find_counts(live, p) for p in patterns}
