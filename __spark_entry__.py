@@ -310,7 +310,7 @@ def _lsh_bucket_sql(vec: str, n_planes: int, plane_offset: int = 0) -> str:
 def _q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = _index_for(spark, sf_dir)
     qdf = spark.createDataFrame(BM25_QUERIES, "qid long, terms array<string>")
-    out = bm25_topk(idx, qdf, k=10, use_blockmax=True)
+    out = bm25_topk(idx, qdf, k=10)
     return out.select(
         "qid", F.col("rank").cast("long").alias("rank"), "doc_id",
         _score_i(F.col("score")).alias("score_i"),
@@ -450,7 +450,7 @@ def _q_delete_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     compaction (Lucene deferred-merge semantics, deletes.py)."""
     idx = _del_index_for(spark, sf_dir)
     qdf = spark.createDataFrame(BM25_QUERIES, "qid long, terms array<string>")
-    out = bm25_topk(idx, qdf, k=10, use_blockmax=True)
+    out = bm25_topk(idx, qdf, k=10)
     return out.select(
         "qid", F.col("rank").cast("long").alias("rank"), "doc_id",
         _score_i(F.col("score")).alias("score_i"),

@@ -150,7 +150,6 @@ def bm25_topk(
     index: InvertedIndex,
     queries: DataFrame,
     k: int = 10,
-    use_blockmax: bool = True,
 ) -> DataFrame:
     """Top-k BM25 (k1, b from the index meta) for ``queries(qid, terms)``.
 
@@ -158,10 +157,10 @@ def bm25_topk(
     (qid, rank, doc_id, score) with rank 1..k, tie-break (score@6 desc,
     doc_id asc). Queries whose terms all miss the vocabulary return no rows
     (the reference's "char not in file" path, fm/fm_search.c:204-211).
-    ``use_blockmax`` picks the scorer: True runs the one-pass Python kernel
-    (``_make_bm25_kernel``), False the JVM join-and-aggregate path
-    (``_bm25_scored_exact``); both return the same rows.  Raises
-    ValueError on a chargram index, which holds no doc lengths.
+    Scoring is the one-pass Python kernel (``_make_bm25_kernel``); the JVM
+    join-and-aggregate path (``_bm25_scored_exact``, which collapse_topk
+    ranks) returns the same rows.  Raises ValueError on a chargram index,
+    which holds no doc lengths.
     """
     _require_token_unit(index)
     k1, b, avgdl = index.k1, index.b, index.avgdl
@@ -184,10 +183,7 @@ def bm25_topk(
         .select("qid", "term", "idf")
     )
 
-    if not use_blockmax:
-        return _rank_topk(_bm25_scored_exact(index, qterms), k)
-
-    # kernel path.  The query batch is SMALL (it fits the driver by
+    # The query batch is SMALL (it fits the driver by
     # construction) and the postings are BIG — so the term sets ride into
     # the kernel as closure state and each posting row is Arrow-shipped
     # exactly ONCE, never joined against the queries (a qid×postings join
@@ -552,47 +548,36 @@ def phrase_positions(index: InvertedIndex, phrases: list[str]) -> DataFrame:
     matching phrase_search's anchored-start enumeration on the stored text
     (the two paths agree per (phrase, doc)).
 
-    One batched plan for the whole workload (VERDICT r01 #6): a single join
-    of the decoded positions against a broadcast (phrase, slot, term) table,
-    then one aggregation counting distinct slot hits per aligned start
-    position — the number of stages is constant no matter how many phrases
-    are asked (the old form chained one join pipeline per phrase).
+    The phrase's tokens are width-1 windows of the segment-local
+    aligned-slot kernel the substring operators run
+    (``substring._cover_kernel``): one driver lookup of the terms' stats,
+    then one segment-routed kernel whose candidate starts are the rarest
+    term's positions, checked against every other slot at start + slot.
+    The kernel masks tombstoned docs and counts each (phrase, doc) where
+    its segment lives, so the plan is one stage whatever the phrase count.
     Output: (phrase, doc_id, n_occurrences)."""
     from full_text_index_spark.tokenizer import tokenize_py
 
-    spark = index.spark
-    slot_rows = []
-    for p in phrases:
-        terms = tokenize_py(p)
-        for i, t in enumerate(terms):
-            slot_rows.append((p, i, t, len(terms)))
-    slots = local_frame(
-        spark, slot_rows, "phrase string, slot int, term string, n_slots int"
-    )
-    all_terms = sorted({r[2] for r in slot_rows})
-    return _phrase_occurrence_counts(term_positions(index, all_terms), slots)
+    return _phrase_counts(index, {
+        p: [(i, [t]) for i, t in enumerate(tokenize_py(p))] for p in phrases
+    })
 
 
-def _phrase_occurrence_counts(tp: DataFrame, slots_df: DataFrame) -> DataFrame:
-    """The batched positional slot-join shared by phrase_positions and
-    phrase_prefix_search — aligned start p0 = tpos − slot: an occurrence at
-    p0 needs a DISTINCT slot hit for every slot (distinct, because a phrase
-    may repeat a term and prefix expansions share the last slot).  ONE copy
-    of the matching rule so a fix can't silently miss the other operator.
-    Output: (phrase, doc_id, n_occurrences) over overlapping starts."""
-    starts = (
-        tp.join(F.broadcast(slots_df), "term")
-        .select(
-            "phrase", "n_slots", "doc_id", "slot",
-            (F.col("tpos") - F.col("slot")).alias("p0"),
-        )
-        .groupBy("phrase", "n_slots", "doc_id", "p0")
-        .agg(F.count_distinct("slot").alias("n_hit"))
-        .where(F.col("n_hit") == F.col("n_slots"))
+def _phrase_counts(index: InvertedIndex, windows: dict) -> DataFrame:
+    """(phrase, doc_id, n_occurrences) of the token ``windows``
+    (``{phrase: [(slot, alternative terms)]}``) on the substring kernel."""
+    from full_text_index_spark.substring import (
+        _cover_kernel,
+        _make_doc_count_kernel,
     )
-    return starts.groupBy("phrase", "doc_id").agg(
-        F.count("*").alias("n_occurrences")
-    )
+
+    if not index.meta.get("positions"):
+        raise ValueError("index was built without positions=True")
+    ddl = "pattern string, doc_id long, n_occurrences long"
+    _, _, out = _cover_kernel(index, windows, 1, _make_doc_count_kernel, ddl)
+    if out is None:
+        out = local_frame(index.spark, [], ddl)
+    return out.withColumnRenamed("pattern", "phrase")
 
 
 def phrase_prefix_search(
@@ -605,56 +590,43 @@ def phrase_prefix_search(
     expanded against the vocab-sized dictionary to its top
     ``max_expansions`` completions by (cf desc, term) — Lucene's
     expansion cap, which bounds the decode no matter how promiscuous the
-    prefix — then matched with the same batched positional slot-join as
-    `phrase_positions`: the expansion terms all share the LAST slot, so a
-    start position matches when every fixed slot hits and ANY completion
-    sits at the end.  A prefix with no dictionary completion matches
-    nothing (the char-not-in-file posture).
+    prefix — then matched by the same aligned-slot kernel as
+    `phrase_positions`: the completions are the LAST slot's alternatives,
+    so a start position matches when every fixed slot hits and ANY
+    completion sits at the end.  A prefix with no dictionary completion
+    matches nothing (the char-not-in-file posture).
 
     Output: (phrase, doc_id, n_occurrences) — overlapping occurrences,
     like phrase_positions."""
     from full_text_index_spark.tokenizer import tokenize_py
 
-    spark = index.spark
-    fixed_rows, prefix_rows = [], []
-    for p in phrases:
-        terms = tokenize_py(p)
+    tokens = {p: tokenize_py(p) for p in phrases}
+    for p, terms in tokens.items():
         if not terms:
             raise ValueError(f"empty phrase: {p!r}")
-        for i, t in enumerate(terms[:-1]):
-            fixed_rows.append((p, i, t, len(terms)))
-        prefix_rows.append((p, len(terms) - 1, terms[-1], len(terms)))
     prefixes = local_frame(
-        spark, prefix_rows, "phrase string, slot int, prefix string, n_slots int"
+        index.spark, [(p, terms[-1]) for p, terms in tokens.items()],
+        "phrase string, prefix string",
     )
     exp_w = Window.partitionBy("phrase").orderBy(
         F.col("cf").desc(), F.col("term").asc()
     )
-    expansions = (
+    completions: dict[str, list[str]] = {p: [] for p in tokens}
+    for phrase, term in (
         index.term_stats().select("term", "cf")
         .join(F.broadcast(prefixes),
               F.col("term").startswith(F.col("prefix")))
         .withColumn("xr", F.row_number().over(exp_w))
         .where(F.col("xr") <= max_expansions)
-        .select("phrase", "slot", "term", "n_slots")
-    )
-    slots = expansions
-    if fixed_rows:
-        slots = local_frame(
-            spark, fixed_rows, "phrase string, slot int, term string, n_slots int"
-        ).unionByName(expansions)
-    slots_pd = slots.toPandas()  # ≤ |phrases|·(m + max_expansions) rows
-    all_terms = sorted(set(slots_pd["term"]))
-    # explicit schema: slots_pd can be EMPTY (every phrase a single-token
-    # prefix with no dictionary completion) and an empty pandas frame has no
-    # inferable types — "no completion matches nothing" must return 0 rows,
-    # not CANNOT_INFER_EMPTY_SCHEMA (ADVICE r04).
-    slots_df = local_frame(
-        spark, slots_pd, "phrase string, slot int, term string, n_slots int"
-    )
-    return _phrase_occurrence_counts(
-        term_positions(index, all_terms), slots_df
-    )
+        .select("phrase", "term")
+        .collect()  # ≤ |phrases| · max_expansions rows
+    ):
+        completions[phrase].append(term)
+    return _phrase_counts(index, {
+        p: [(i, [t]) for i, t in enumerate(terms[:-1])]
+        + [(len(terms) - 1, completions[p])]
+        for p, terms in tokens.items()
+    })
 
 
 def boolean_and(index: InvertedIndex, queries: DataFrame) -> DataFrame:

@@ -34,6 +34,12 @@ This module is the Spark-native substring self-index:
   — any pattern length is answered from the index, like the reference
   (sau/SAu.c:253-344 binary-searches even m=1).
 
+* **One aligned-slot matcher** — that kernel (``_cover_kernel``) is the
+  only implementation of "every slot hits at start + slot".  A slot may
+  name alternative grams, any of which hits: case-insensitive locate
+  passes case variants, and the token phrase operators in ``query`` pass
+  width-1 token windows, a prefix's completions as the last slot's.
+
 * **Count** — never locates (the reference's count is cheaper than its
   locate, ssa/SSA.cpp:242-261): short and length-k patterns are answered by
   one stats lookup, longer ones by the same kernel emitting per-pattern
@@ -456,26 +462,11 @@ def _gram_k(index: InvertedIndex) -> int:
 _KEY_SHIFT = np.int64(1) << np.int64(32)
 
 
-def _greedy_cover(windows: list[str], cf: dict[str, int],
-                  k: int) -> list[int]:
-    """Minimal-ish set of window slots covering every char of the pattern,
-    greedily preferring rare grams: slots sorted by (cf, slot); a slot is
-    taken iff it covers a still-uncovered char.  Slot 0 and the last slot
-    are always in the cover (chars 0 and L−1 have no other window), so the
-    cover verifies the pattern's full extent.  Verifying only a COVER is
-    exact: if every cover window matches at its aligned offset, every char
-    of P is pinned by some matched window."""
-    L = len(windows) + k - 1
-    order = sorted(range(len(windows)), key=lambda s: (cf[windows[s]], s))
-    covered = np.zeros(L, dtype=bool)
-    cover: list[int] = []
-    for s in order:
-        if not covered[s:s + k].all():
-            cover.append(s)
-            covered[s:s + k] = True
-        if covered.all():
-            break
-    return sorted(cover)
+def _gram_windows(patterns: list[str], k: int):
+    """Every length-k window of each pattern of length ≥ k, as the kernel's
+    ``{pattern: [(slot, [gram])]}``."""
+    return {p: [(i, [p[i:i + k]]) for i in range(len(p) - k + 1)]
+            for p in patterns if len(p) >= k}
 
 
 _LOCATE_DDL = "pattern string, doc_id long, cpos long"
@@ -488,19 +479,16 @@ def substring_locate(index: InvertedIndex, patterns: list[str],
     (pattern, doc_id, cpos) with cpos the 1-based character position —
     answered entirely from the k-gram postings (no text access).
 
-    The plan is ``substring_count``'s (``_cover_kernel``): one driver
-    collect of the window grams' term_stats rows drops the patterns with
-    an absent gram, and one segment-routed kernel
-    (``_make_substring_locate_kernel``) emits the occurrences of the rest
-    where their postings live.  Per segment it decodes each pattern's
-    rarest greedy-cover gram whole — its occurrences are the candidate
-    starts — and checks the cover's other grams at start + slot, decoding
-    their multi-block rows only at the blocks of candidate docs.  So a
-    pattern containing a head gram ("th ", " a ") never decodes that
-    gram's corpus-wide position list: decode cost is governed by the rare
-    gram, the Spark analog of backward search starting from the rarest end
-    (ssa/SSA.cpp:242-261).  Tombstoned docs are masked inside the kernel;
-    ``stats``, if given, receives the plan record.
+    The plan is ``substring_count``'s (``_cover_kernel`` over every
+    length-k window): one driver collect drops the patterns with an absent
+    gram, and one segment-routed kernel emits the occurrences of the rest
+    where their postings live — candidates from the rarest cover gram,
+    the other cover grams checked at start + slot and decoded only at the
+    candidates' blocks.  So a pattern containing a head gram ("th ")
+    never decodes that gram's corpus-wide position list: the Spark analog
+    of backward search from the rarest end (ssa/SSA.cpp:242-261).
+    Tombstoned docs are masked inside the kernel; ``stats``, if given,
+    receives the plan record.
 
     Patterns shorter than the index's k are rejected — route them through
     substring_locate_short (indexed) or substring_search (dispatcher)."""
@@ -512,8 +500,9 @@ def substring_locate(index: InvertedIndex, patterns: list[str],
                 f"pattern {p!r} shorter than gram size {k}; use "
                 "substring_locate_short or substring_search"
             )
-    _, _, out = _cover_kernel(index, patterns, _make_substring_locate_kernel,
-                              _LOCATE_DDL, stats=stats)
+    _, _, out = _cover_kernel(index, _gram_windows(patterns, k), k,
+                              _make_substring_locate_kernel, _LOCATE_DDL,
+                              stats=stats)
     return local_frame(index.spark, [], _LOCATE_DDL) if out is None else out
 
 
@@ -735,18 +724,27 @@ def _locate_any(index: InvertedIndex, patterns: list[str]) -> DataFrame:
     return out
 
 
-def _cover_plan(patterns: list[str], k: int,
-                cf: dict[str, int]) -> dict[str, list[tuple[int, str]]]:
-    """Per pattern (length ≥ k, every window gram present), the
-    ``(slot, gram)`` checks the kernels run: the rarest slot of a greedy
-    char-cover first — its occurrences are the candidate starts — then
-    the cover's other slots, which each candidate must also hit."""
+def _cover_plan(windows: dict[str, list[tuple[int, list[str]]]], width: int,
+                cf: dict[str, int]) -> dict[str, list[tuple[int, list[str]]]]:
+    """Per pattern, the ``(slot, alternatives)`` checks the kernels run: a
+    greedy cover of its windows (``width`` positions each, every
+    alternative present), taken in (summed alternative cf, slot) order iff
+    they cover a still-uncovered position.  The rarest window comes first
+    — its occurrences are the candidate starts — then the rest by slot.
+    Verifying only a cover is exact: every position of the pattern is
+    pinned by some matched window."""
     plan = {}
-    for p in patterns:
-        windows = [p[i:i + k] for i in range(len(p) - k + 1)]
-        cover = _greedy_cover(windows, cf, k)
-        c = min(cover, key=lambda s: (cf[windows[s]], s))
-        plan[p] = [(c, windows[c])] + [(s, windows[s]) for s in cover if s != c]
+    for p, ws in windows.items():
+        order = sorted(ws, key=lambda w: (sum(cf[g] for g in w[1]), w[0]))
+        covered = np.zeros(max(s for s, _ in ws) + width, dtype=bool)
+        cover = []
+        for s, alts in order:
+            if not covered[s:s + width].all():
+                cover.append((s, alts))
+                covered[s:s + width] = True
+            if covered.all():
+                break
+        plan[p] = cover[:1] + sorted(cover[1:])
     return plan
 
 
@@ -758,17 +756,28 @@ def _member(sorted_keys: np.ndarray, keys: np.ndarray) -> np.ndarray:
     return ok
 
 
-def _kernel_plan(plan: dict[str, list[tuple[int, str]]]):
+def _hit(keys: dict, alts: tuple, at: np.ndarray) -> np.ndarray:
+    """Mask of the keys ``at`` held by any alternative's keys."""
+    ok = _member(keys[alts[0]], at)
+    for g in alts[1:]:
+        ok |= _member(keys[g], at)
+    return ok
+
+
+def _kernel_plan(plan: dict[str, list[tuple[int, list[str]]]]):
     """A ``_cover_plan`` as the kernels' closure: its patterns, its grams
-    (a sorted ``pd.Index``), per pattern the checks as (slot, gram code)
-    with the candidate first, and the mask of candidate gram codes."""
+    (a sorted ``pd.Index``), per pattern the checks as (slot, tuple of
+    gram codes) with the candidate first, and the mask of candidate gram
+    codes."""
     import pandas as pd
 
     pats = list(plan)
-    grams = pd.Index(sorted({g for checks in plan.values() for _, g in checks}))
-    checks = [[(s, int(grams.get_loc(g))) for s, g in plan[p]] for p in pats]
+    grams = pd.Index(sorted({g for checks in plan.values()
+                             for _, alts in checks for g in alts}))
+    checks = [[(s, tuple(int(grams.get_loc(g)) for g in alts))
+               for s, alts in plan[p]] for p in pats]
     is_cand = np.zeros(len(grams), dtype=bool)
-    is_cand[[c[0][1] for c in checks]] = True
+    is_cand[[g for c in checks for g in c[0][1]]] = True
     return pats, grams, checks, is_cand
 
 
@@ -788,17 +797,19 @@ def _segment_starts(rows, grams, checks, is_cand):
     ids (sorted) and, per pattern of ``checks``, the sorted keys
     (index into ``udoc``) · 2³² + 1-based start of its occurrences.
 
-    * one ``decode_rows`` call decodes every row whose gram is some
-      pattern's candidate gram, and every single-block row; each
-      occurrence is keyed (dense local doc index) · 2³² + pos
+    * one ``decode_rows`` call decodes every row whose gram is an
+      alternative of some pattern's candidate slot, and every single-block
+      row; each occurrence is keyed (dense local doc index) · 2³² + pos
       (``_KEY_SHIFT``: generation-shifted ids never overflow);
-    * a pattern's candidate starts are its first slot's keys shifted back
-      by that slot, tombstoned docs (the ``doc_blob`` of rows with a null
-      ``term``) dropped; a start survives a check (s, g) iff start + s is
-      one of g's keys;
+    * a pattern's candidate starts are its first slot's keys (sorted over
+      its alternatives: one position holds one gram, so none repeat)
+      shifted back by that slot, tombstoned docs (the ``doc_blob`` of rows
+      with a null ``term``) dropped; a start survives a check
+      (s, alternatives) iff start + s is one of an alternative's keys;
     * the remaining rows (several blocks, verify-only gram) decode only
       the blocks that can hold a surviving candidate doc of a pattern that
-      checks them (``candidate_blocks``/``decode_blocks``)."""
+      checks them (``candidate_blocks``/``decode_blocks``); a slot with
+      such a ``late`` alternative is checked after that decode."""
     from full_text_index_spark.codec import (
         candidate_blocks,
         decode_blocks,
@@ -831,21 +842,23 @@ def _segment_starts(rows, grams, checks, is_cand):
 
     starts = []
     for chk in checks:
-        c, g = chk[0]
-        st = keys[g][(keys[g] & pos_mask) > c] - c
+        c, alts = chk[0]
+        ck = keys[alts[0]] if len(alts) == 1 else np.sort(
+            np.concatenate([keys[g] for g in alts]))
+        st = ck[(ck & pos_mask) > c] - c
         if live is not None:
             st = st[live[st >> 32]]
-        for s, g in chk[1:]:
-            if g not in late:
-                st = st[_member(keys[g], st + s)]
+        for s, alts in chk[1:]:
+            if late.isdisjoint(alts):
+                st = st[_hit(keys, alts, st + s)]
         starts.append(st)
     if late:
         # multi-block verify-only rows: decode only the blocks that
         # can hold a candidate doc of a pattern checking them
         want = {g: [] for g in late}
         for st, chk in zip(starts, checks):
-            for _, g in chk[1:]:
-                if g in want:
+            for _, alts in chk[1:]:
+                for g in late.intersection(alts):
                     want[g].append(st >> 32)
         found = {g: [keys[g]] for g in late}
         for g, row in zip(code[~whole], blocked.itertuples(index=False)):
@@ -861,13 +874,13 @@ def _segment_starts(rows, grams, checks, is_cand):
         for g in late:
             keys[g] = np.sort(np.concatenate(found[g]))
         for i, chk in enumerate(checks):
-            for s, g in chk[1:]:
-                if g in late:
-                    starts[i] = starts[i][_member(keys[g], starts[i] + s)]
+            for s, alts in chk[1:]:
+                if not late.isdisjoint(alts):
+                    starts[i] = starts[i][_hit(keys, alts, starts[i] + s)]
     return udoc, starts
 
 
-def _make_substring_count_kernel(plan: dict[str, list[tuple[int, str]]]):
+def _make_substring_count_kernel(plan: dict[str, list[tuple[int, list[str]]]]):
     """mapInPandas kernel over SEGMENT-routed posting rows: per task, the
     ``(pattern, n_docs, n_occ)`` of every pattern in ``plan``
     (``_cover_plan``), with a zero row for each pattern without a hit.
@@ -896,66 +909,91 @@ def _make_substring_count_kernel(plan: dict[str, list[tuple[int, str]]]):
     return count
 
 
-def _make_substring_locate_kernel(plan: dict[str, list[tuple[int, str]]]):
-    """The counting kernel's input and ``_segment_starts``, emitting the
-    occurrences instead: one ``(pattern, doc_id, cpos)`` frame per segment
-    that has any, yielded as soon as the segment is done."""
+def _segment_kernel(plan: dict[str, list[tuple[int, list[str]]]], rows,
+                    name: str):
+    """The counting kernel's input and ``_segment_starts``, emitting per
+    segment that has any one ``(pattern, doc_id, <name>)`` frame of the
+    ``rows(starts) -> (doc indexes, values)`` of each pattern's starts."""
     import pandas as pd
 
     pats, grams, checks, is_cand = _kernel_plan(plan)
     pats = np.asarray(pats, dtype=object)
 
-    def locate(batches):
+    def run(batches):
         for seg in _task_segments(batches):
             udoc, starts = _segment_starts(seg, grams, checks, is_cand)
-            st = np.concatenate(starts)
-            if len(st):
+            out = [rows(st) for st in starts]
+            idx = np.concatenate([i for i, _ in out])
+            if len(idx):
                 yield pd.DataFrame({
-                    "pattern": np.repeat(pats, [len(s) for s in starts]),
-                    "doc_id": udoc[st >> 32],
-                    "cpos": st & (_KEY_SHIFT - 1),
+                    "pattern": np.repeat(pats, [len(i) for i, _ in out]),
+                    "doc_id": udoc[idx],
+                    name: np.concatenate([v for _, v in out]),
                 })
 
-    return locate
+    return run
 
 
-def _cover_kernel(index: InvertedIndex, patterns: list[str], make_kernel,
-                  schema: str, *, short: list[str] | None = None,
-                  lookup_k: bool = False, stats: dict | None = None):
-    """The driver half of ``substring_count`` and ``substring_locate``.
+def _make_substring_locate_kernel(plan: dict[str, list[tuple[int, list[str]]]]):
+    """Every occurrence as ``(pattern, doc_id, cpos)``."""
+    return _segment_kernel(
+        plan, lambda st: (st >> 32, st & (_KEY_SHIFT - 1)), "cpos")
 
-    One collect (``_stats_lookup``) reads the term_stats rows of every
-    window gram of the patterns of length ≥ k and the short_stats rows of
-    ``short``.  A pattern with an absent window gram cannot occur.  Every
-    other one — except, with ``lookup_k``, the length-k patterns, whose
-    one gram's stats are their count — gets a ``_cover_plan`` entry, and
-    ``make_kernel(plan)`` runs over the posting rows of the plan's grams
-    plus the tombstone rows (null ``term``), routed by segment.
+
+def _make_doc_count_kernel(plan: dict[str, list[tuple[int, list[str]]]]):
+    """Per-doc occurrence counts as ``(pattern, doc_id, n_occurrences)``: a
+    doc lives in exactly one segment, so each row is final."""
+    return _segment_kernel(
+        plan, lambda st: np.unique(st >> 32, return_counts=True),
+        "n_occurrences")
+
+
+def _cover_kernel(index: InvertedIndex,
+                  windows: dict[str, list[tuple[int, list[str]]]],
+                  width: int, make_kernel, schema: str, *,
+                  short: list[str] | None = None, lookup_k: bool = False,
+                  stats: dict | None = None):
+    """The driver half of every aligned-slot matcher: substring count,
+    locate and case-insensitive locate, and the token phrase operators.
+
+    ``windows`` gives each pattern's ``(slot, alternatives)``, ``width``
+    positions wide.  One collect (``_stats_lookup``) reads the term_stats
+    rows of every alternative and the short_stats rows of ``short``;
+    absent alternatives are dropped, and a pattern left with an empty
+    window (or none) cannot occur.  Every other one — except, with
+    ``lookup_k``, the one-window patterns, whose gram's stats are their
+    count — gets a ``_cover_plan`` entry, and ``make_kernel(plan)`` runs
+    over the plan's posting rows plus the tombstone rows (null ``term``),
+    routed by segment.
 
     Returns ``(found, absent, out)``: the lookup ``{gram: (df, cf)}``, the
     absent patterns, and the kernel's output (None when no pattern needs
-    it).  ``stats``, if given, receives the plan record — driver values
-    only, no extra job: ``plan`` (``kernel``, or ``lookup`` when no kernel
-    runs), ``n_absent``, ``n_live`` (the patterns the kernel runs),
-    ``live_cf`` (Σcf of the grams it reads), ``kernel_tasks`` and
-    ``block_decode_grams`` (verify-only grams with df above the block
-    size: only their rows can take the block-targeted decode; which rows
-    have more than one block is known only inside the kernel)."""
+    it).  ``stats``, if given, receives the plan record (driver values, no
+    extra job): ``plan`` (``kernel``, or ``lookup``), ``n_absent``,
+    ``n_live`` (the patterns the kernel runs), ``cand_cf`` (Σcf of the
+    candidate slots' alternatives, decoded whole), ``verify_cf`` (Σcf of
+    the other grams it reads), ``kernel_tasks`` and ``block_decode_grams``
+    (verify-only grams with df above the block size: only their rows can
+    take the block-targeted decode)."""
     from full_text_index_spark.deletes import tombstone_segment_blobs
     from full_text_index_spark.query import _matched_postings
 
-    k = _gram_k(index)
     spark = index.spark
-    windows = {p: [p[i:i + k] for i in range(len(p) - k + 1)]
-               for p in patterns if len(p) >= k}
     found = _stats_lookup(
-        index, sorted({g for ws in windows.values() for g in ws}), short or []
+        index,
+        sorted({g for ws in windows.values() for _, alts in ws for g in alts}),
+        short or [],
     )
-    absent = [p for p, ws in windows.items() if any(g not in found for g in ws)]
-    live = [p for p, ws in windows.items()
-            if all(g in found for g in ws) and not (lookup_k and len(ws) == 1)]
-    plan = _cover_plan(live, k, {g: cf for g, (_, cf) in found.items()})
-    live_grams = sorted({g for checks in plan.values() for _, g in checks})
+    present = {p: [(s, [g for g in alts if g in found]) for s, alts in ws]
+               for p, ws in windows.items()}
+    absent = [p for p, ws in present.items()
+              if not ws or not all(alts for _, alts in ws)]
+    gone = set(absent)
+    live = {p: ws for p, ws in present.items()
+            if p not in gone and not (lookup_k and len(ws) == 1)}
+    plan = _cover_plan(live, width, {g: cf for g, (_, cf) in found.items()})
+    live_grams = sorted({g for checks in plan.values()
+                         for _, alts in checks for g in alts})
     n_tasks = kernel_tasks(spark, index.n_segments) if plan else 0
     out = None
     if plan:
@@ -974,15 +1012,16 @@ def _cover_kernel(index: InvertedIndex, patterns: list[str], make_kernel,
             make_kernel(plan), schema=schema)
     if stats is not None:
         block = int(index.meta.get("block_size", 128))
-        cand = {checks[0][1] for checks in plan.values()}
+        cand = {g for checks in plan.values() for g in checks[0][1]}
+        verify = [g for g in live_grams if g not in cand]
         stats.update({
             "plan": "kernel" if plan else "lookup",
             "n_absent": len(absent),
             "n_live": len(plan),
-            "live_cf": sum(found[g][1] for g in live_grams),
+            "cand_cf": sum(found[g][1] for g in cand),
+            "verify_cf": sum(found[g][1] for g in verify),
             "kernel_tasks": n_tasks,
-            "block_decode_grams": sum(
-                found[g][0] > block for g in live_grams if g not in cand),
+            "block_decode_grams": sum(found[g][0] > block for g in verify),
         })
     return found, absent, out
 
@@ -1018,7 +1057,7 @@ def substring_count(index: InvertedIndex, patterns: list[str],
     masked = tombstone_count(index) > 0
     short = [p for p in patterns if len(p) < k]
     found, absent, counts = _cover_kernel(
-        index, patterns, _make_substring_count_kernel,
+        index, _gram_windows(patterns, k), k, _make_substring_count_kernel,
         "pattern string, n_docs long, n_occ long",
         short=[] if masked else short, lookup_k=not masked, stats=stats,
     )
@@ -1170,12 +1209,16 @@ def substring_locate_ci(
     """Case-insensitive `locate`: every overlapping occurrence where
     lower(window) == lower(pattern), as (pattern, doc_id, cpos).
 
-    Indexed plan (len >= k): each non-overlapping cover slot of the
-    pattern expands to its <= 2^k case-variant grams; ONE
-    `substring_locate` call finds the exact positions of every variant
-    (decode volume = the cover grams' posting lists, like the exact
-    plan), aligned starts needing a hit in EVERY slot become candidates,
-    and a text join confirms lower(substr) equality.  Patterns shorter
+    Indexed plan (len >= k): the pattern's non-overlapping k-char slots
+    (plus the last window) are windows of the exact plan's aligned-slot
+    kernel (``_cover_kernel``), each with its present <= 2^k case-variant
+    grams as alternatives: the rarest slot's variants give the candidate
+    starts, and a start survives when every other slot holds one of its
+    variants at start + slot — decode volume is the slots' variant
+    posting lists, and no occurrence leaves the kernel that misses a
+    slot.  A text join then confirms lower(substr) == lower(pattern),
+    which also applies the ``docs`` restriction and Unicode case
+    semantics the byte-exact variants cannot.  Patterns shorter
     than k expand to their <= 2^(k-1) case variants and ride the INDEXED
     short-pattern locate (prefix-gram + tails — no corpus access): a
     window matches case-insensitively iff its verbatim text is one of
@@ -1197,44 +1240,21 @@ def substring_locate_ci(
                  if p not in idx_pats and p not in short_pats]
     parts: list[DataFrame] = []
     if idx_pats:
-        slot_rows = []
-        meta_rows = []
+        windows = {}
         for p in idx_pats:
             offs = list(range(0, len(p) - k + 1, k))
             if offs[-1] != len(p) - k:
                 offs.append(len(p) - k)
-            meta_rows.append((p, len(offs), len(p), p.lower()))
-            for o in offs:
-                for v in _case_variants(p[o:o + k]):
-                    slot_rows.append((p, o, v))
-        slots = local_frame(
-            spark, slot_rows, "pat string, off int, gram string"
-        )
-        meta = local_frame(
-            spark, meta_rows, "pat string, n_slots int, plen int, lpat string"
-        )
-        grams = sorted({g for _, _, g in slot_rows})
-        hits = substring_locate(index, grams).select(
-            F.col("pattern").alias("gram"), "doc_id", "cpos"
-        )
-        cand = (
-            hits.join(F.broadcast(slots), "gram")
-            .select("pat", "doc_id",
-                    (F.col("cpos") - F.col("off")).alias("start"),
-                    "off")
-            .where(F.col("start") >= 1)
-            .groupBy("pat", "doc_id", "start")
-            .agg(F.count_distinct("off").alias("n_hit"))
-            .join(F.broadcast(meta), "pat")
-            .where(F.col("n_hit") == F.col("n_slots"))
-        )
-        parts.append(
-            cand.join(docs.select("doc_id", "text"), "doc_id")
-            .where(F.expr("lower(substr(text, start, plen))") ==
-                   F.col("lpat"))
-            .select(F.col("pat").alias("pattern"), "doc_id",
-                    F.col("start").cast("long").alias("cpos"))
-        )
+            windows[p] = [(o, _case_variants(p[o:o + k])) for o in offs]
+        _, _, cand = _cover_kernel(index, windows, k,
+                                   _make_substring_locate_kernel, _LOCATE_DDL)
+        if cand is not None:
+            parts.append(
+                cand.join(docs.select("doc_id", "text"), "doc_id")
+                .where(F.expr("lower(substr(text, cpos, length(pattern)))")
+                       == F.lower("pattern"))
+                .select("pattern", "doc_id", "cpos")
+            )
     if short_pats:
         var_rows = sorted({(p, v) for p in short_pats
                            for v in _case_variants(p)})

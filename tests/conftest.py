@@ -10,6 +10,22 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from full_text_index_spark.session import get_spark  # noqa: E402
 
 
+def bm25_exact_topk(index, queries, k: int):
+    """``bm25_topk``'s rows from the JVM join-and-aggregate scorer
+    (``_bm25_scored_exact``) instead of the kernel: the reference path."""
+    from pyspark.sql import functions as F
+
+    from full_text_index_spark.query import _bm25_scored_exact, _rank_topk
+
+    qterms = (
+        index.term_stats().select("term", "idf")
+        .join(F.broadcast(queries.select(
+            "qid", F.explode("terms").alias("term")).distinct()), "term")
+        .select("qid", "term", "idf")
+    )
+    return _rank_topk(_bm25_scored_exact(index, qterms), k)
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("fti-tests", cpus=8, shuffle_partitions=8)

@@ -10,6 +10,7 @@ import pytest
 from full_text_index_spark.oracle import bm25_oracle
 from full_text_index_spark.query import bm25_topk
 from full_text_index_spark.tokenizer import tokenize_py
+from tests.conftest import bm25_exact_topk
 
 
 def _query_set(corpus_pdf: pd.DataFrame) -> list[tuple[int, list[str]]]:
@@ -54,19 +55,20 @@ def oracle_result(tiny_corpus_pdf, tiny_index):
     return docs
 
 
-def _run_engine(tiny_index, queries, use_blockmax):
+def _run_engine(tiny_index, queries, kernel):
     spark = tiny_index.spark
     qdf = spark.createDataFrame(
         [(q, t) for q, t in queries], "qid long, terms array<string>"
     )
-    out = bm25_topk(tiny_index, qdf, k=10, use_blockmax=use_blockmax)
+    out = (bm25_topk(tiny_index, qdf, k=10) if kernel
+           else bm25_exact_topk(tiny_index, qdf, 10))
     return out.toPandas().sort_values(["qid", "rank"]).reset_index(drop=True)
 
 
-@pytest.mark.parametrize("use_blockmax", [False, True])
-def test_rank_identity_vs_oracle(tiny_index, oracle_result, query_set, use_blockmax):
+@pytest.mark.parametrize("kernel", [False, True])
+def test_rank_identity_vs_oracle(tiny_index, oracle_result, query_set, kernel):
     golden = bm25_oracle(oracle_result, query_set, k=10)
-    got = _run_engine(tiny_index, query_set, use_blockmax)
+    got = _run_engine(tiny_index, query_set, kernel)
     golden = golden.sort_values(["qid", "rank"]).reset_index(drop=True)
     assert len(got) == len(golden), (len(got), len(golden))
     assert got["qid"].tolist() == golden["qid"].tolist()
@@ -76,8 +78,8 @@ def test_rank_identity_vs_oracle(tiny_index, oracle_result, query_set, use_block
 
 
 def test_blockmax_equals_exact(tiny_index, query_set):
-    a = _run_engine(tiny_index, query_set, use_blockmax=True)
-    b = _run_engine(tiny_index, query_set, use_blockmax=False)
+    a = _run_engine(tiny_index, query_set, kernel=True)
+    b = _run_engine(tiny_index, query_set, kernel=False)
     pd.testing.assert_frame_equal(a, b)
 
 
@@ -182,7 +184,7 @@ def test_bm25_never_broadcasts_the_dictionary(spark, tiny_index):
     )
     groups = spark.createDataFrame([(1, "g")], "doc_id long, group string")
     plans = [
-        bm25_topk(tiny_index, queries, k=5, use_blockmax=False)
+        bm25_exact_topk(tiny_index, queries, 5)
         ._jdf.queryExecution().executedPlan().toString(),
         collapse_topk(tiny_index, queries, groups, k=5)
         ._jdf.queryExecution().executedPlan().toString(),

@@ -18,6 +18,7 @@ from full_text_index_spark.deletes import (
 from full_text_index_spark.index import InvertedIndex
 from full_text_index_spark.query import bm25_topk, term_locate, term_positions
 from full_text_index_spark.substring import build_gram_index, substring_locate
+from tests.conftest import bm25_exact_topk
 
 
 TEXTS = [
@@ -43,10 +44,11 @@ def del_setup(spark, tmp_path):
     return InvertedIndex.open(spark, root), docs
 
 
-def _bm25_docs(idx, spark, **kw):
+def _bm25_docs(idx, spark, exact=False):
     q = spark.createDataFrame([(0, ["alpha", "shared"])],
                               "qid long, terms array<string>")
-    return sorted(r["doc_id"] for r in bm25_topk(idx, q, k=10, **kw).collect())
+    out = bm25_exact_topk(idx, q, 10) if exact else bm25_topk(idx, q, k=10)
+    return sorted(r["doc_id"] for r in out.collect())
 
 
 def test_deletes_excluded_everywhere(del_setup, spark):
@@ -56,12 +58,76 @@ def test_deletes_excluded_everywhere(del_setup, spark):
     assert n == 2
     # both BM25 paths (kernel mask on in-band tombstone rows + exact anti-join)
     assert _bm25_docs(idx, spark) == [0, 2]
-    assert _bm25_docs(idx, spark, use_blockmax=False) == [0, 2]
+    assert _bm25_docs(idx, spark, exact=True) == [0, 2]
     # locate / positions ("alpha" lives in docs 0,1,2,4; 1 and 4 deleted)
     got = sorted(r["doc_id"] for r in term_locate(idx, ["alpha"]).collect())
     assert got == [0, 2]
     assert sorted({r["doc_id"] for r in
                    term_positions(idx, ["shared"]).collect()}) == [0, 2]
+
+
+def test_phrase_ops_exclude_deleted_across_generations(spark, tmp_path):
+    """phrase_positions and phrase_prefix_search on a two-generation
+    positional token index (block_size=2: multi-block rows) with a
+    tombstone in each generation equal a brute-force token scan of the
+    live docs; "alpha beta" occurs in both generations, in deleted and
+    live docs alike."""
+    from full_text_index_spark.query import (
+        phrase_positions,
+        phrase_prefix_search,
+    )
+    from full_text_index_spark.streaming import append_generation
+    from full_text_index_spark.tokenizer import tokenize_py
+
+    gen0 = ["alpha beta gamma alpha beta", "beta alpha beta gamma",
+            "gamma gamma alpha beta", "delta alpha beta",
+            "alpha betamax gamma", "beta gamma beta gamma"]
+    gen1 = ["alpha beta again alpha beta", "beta gamma alpha beta",
+            "zeta alpha beta alpha", "alpha beta gamma"]
+    root = str(tmp_path / "idx")
+    build_index(spark, prepare_corpus(spark.createDataFrame(pd.DataFrame({
+        "url": [f"u://0/{i}" for i in range(len(gen0))], "text": gen0}))),
+        root, n_segments=2, block_size=2, positions=True)
+    append_generation(spark, spark.createDataFrame(pd.DataFrame({
+        "url": [f"u://1/{i}" for i in range(len(gen1))], "text": gen1})),
+        root, 1, n_segments=2, block_size=2, positions=True)
+    idx = InvertedIndex.open(spark, root)
+    text = dict(zip([f"u://0/{i}" for i in range(len(gen0))]
+                    + [f"u://1/{i}" for i in range(len(gen1))], gen0 + gen1))
+    ids = {r["url"]: r["doc_id"] for r in idx.doc_stats().collect()}
+    dead = {ids["u://0/0"], ids["u://1/0"]}
+    delete_docs(idx, sorted(dead))
+    live = {ids[u]: tokenize_py(t) for u, t in text.items()
+            if ids[u] not in dead}
+    assert max(live) >= 1 << 44  # the second generation is searched
+
+    def brute(windows):
+        out = {}
+        for p, slots in windows.items():
+            for d, toks in live.items():
+                n = sum(all(s + i < len(toks) and toks[s + i] in alts
+                            for i, alts in enumerate(slots))
+                        for s in range(len(toks)))
+                if n:
+                    out[(p, d)] = n
+        return out
+
+    def rows(df):
+        return {(r["phrase"], r["doc_id"]): r["n_occurrences"]
+                for r in df.collect()}
+
+    phrases = ["alpha beta", "beta gamma", "gamma alpha beta", "alpha zzz"]
+    want = brute({p: [{t} for t in p.split()] for p in phrases})
+    assert {p for p, _ in want} == {"alpha beta", "beta gamma",
+                                    "gamma alpha beta"}
+    assert rows(phrase_positions(idx, phrases)) == want
+    vocab = {t for toks in text.values() for t in tokenize_py(toks)}
+    prefixes = ["alpha bet", "gamma al", "be"]
+    want = brute({p: [{t} for t in p.split()[:-1]]
+                  + [{t for t in vocab if t.startswith(p.split()[-1])}]
+                  for p in prefixes})
+    assert ("alpha bet", ids["u://0/4"]) in want   # the "betamax" completion
+    assert rows(phrase_prefix_search(idx, prefixes)) == want
 
 
 def test_delete_idempotent_and_incremental(del_setup):
@@ -129,7 +195,7 @@ def test_tombstones_distributed_past_old_cap(del_setup, spark):
     # replay is idempotent at this size too
     assert delete_docs(idx, [1, 4]) == 2_500_000
     assert _bm25_docs(idx, spark) == [0, 2]                      # kernel path
-    assert _bm25_docs(idx, spark, use_blockmax=False) == [0, 2]  # join path
+    assert _bm25_docs(idx, spark, exact=True) == [0, 2]  # join path
     got = sorted(r["doc_id"] for r in term_locate(idx, ["alpha"]).collect())
     assert got == [0, 2]
 

@@ -117,8 +117,14 @@ def test_phrase_plan_is_batched(spark, pos_index, corpus_with_ids):
 
 
 def test_positions_require_positional_index(tiny_index):
+    from full_text_index_spark.query import phrase_prefix_search
+
     with pytest.raises(ValueError):
         term_positions(tiny_index, ["bababa0"])
+    with pytest.raises(ValueError, match="positions=True"):
+        phrase_positions(tiny_index, ["bababa0 bababa1"])
+    with pytest.raises(ValueError, match="positions=True"):
+        phrase_prefix_search(tiny_index, ["bababa0 bab"])
 
 
 def test_near_count_matches_brute_force(pos_index, corpus_with_ids):

@@ -140,9 +140,8 @@ def test_bm25_rejects_chargram_index(spark, gram_setup):
 
     idx, _ = gram_setup
     queries = spark.createDataFrame([(0, ["row"])], "qid long, terms array<string>")
-    for use_blockmax in (True, False):
-        with pytest.raises(ValueError, match="unit='chargram-3'"):
-            bm25_topk(idx, queries, k=5, use_blockmax=use_blockmax)
+    with pytest.raises(ValueError, match="unit='chargram-3'"):
+        bm25_topk(idx, queries, k=5)
     qterms = spark.createDataFrame([(0, "row", 1.0)],
                                    "qid long, term string, idf double")
     with pytest.raises(ValueError, match="unit='chargram-3'"):
@@ -169,7 +168,7 @@ def test_locate_plan_record_is_driver_only(spark, gram_setup):
     locate runs exactly one Spark job (the stats lookup collect) —
     candidates never reach the driver."""
     from full_text_index_spark.functions.util import kernel_tasks
-    from full_text_index_spark.substring import _cover_plan
+    from full_text_index_spark.substring import _cover_plan, _gram_windows
 
     idx, _ = gram_setup
     pats = ["row sca", "aaa", "a aaaa", "zzz not here"]
@@ -185,12 +184,15 @@ def test_locate_plan_record_is_driver_only(spark, gram_setup):
     assert n_jobs == 1
     assert _collect_locate(located) == brute(pats)
     ts = {r["term"]: (r["df"], r["cf"]) for r in idx.term_stats().collect()}
-    plan = _cover_plan(pats[:3], 3, {g: cf for g, (_, cf) in ts.items()})
-    grams = {g for checks in plan.values() for _, g in checks}
-    verify_only = grams - {checks[0][1] for checks in plan.values()}
+    plan = _cover_plan(_gram_windows(pats[:3], 3), 3,
+                       {g: cf for g, (_, cf) in ts.items()})
+    grams = {g for checks in plan.values() for _, alts in checks for g in alts}
+    cand = {g for checks in plan.values() for g in checks[0][1]}
+    verify_only = grams - cand
     assert stats == {
         "plan": "kernel", "n_absent": 1, "n_live": 3,
-        "live_cf": sum(ts[g][1] for g in grams),
+        "cand_cf": sum(ts[g][1] for g in cand),
+        "verify_cf": sum(ts[g][1] for g in verify_only),
         "kernel_tasks": kernel_tasks(spark, idx.n_segments),
         "block_decode_grams": sum(ts[g][0] > 8 for g in verify_only),
     }
@@ -586,33 +588,58 @@ def _str_find_counts(texts: dict[int, str], pat: str) -> tuple[int, int]:
     return sum(1 for n in per_doc if n), sum(per_doc)
 
 
-def _kernel_counts(tasks: list[pd.DataFrame], patterns: list[str],
-                   cf: dict[str, int],
-                   live: dict[int, str]) -> dict[str, tuple[int, int]]:
-    """Run the count kernel once per task (an empty frame is a task with
-    no rows) and sum its rows per pattern, as the groupBy after it does.
-    The locate kernel runs on the same tasks; its rows must be exactly the
-    ``str.find`` positions of every pattern in the ``live`` texts."""
+def _run_kernels(tasks: list[pd.DataFrame], windows: dict, width: int,
+                 cf: dict[str, int]):
+    """Run the count, locate and per-doc count kernels of ``windows`` once
+    per task (an empty frame is a task with no rows).  Returns the count
+    kernel's rows summed per pattern, as the groupBy after it does, and the
+    sorted located ``(pattern, doc_id, start)`` rows; the per-doc kernel's
+    rows must be those rows counted per (pattern, doc), one row each."""
+    from collections import Counter
+
     from full_text_index_spark.substring import (
         _cover_plan,
+        _make_doc_count_kernel,
         _make_substring_count_kernel,
         _make_substring_locate_kernel,
     )
 
-    plan = _cover_plan(patterns, 3, cf)
+    plan = _cover_plan(windows, width, cf)
     count = _make_substring_count_kernel(plan)
     locate = _make_substring_locate_kernel(plan)
-    got = {p: (0, 0) for p in patterns}
-    located = []
+    per_doc = _make_doc_count_kernel(plan)
+    got = {p: (0, 0) for p in windows}
+    located, doc_counts = [], {}
     for task in tasks:
-        out = pd.concat(list(count(iter([task] if len(task) else []))))
-        assert sorted(out["pattern"]) == sorted(patterns)  # zero rows too
+        def batches():
+            return iter([task] if len(task) else [])
+
+        out = pd.concat(list(count(batches())))
+        assert sorted(out["pattern"]) == sorted(windows)  # zero rows too
         for p, d, o in zip(out["pattern"], out["n_docs"], out["n_occ"]):
             got[p] = (got[p][0] + int(d), got[p][1] + int(o))
-        for frame in locate(iter([task] if len(task) else [])):
+        for frame in locate(batches()):
             located += zip(frame["pattern"], frame["doc_id"].tolist(),
                            frame["cpos"].tolist())
-    assert sorted(located) == sorted(_str_find_positions(live, patterns))
+        for frame in per_doc(batches()):
+            for p, d, n in zip(frame["pattern"], frame["doc_id"].tolist(),
+                               frame["n_occurrences"].tolist()):
+                assert (p, d) not in doc_counts
+                doc_counts[(p, d)] = n
+    assert doc_counts == Counter((p, d) for p, d, _ in located)
+    return got, sorted(located)
+
+
+def _kernel_counts(tasks: list[pd.DataFrame], patterns: list[str],
+                   cf: dict[str, int],
+                   live: dict[int, str]) -> dict[str, tuple[int, int]]:
+    """The kernels on every length-3 window of ``patterns``: the located
+    rows must be exactly the ``str.find`` positions of every pattern in
+    the ``live`` texts; returns the summed counts."""
+    from full_text_index_spark.substring import _gram_windows
+
+    got, located = _run_kernels(tasks, _gram_windows(patterns, 3), 3, cf)
+    assert located == sorted(_str_find_positions(live, patterns))
     return got
 
 
@@ -625,6 +652,12 @@ _KERNEL_TEXTS = {
     5: "aaaa abcabc",
     6: "zz",                               # no grams at all
     7: "mat cat bat rat sat",
+    # segment 0 holds "pqr" and "qrs" in three docs (several blocks at
+    # block_size=2), mostly unaligned: whichever is the candidate, the
+    # other one's block-targeted decode must remove candidates
+    8: "pqr qrs",
+    10: "qrs pqr pqrs",
+    12: "pqrs qrs pqr",
 }
 
 
@@ -634,8 +667,9 @@ def test_count_kernel_matches_str_find(block_size, seed):
     """Self-overlap, a gram repeated at two slots, present-but-unaligned
     grams, two generation rows of one gram in one task (the second
     generation's ids ≥ 2**44), tombstones, a gram absent from a segment,
-    multi-block rows (block_size=2 runs the block-targeted decode) and an
-    empty task; the plan's cf is random, so the candidate slot varies."""
+    multi-block rows (block_size=2 runs the block-targeted decode, and
+    "pqrs"'s verify gram removes candidates there) and an empty task; the
+    plan's cf is random, so the candidate slot varies."""
     rng = np.random.default_rng(seed)
     gen1 = {_BIG + d: t for d, t in _KERNEL_TEXTS.items() if d % 3 == 0}
     texts = {**_KERNEL_TEXTS, **gen1}
@@ -644,7 +678,8 @@ def test_count_kernel_matches_str_find(block_size, seed):
                       _gram_rows(gen1, block_size), _tomb_rows(deleted)],
                      ignore_index=True)
     patterns = ["aaaa", "abcabc", "xyzw", "the ", "at sat", " scan ", "cat",
-                "bcabca", "t on the mat", "row scan slow scan row", "aaaaaaa"]
+                "bcabca", "t on the mat", "row scan slow scan row", "aaaaaaa",
+                "pqrs"]
     grams = {p[i:i + 3] for p in patterns for i in range(len(p) - 2)}
     present = set(rows["term"].dropna())
     patterns = [p for p in patterns
@@ -683,3 +718,117 @@ def test_count_kernel_randomized():
     live = {d: t for d, t in list(texts.items())[4:]}
     assert _kernel_counts(tasks, patterns, cf, live) == {
         p: _str_find_counts(live, p) for p in patterns}
+
+
+def _token_rows(texts: dict[int, str], block_size: int,
+                n_segments: int = 2) -> pd.DataFrame:
+    """Positional token posting rows of ``texts`` (whitespace tokens, 1-based
+    positions), packed by the build's own packer."""
+    from full_text_index_spark.build import _pack_runs
+
+    occ = sorted((d % n_segments, t, d, i + 1)
+                 for d, text in texts.items()
+                 for i, t in enumerate(text.split()))
+    return _pack_runs(pd.DataFrame(occ, columns=["segment", "term", "doc_id",
+                                                 "tpos"]), block_size)
+
+
+_TOKEN_TEXTS = {
+    0: "rare the end",
+    2: "rare thy end",
+    4: "rare cat the",       # "the" present, unaligned after "rare"
+    6: "the the the",
+    8: "the cat the rare",
+    10: "rare thy thy rare the",
+    1: "rare the",
+    3: "the rare thy",
+    5: "thy cat end",
+}
+
+
+@pytest.mark.parametrize("block_size", [2, 128])
+def test_alternatives_kernel_on_token_positions(block_size):
+    """Width-1 token windows — the phrase operators' plan — with a slot of
+    alternatives (a prefix's completions), against brute force over the
+    token lists.  At block_size=2 segment 0's "the" row has several blocks
+    and, in the first window set, "the" is never a candidate: the slot
+    (1, [the, thy]) mixes that block-targeted gram with the whole-decoded
+    "thy", so "rare cat the" must be dropped and "rare thy" kept.  The
+    second set puts alternatives in the candidate slot and repeats a
+    slot's alternatives; a second generation and tombstones ride along."""
+    from collections import Counter
+
+    gen1 = {_BIG: "rare the rare the", _BIG + 1: "the the thy"}
+    texts = {**_TOKEN_TEXTS, **gen1}
+    deleted = {3, _BIG + 1}
+    rows = pd.concat([_token_rows(_TOKEN_TEXTS, block_size),
+                      _token_rows(gen1, block_size), _tomb_rows(deleted)],
+                     ignore_index=True)
+    cf = Counter(t for text in texts.values() for t in text.split())
+    live = {d: t.split() for d, t in texts.items() if d not in deleted}
+    th = ["the", "thy"]
+    window_sets = [
+        {"rare th*": [(0, ["rare"]), (1, th)],
+         "cat th*": [(0, ["cat"]), (1, th)],
+         "th* end": [(0, th), (1, ["end"])],
+         "rare th* rare": [(0, ["rare"]), (1, th), (2, ["rare"])]},
+        {"th*": [(0, th)],
+         "the the": [(0, ["the"]), (1, ["the"])],
+         "th* th*": [(0, th), (1, th)],
+         "th* cat": [(0, th), (1, ["cat"])]},
+    ]
+    for windows in window_sets:
+        want = sorted(
+            (p, d, s + 1) for p, ws in windows.items()
+            for d, toks in live.items() for s in range(len(toks))
+            if all(s + i < len(toks) and toks[s + i] in alts
+                   for i, alts in ws))
+        tasks = [rows[rows["segment"] == s] for s in (0, 1)]
+        got, located = _run_kernels(tasks, windows, 1, cf)
+        assert located == want
+        docs = {p: {(d, n) for q, d, n in want if q == p} for p in windows}
+        assert got == {p: (len({d for d, _ in docs[p]}), len(docs[p]))
+                       for p in windows}
+    assert ("rare th*", 4, 1) not in located and got["th*"][1] > 0
+
+
+@pytest.mark.parametrize("block_size", [2, 128])
+def test_alternatives_kernel_on_case_variants(block_size):
+    """``substring_locate_ci``'s windows — non-overlapping 3-char slots,
+    each with its present case variants — against brute-force
+    case-insensitive matching (ASCII texts, so a match of every slot's
+    variant is a case-insensitive match of the whole pattern)."""
+    from collections import Counter
+
+    from full_text_index_spark.substring import _case_variants
+
+    texts = {
+        0: "Row Scan ROW scan row",
+        2: "rOw sCaN row scan",
+        4: "row  scan Row sCAN",
+        6: "ROWS can rowscan",
+        8: "xRoW ScAn row scan",
+        10: "row scan Row Scan",
+        1: "row scan",
+        3: "Row Scan rOW SCAN",
+        5: "scan row",
+    }
+    rows = pd.concat([_gram_rows(texts, block_size), _tomb_rows({10})],
+                     ignore_index=True)
+    cf = Counter(t[i:i + 3] for t in texts.values()
+                 for i in range(len(t) - 2))
+    live = {d: t for d, t in texts.items() if d != 10}
+    windows = {}
+    for p in ["row scan", "ROW", "W SC", "Row Scan Row", "SCAN ROW"]:
+        offs = list(range(0, len(p) - 2, 3))
+        if offs[-1] != len(p) - 3:
+            offs.append(len(p) - 3)
+        windows[p] = [(o, [v for v in _case_variants(p[o:o + 3]) if v in cf])
+                      for o in offs]
+    want = sorted((p, d, i + 1) for p in windows for d, t in live.items()
+                  for i in range(len(t) - len(p) + 1)
+                  if t[i:i + len(p)].lower() == p.lower())
+    tasks = [rows[rows["segment"] == s] for s in (0, 1)]
+    got, located = _run_kernels(tasks, windows, 3, cf)
+    assert located == want
+    assert {p for p, _, _ in want} == set(windows)
